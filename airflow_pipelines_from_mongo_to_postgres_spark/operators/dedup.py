@@ -29,7 +29,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from airflow_pipelines_from_mongo_to_postgres_spark.functions import text as T
-from airflow_pipelines_from_mongo_to_postgres_spark.sources.catalog import spread
 
 #: Affine MinHash permutation constants (deterministic, engine-version-fixed;
 #: 31-bit multipliers keep a*h+b within int64 for 28-bit shingle hashes).
@@ -72,8 +71,8 @@ def build_shingle_table(df: DataFrame, id_col: str, text_col: str,
     across higher-order-function boundaries) — O(tokens²) regex splits
     per row, measured 18× slower at sf0.1.
     """
-    toks = spread(df).select(F.col(id_col).alias("doc"),
-                             T.tokens(text_col).alias("ts"))
+    toks = df.select(F.col(id_col).alias("doc"),
+                     T.tokens(text_col).alias("ts"))
     gram = F.transform(
         F.sequence(F.lit(1), F.size("ts") - (n - 1)),
         lambda i: F.concat_ws(" ", *[F.element_at("ts", i + j) for j in range(n)]),
@@ -351,8 +350,8 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str,
     conditional sums — all codegen'd."""
     # h materialized once per token row; inlining T.hash60 in all ``bits``
     # aggregates would recompute the md5 ``bits``× per row.
-    tok = spread(df).select(F.col(id_col).alias("doc"),
-                            F.explode(T.tokens(text_col)).alias("tok")) \
+    tok = df.select(F.col(id_col).alias("doc"),
+                    F.explode(T.tokens(text_col)).alias("tok")) \
         .select("doc", T.hash60(F.col("tok")).alias("h"))
     sums = [
         F.sum(F.when(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) == 1, 1)

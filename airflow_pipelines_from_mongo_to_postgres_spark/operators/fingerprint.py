@@ -21,7 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from airflow_pipelines_from_mongo_to_postgres_spark.functions import text as T
-from airflow_pipelines_from_mongo_to_postgres_spark.sources.catalog import spread
 
 
 def winnow_fingerprints(df: DataFrame, id_col: str, text_col: str,
@@ -34,8 +33,8 @@ def winnow_fingerprints(df: DataFrame, id_col: str, text_col: str,
     next lambda (no CSE across higher-order-function boundaries — same
     pitfall as operators/dedup.py::_shingle_table, measured 18× there).
     """
-    toks = spread(df).select(F.col(id_col).alias("doc"),
-                             T.tokens(text_col).alias("ts"))
+    toks = df.select(F.col(id_col).alias("doc"),
+                     T.tokens(text_col).alias("ts"))
     gram = F.transform(
         F.sequence(F.lit(1), F.size("ts") - (k - 1)),
         lambda i: F.concat_ws(" ", *[F.element_at("ts", i + j) for j in range(k)]),

@@ -15,7 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from airflow_pipelines_from_mongo_to_postgres_spark.functions import vectors as V
-from airflow_pipelines_from_mongo_to_postgres_spark.sources.catalog import spread
 
 
 def _score(probe: DataFrame, corpus: DataFrame, id_col: str, vec_col: str,
@@ -34,10 +33,10 @@ def _score(probe: DataFrame, corpus: DataFrame, id_col: str, vec_col: str,
         # small-probe × large-corpus: broadcast the PROBES, stream the
         # corpus — scoring parallelizes over corpus partitions instead of
         # serializing on the (often single-partition) probe side.
-        joined = spread(c).join(F.broadcast(p),
-                                F.col("query_id") != F.col("neighbor_id"))
+        joined = c.join(F.broadcast(p),
+                        F.col("query_id") != F.col("neighbor_id"))
     else:
-        joined = p.join(spread(c), join_cond)
+        joined = p.join(c, join_cond)
     return joined.select(
         "query_id", "neighbor_id",
         F.round(V.dot(F.col("qv"), F.col("cv")), 6).alias("cosine"),
@@ -188,7 +187,7 @@ def cosine_topk_lsh(probe: DataFrame, corpus: DataFrame, id_col: str,
                     F.col("tb.t").alias("t"), F.col("tb.b").alias("b"))
 
     p = bucketize(probe, "query_id")
-    c = bucketize(spread(corpus), "neighbor_id")
+    c = bucketize(corpus, "neighbor_id")
     cand = (
         p.join(c, ["t", "b"])
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -210,7 +209,6 @@ def cosine_threshold_pairs(df: DataFrame, id_col: str, vec_col: str,
     """All pairs with cosine ≥ threshold (d1 < d2). Brute force n²/2 —
     correct baseline; LSH bucketing (random hyperplanes) is the scale path
     and reuses simhash-style banding over sign bits."""
-    df = spread(df)
     a = df.select(F.col(id_col).alias("d1"), V.unit(V.as_double(vec_col)).alias("v1"))
     b = df.select(F.col(id_col).alias("d2"), V.unit(V.as_double(vec_col)).alias("v2"))
     return (
@@ -282,8 +280,8 @@ def cosine_topk_ivf(probe: DataFrame, corpus: DataFrame, id_col: str,
     neighbor lives in an unprobed cell); recall vs the brute-force oracle
     is gated in tests/test_similarity.py.
     """
-    c = spread(corpus).select(F.col(id_col).alias("neighbor_id"),
-                              V.unit(V.as_double(vec_col)).alias("cv"))
+    c = corpus.select(F.col(id_col).alias("neighbor_id"),
+                      V.unit(V.as_double(vec_col)).alias("cv"))
     if centroids is None:
         from pyspark.ml.clustering import KMeans
         from pyspark.ml.functions import array_to_vector
@@ -383,9 +381,8 @@ def _assign_cells(df: DataFrame, id_col: str, vec_col: str,
     blowup, no sort-aggregate shuffle. Identical values/tie-breaks to
     the broadcast-argmin groupBy it replaced (r17 optimization)."""
     return (
-        spread(df)
-        .select(F.col(id_col).alias("vid"),
-                V.unit(V.as_double(vec_col)).alias("v"))
+        df.select(F.col(id_col).alias("vid"),
+                  V.unit(V.as_double(vec_col)).alias("v"))
         .withColumn("cell",
                     F.array_min(_cell_scores(F.col("v"), centroids))["cell"])
         .select("vid", "v", "cell")
@@ -501,9 +498,9 @@ def cosine_threshold_pairs_lsh(df: DataFrame, id_col: str, vec_col: str,
     SQL oracle replays bucketing exactly and the query hash-gates.
     """
     signs = rademacher_signs(planes, tables, dim or _infer_dim(df, vec_col))
-    base = spread(df).select(F.col(id_col).alias("_vid"),
-                             V.as_double(vec_col).alias("_r"),
-                             V.unit(V.as_double(vec_col)).alias("_v"))
+    base = df.select(F.col(id_col).alias("_vid"),
+                     V.as_double(vec_col).alias("_r"),
+                     V.unit(V.as_double(vec_col)).alias("_v"))
     tagged = F.array(*[
         F.struct(F.lit(t).alias("t"),
                  _sign_bucket(F.col("_r"), signs[t]).alias("b"))
@@ -558,8 +555,8 @@ def cosine_topk_np(probe: DataFrame, corpus: DataFrame, id_col: str,
     if not pr:
         return probe.sparkSession.createDataFrame([], schema + ", rank int")
 
-    c = spread(corpus).select(F.col(id_col).alias("neighbor_id"),
-                              V.unit(V.as_double(vec_col)).alias("cv"))
+    c = corpus.select(F.col(id_col).alias("neighbor_id"),
+                      V.unit(V.as_double(vec_col)).alias("cv"))
 
     def chunk_scored(chunk):
         qids = np.array([p[0] for p in chunk])
@@ -657,7 +654,7 @@ def cosine_topk_pq(probe: DataFrame, corpus: DataFrame, id_col: str,
 
     pd_expr = F.col("c2") - 2 * V.dot(F.col("sv"), F.col("cvec"))
     codes = (
-        subvectors(spread(corpus), "neighbor_id")
+        subvectors(corpus, "neighbor_id")
         .join(F.broadcast(cb), "j")
         .withColumn("pd", pd_expr)
         .groupBy("neighbor_id", "j")

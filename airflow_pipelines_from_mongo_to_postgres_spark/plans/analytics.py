@@ -30,8 +30,8 @@ from pyspark.sql import functions as F
 
 from airflow_pipelines_from_mongo_to_postgres_spark.functions import text
 from airflow_pipelines_from_mongo_to_postgres_spark.sources.catalog import (
+    fits_broadcast,
     load_table,
-    scan_is_narrow,
     spread,
 )
 
@@ -731,7 +731,7 @@ def q99_fuzzy_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # try_element_at + coalesce(''): a one-token name must neither crash
     # under ANSI mode (element_at throws on a missing index) nor block as
     # NULL while the oracle's split_part blocks as '' — '' on both.
-    k = p.select(
+    keys = (
         F.col("p_partkey").alias("pk"),
         F.col("p_name").alias("nm"),
         F.coalesce(F.try_element_at(F.split(F.col("p_name"), " "), F.lit(2)),
@@ -751,19 +751,18 @@ def q99_fuzzy_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread() + pinned broadcast build side (r17, guide §2.5): the part
     # fixture is a single-row-group file, so the probe side — which runs
     # EVERY in-block Levenshtein DP — was one task on one core; widening
-    # it measured 1.55 s → 0.55 s at sf0.1. The broadcast hint keeps the
-    # un-spread copy as the build side (the planner would otherwise pick
-    # the 32-partition side). Both halves are scale-guarded (r18, VERDICT
-    # r17 #1): an UNCONDITIONAL hint overrides autoBroadcastJoinThreshold
-    # and would collect a data-sized table at 100 TB — behind
-    # scan_is_narrow() the hint exists only where the whole table is
-    # fixture-small, and at scale the planner/AQE picks the strategy for
-    # the (blk, sz) equi-join from real sizes.
-    b = k.alias("b")
-    if scan_is_narrow(k):
+    # the scan measured 1.55 s → 0.55 s at sf0.1. The broadcast hint keeps
+    # the un-widened scan as the build side (the planner would otherwise
+    # pick the 32-partition side). An UNCONDITIONAL hint overrides
+    # autoBroadcastJoinThreshold and would collect a data-sized table at
+    # 100 TB, so it is pinned only when the part scan is narrow AND its
+    # file bytes fit the threshold; otherwise the planner/AQE picks the
+    # strategy for the (blk, sz) equi-join from real sizes.
+    b = p.select(*keys).alias("b")
+    if fits_broadcast(p):
         b = F.broadcast(b)
     return (
-        spread(k).alias("a")
+        spread(p).select(*keys).alias("a")
         .join(b,
               (F.col("a.blk") == F.col("b.blk"))
               & (F.col("a.sz") == F.col("b.sz"))

@@ -28,7 +28,7 @@ from airflow_pipelines_from_mongo_to_postgres_spark.operators import (
     graph,
     similarity,
 )
-from airflow_pipelines_from_mongo_to_postgres_spark.sources.catalog import load_table
+from airflow_pipelines_from_mongo_to_postgres_spark.sources.catalog import load_table, spread
 
 # ---------------------------------------------------------------- SQL pieces
 _TOKENS_SQL = "list_filter(string_split_regex(lower({col}), '\\s+'), t -> t <> '')"
@@ -124,7 +124,7 @@ def _shingles_shared(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
     return _shared(
         _SHINGLE_CACHE, key,
         lambda: dedup.build_shingle_table(
-            load_table(spark, "documents", sf_dir), "doc_id", "text", n=n))
+            spread(load_table(spark, "documents", sf_dir)), "doc_id", "text", n=n))
 
 
 def clear_caches() -> None:
@@ -222,7 +222,7 @@ Q28_SQL = _jaccard_pairs_sql(threshold=0.2)  # exact == LSH-verified at recall 1
 
 # --- q29: SimHash Hamming pairs (guaranteed-recall banding) --------------------
 def q29_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, "documents", sf_dir)
+    d = spread(load_table(spark, "documents", sf_dir))
     return dedup.simhash_pairs(d, "doc_id", "text", max_hamming=8, bits=60)
 
 
@@ -352,7 +352,7 @@ _WINNOW_K, _WINNOW_W = 3, 4
 
 
 def q41_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, "documents", sf_dir)
+    d = spread(load_table(spark, "documents", sf_dir))
     return fingerprint.winnow_fingerprints(d, "doc_id", "text",
                                            k=_WINNOW_K, w=_WINNOW_W)
 
@@ -417,7 +417,7 @@ def q86_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     notion Jaccard misses (a short quote inside a long doc). Same
     inverted-index join shape as q26, on the winnowed (w×-smaller)
     posting lists."""
-    d = load_table(spark, "documents", sf_dir)
+    d = spread(load_table(spark, "documents", sf_dir))
     return fingerprint.containment_pairs(d, "doc_id", "text",
                                          threshold=0.5,
                                          k=_WINNOW_K, w=_WINNOW_W)
@@ -450,7 +450,7 @@ Q86_SQL = _containment_sql()
 def q33_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, "embeddings", sf_dir)
     probe = e.filter(F.col("vec_id") < 10)
-    return similarity.cosine_topk(probe, e, "vec_id", "embedding", k=5)
+    return similarity.cosine_topk(probe, spread(e), "vec_id", "embedding", k=5)
 
 
 Q33_SQL = f"""
@@ -475,7 +475,7 @@ def q34_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 0.45 sits in the fixtures' tail (7/14/144 pairs at sf0.001/0.01/0.1) —
     # high enough to be "near-dup", low enough that the query has output to
     # hash-check (max pairwise cosine in the fixtures is ~0.5-0.6).
-    e = load_table(spark, "embeddings", sf_dir)
+    e = spread(load_table(spark, "embeddings", sf_dir))
     return similarity.cosine_threshold_pairs(e, "vec_id", "embedding",
                                              threshold=0.45)
 
@@ -493,7 +493,7 @@ WHERE round(list_dot_product(a.uv, b.uv), 6) >= 0.45
 def q35_ann_ivf_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, "embeddings", sf_dir)
     probe = e.filter(F.col("vec_id") < 10)
-    return similarity.cosine_topk_bucketed(probe, e, "vec_id", "embedding",
+    return similarity.cosine_topk_bucketed(probe, spread(e), "vec_id", "embedding",
                                            bucket_col="label", k=3)
 
 
@@ -556,7 +556,7 @@ def q52_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     q33 is separately gated in tests/test_similarity.py."""
     e = load_table(spark, "embeddings", sf_dir)
     probe = e.filter(F.col("vec_id") < 10)
-    return similarity.cosine_topk_lsh(probe, e, "vec_id", "embedding", k=5,
+    return similarity.cosine_topk_lsh(probe, spread(e), "vec_id", "embedding", k=5,
                                       planes=_Q52_PLANES, tables=_Q52_TABLES,
                                       dim=_EMB_DIM)
 
@@ -728,7 +728,7 @@ def q62_ann_topk_numpy(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-hash gate, proving the Arrow batch plumbing loses nothing."""
     e = load_table(spark, "embeddings", sf_dir)
     probe = e.filter(F.col("vec_id") < 10)
-    return similarity.cosine_topk_np(probe, e, "vec_id", "embedding", k=5)
+    return similarity.cosine_topk_np(probe, spread(e), "vec_id", "embedding", k=5)
 
 
 # --- q59: stop-shingle inventory (df > threshold) -----------------------------------
@@ -948,7 +948,7 @@ def q56_embed_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     + rerank pipeline exactly, so the driver checks values, not just row
     counts. Precision is exact; recall ≈ 1-(1-(1-θ/π)³)¹⁶ ≈ 0.99 at the
     fixtures' pair angle, gated in tests/test_similarity.py."""
-    e = load_table(spark, "embeddings", sf_dir)
+    e = spread(load_table(spark, "embeddings", sf_dir))
     return similarity.cosine_threshold_pairs_lsh(e, "vec_id", "embedding",
                                                  threshold=0.45,
                                                  planes=_Q56_PLANES,
@@ -996,7 +996,7 @@ def q55_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     e = load_table(spark, "embeddings", sf_dir)
     probe = e.filter(F.col("vec_id") < 10)
-    return similarity.cosine_topk_ivf(probe, e, "vec_id", "embedding",
+    return similarity.cosine_topk_ivf(probe, spread(e), "vec_id", "embedding",
                                       k=5, nprobe=_IVF_NPROBE,
                                       centroids=IVF_CENTROIDS)
 
@@ -1158,7 +1158,7 @@ def q64_embed_near_dup_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     banding + exact rerank) is the 100 TB candidate-generation path, and
     the keeper anti-join is identical either way."""
     e = load_table(spark, "embeddings", sf_dir)
-    pairs = similarity.cosine_threshold_pairs(e, "vec_id", "embedding",
+    pairs = similarity.cosine_threshold_pairs(spread(e), "vec_id", "embedding",
                                               threshold=0.45)
     dropped = pairs.select(F.col("d2").alias("vec_id")).distinct()
     return e.join(dropped, "vec_id", "left_anti").select("vec_id", "label")
@@ -2132,7 +2132,7 @@ def q126_cluster_balanced_sample(spark: SparkSession,
     from airflow_pipelines_from_mongo_to_postgres_spark.plans._ivf_centroids import (
         IVF_CENTROIDS,
     )
-    e = load_table(spark, "embeddings", sf_dir)
+    e = spread(load_table(spark, "embeddings", sf_dir))
     assigned = similarity._assign_cells(e, "vec_id", "embedding",
                                         IVF_CENTROIDS).select("vid", "cell")
     # quota table: see q94 — the global min rides the ≤nlist-row count
@@ -2576,7 +2576,7 @@ def q127_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg((F.count(F.col("b.doc_id")) + 1).alias("lex_rank")))
     e = load_table(spark, "embeddings", sf_dir)
     probe = e.filter(F.col("vec_id") == 0)
-    sem = similarity.cosine_topk(probe, e, "vec_id", "embedding",
+    sem = similarity.cosine_topk(probe, spread(e), "vec_id", "embedding",
                                  k=_BM25_TOPK) \
         .select(F.col("neighbor_id").alias("doc_id"),
                 F.col("rank").cast("long").alias("sem_rank"))
@@ -2737,7 +2737,7 @@ def q106_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from airflow_pipelines_from_mongo_to_postgres_spark.plans._pq_codebooks import PQ_CODEBOOKS
     e = load_table(spark, "embeddings", sf_dir)
     probe = e.filter(F.col("vec_id") < 10)
-    return similarity.cosine_topk_pq(probe, e, "vec_id", "embedding",
+    return similarity.cosine_topk_pq(probe, spread(e), "vec_id", "embedding",
                                      k=5, codebooks=PQ_CODEBOOKS,
                                      rerank=_PQ_RERANK)
 
@@ -2946,7 +2946,7 @@ def q108_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from airflow_pipelines_from_mongo_to_postgres_spark.plans._ivf_centroids import (
         IVF_CENTROIDS,
     )
-    e = load_table(spark, "embeddings", sf_dir)
+    e = spread(load_table(spark, "embeddings", sf_dir))
     return similarity.semantic_dedup_ivf(e, "vec_id", "embedding",
                                          threshold=_SEMANTIC_DEDUP_T,
                                          centroids=IVF_CENTROIDS)

@@ -65,30 +65,18 @@ def _parse_bytes(s: str) -> int:
     return int(float(s) * mult)
 
 
-def _estimated_scan_splits(df: DataFrame) -> int | None:
-    """Split-count estimate from the scan's FILE METADATA alone (r18,
-    VERDICT r17 #7): the old probe (``df.rdd.getNumPartitions()``) ran a
-    full physical-planning pass + RDD conversion per plan CONSTRUCTION —
-    ~10-50 ms of driver work even at scale, where the whole spread() call
-    is a no-op. This derives the same narrow/wide decision from the leaf
-    files' sizes with Spark's own packing arithmetic (each file charged
-    size + openCostInBytes, packed into maxPartitionBytes bins). Returns
-    ``None`` when there is nothing stat-able locally (non-file sources,
-    object stores, in-memory test frames) — callers treat None as
-    'already wide', the correct assumption for a 100 TB lake scan."""
-    try:
-        files = df.inputFiles()
-    except Exception:  # non-SQL sources / analysis quirks: assume wide
+def _scan_file_sizes(df: DataFrame) -> list[int] | None:
+    """On-disk sizes of the files behind a bare ``load_table`` frame, from
+    file metadata alone (no job, no RDD, no physical planning). ``None`` —
+    'already wide' to callers — for a frame past a shuffle (its leaf files
+    say nothing about its width), object stores and in-memory frames."""
+    node = df._jdf.queryExecution().analyzed()
+    while node.nodeName() in ("Project", "Filter"):  # keep the scan's splits
+        node = node.child()
+    if node.nodeName() != "LogicalRelation":
         return None
-    if not files:
-        return None
-    conf = df.sparkSession.conf
-    max_pb = _parse_bytes(conf.get("spark.sql.files.maxPartitionBytes",
-                                   "128m"))
-    open_cost = _parse_bytes(conf.get("spark.sql.files.openCostInBytes",
-                                      "4m"))
-    total = 0
-    for uri in files:
+    sizes = []
+    for uri in df.inputFiles():
         if uri.startswith("file:"):
             path = "/" + uri[5:].lstrip("/")
         elif "://" in uri:
@@ -96,32 +84,48 @@ def _estimated_scan_splits(df: DataFrame) -> int | None:
         else:
             path = uri
         try:
-            total += os.path.getsize(path) + open_cost
+            sizes.append(os.path.getsize(path))
         except OSError:
             return None
-    return max(1, math.ceil(total / max(max_pb, 1)))
+    return sizes or None
 
 
-def scan_is_narrow(df: DataFrame, target: int | None = None) -> bool:
-    """True iff the scan behind ``df`` is (estimated) narrower than the
-    session parallelism — the shared scale guard for spread() and for
-    local-only plan hints (q99's pinned broadcast build side)."""
-    target = target or df.sparkSession.sparkContext.defaultParallelism
+def _estimated_scan_splits(df: DataFrame) -> int | None:
+    """Split count by Spark's own packing arithmetic: each file charged
+    size + openCostInBytes, packed into maxPartitionBytes bins."""
+    sizes = _scan_file_sizes(df)
+    if sizes is None:
+        return None
+    conf = df.sparkSession.conf
+    max_pb = _parse_bytes(conf.get("spark.sql.files.maxPartitionBytes", "128m"))
+    open_cost = _parse_bytes(conf.get("spark.sql.files.openCostInBytes", "4m"))
+    return max(1, math.ceil(sum(s + open_cost for s in sizes) / max(max_pb, 1)))
+
+
+def scan_is_narrow(df: DataFrame) -> bool:
+    """True iff ``df``, a bare ``load_table`` frame, is (estimated) narrower
+    than the session parallelism; a derived frame answers False."""
     splits = _estimated_scan_splits(df)
-    return splits is not None and splits < target
+    return splits is not None and splits < df.sparkSession.sparkContext.defaultParallelism
 
 
-def spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:
-    """Round-robin repartition iff the scan is narrower than the session's
-    parallelism. Small fixture files arrive as a single split, serializing
-    CPU-bound stages (shingling, md5 hashing) on one core; at 100 TB a scan
-    has thousands of splits and this is a no-op — the guard means we never
-    pay an extra shuffle where the input is already wide. The narrowness
-    probe is file-metadata-only (no RDD materialization at plan
-    construction — see _estimated_scan_splits)."""
-    target = min_parts or df.sparkSession.sparkContext.defaultParallelism
-    if scan_is_narrow(df, target):
-        return df.repartition(target)
+def fits_broadcast(df: DataFrame) -> bool:
+    """True iff a bare ``load_table`` frame is narrow AND its file bytes fit
+    autoBroadcastJoinThreshold — the guard for pinning it as a broadcast
+    build side, a hint that overrides the planner's own size check."""
+    limit = df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    return scan_is_narrow(df) and sum(_scan_file_sizes(df)) <= _parse_bytes(limit)
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """Round-robin repartition of a bare ``load_table`` frame iff its scan
+    is narrower than the session's parallelism. Small fixture files arrive
+    as a single split, serializing CPU-bound stages (shingling, md5
+    hashing) on one core; at 100 TB a scan has thousands of splits and
+    this is a no-op. Widening happens only here, at a plan's file scan:
+    operators never repartition their input."""
+    if scan_is_narrow(df):
+        return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     return df
 
 

@@ -68,26 +68,16 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent
 sys.path.insert(0, str(REPO))
 
-#: r17 measurement fix (optimization guide §1.4, documented in
-#: OPTIMIZATION_r17.md): the timed action is now the NOOP SINK, which
-#: computes every column of every row, instead of .count(), which lets
-#: the optimizer prune whole subtrees — measured under-counting up to
-#: 23x (q154: count 0.10 s vs noop 2.28 s — the span-scrub compute never
-#: ran; q108: a left join to a distinct key set is ELIMINATED under
-#: count, so none of the dedup pair work was being timed; q01: the
-#: pricing sums were pruned, 5.7x). Set SPARK_GRAFT_BENCH_ACTION=count
-#: to reproduce the pre-r17 methodology. Committed records bridging the
-#: change: BENCH_FULL_r17_quiet.json is the last count-action record
-#: (old code); BENCH_FULL_r18_countaction.json is count-action on
-#: current code, next to the honest noop record BENCH_FULL_r18.json.
-_BENCH_ACTION = os.environ.get("SPARK_GRAFT_BENCH_ACTION", "noop")
-
-
 def _run_action(df) -> None:
-    if _BENCH_ACTION == "count":
-        df.count()
-    else:
-        df.write.format("noop").mode("overwrite").save()
+    """The timed action is the NOOP SINK (r17 measurement fix, optimization
+    guide §1.4, OPTIMIZATION_r17.md): it computes every column of every
+    row, whereas .count() lets the optimizer prune whole subtrees —
+    measured under-counting up to 23x (q154: count 0.10 s vs noop 2.28 s
+    — the span-scrub compute never ran; q108: a left join to a distinct
+    key set is ELIMINATED under count, so none of the dedup pair work was
+    being timed; q01: the pricing sums were pruned, 5.7x)."""
+    df.write.format("noop").mode("overwrite").save()
+
 
 HEADLINE = [
     "q01_pricing_summary",

@@ -7,6 +7,8 @@ slipping into a plan turns a pruned scan into a full scan)."""
 
 from __future__ import annotations
 
+import pytest
+
 from airflow_pipelines_from_mongo_to_postgres_spark.plans.relational import (
     q02_filter_project,
     q03_revenue_by_region,
@@ -338,11 +340,12 @@ def test_semantic_dedup_assignment_mapside(spark, sf_dir):
 
 def test_q99_broadcast_hint_is_scale_guarded(spark, sf_dir, monkeypatch):
     """VERDICT r17 #1: q99 may pin its self-join build side with a
-    broadcast hint ONLY behind the same narrow-scan guard spread() uses —
-    an unconditional hint overrides autoBroadcastJoinThreshold and would
-    collect a data-sized table at 100 TB. Simulate scale by forcing the
-    guard False: no broadcast hint may reach the logical plan AND the
-    spread repartition must disappear; at fixture scale both are
+    broadcast hint ONLY behind the same narrow-scan guard spread() uses
+    AND only when the part scan's file bytes fit
+    autoBroadcastJoinThreshold — an unconditional hint overrides the
+    threshold and would collect a data-sized table at 100 TB. A threshold
+    below the file size drops the hint; simulating a wide scan drops both
+    the hint and the spread repartition; at fixture scale both are
     present."""
     from airflow_pipelines_from_mongo_to_postgres_spark.plans import analytics
     from airflow_pipelines_from_mongo_to_postgres_spark.sources import catalog
@@ -353,9 +356,20 @@ def test_q99_broadcast_hint_is_scale_guarded(spark, sf_dir, monkeypatch):
     narrow = analyzed(analytics.q99_fuzzy_linkage(spark, sf_dir))
     assert "ResolvedHint" in narrow  # fixture scale: hint pinned
 
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    part_bytes = sum(catalog._scan_file_sizes(
+        catalog.load_table(spark, "part", sf_dir)))
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(part_bytes - 1))
+    try:
+        over = analyzed(analytics.q99_fuzzy_linkage(spark, sf_dir))
+    finally:
+        spark.conf.set(key, old)
+    assert "ResolvedHint" not in over
+    assert "Repartition" in over  # still narrow: the widen stays
+
     monkeypatch.setattr(catalog, "_estimated_scan_splits",
                         lambda df: 10_000)  # simulate a wide lake scan
-    monkeypatch.setattr(analytics, "scan_is_narrow", catalog.scan_is_narrow)
     wide = analyzed(analytics.q99_fuzzy_linkage(spark, sf_dir))
     assert "ResolvedHint" not in wide
     assert "Repartition" not in wide
@@ -379,9 +393,51 @@ def test_spread_probe_is_metadata_only(spark, sf_dir):
     assert not catalog.scan_is_narrow(mem)
     assert catalog.spread(mem) is mem
 
+    # projections and filters keep the scan's partitioning: still narrow
+    assert catalog.scan_is_narrow(d.filter("doc_id > 0").select("doc_id"))
+    # past a shuffle the leaf files say nothing about the frame's width
+    for post in (d.groupBy("source").count(), d.join(d, "doc_id"),
+                 d.repartition(1)):
+        assert catalog._estimated_scan_splits(post) is None
+        assert not catalog.scan_is_narrow(post)
+        assert catalog.spread(post) is post
+
     assert catalog._parse_bytes("128m") == 128 << 20
     assert catalog._parse_bytes("134217728") == 134217728
     assert catalog._parse_bytes("4MB") == 4 << 20
+
+
+def test_operators_and_streaming_never_widen():
+    """Widening happens only at a plan's file scan: no module under
+    operators/ or streaming/ may even bind spread() — they receive
+    derived frames, whose partitioning the leaf-file probe cannot judge."""
+    import importlib
+    import pkgutil
+
+    from airflow_pipelines_from_mongo_to_postgres_spark import operators, streaming
+
+    for pkg in (operators, streaming):
+        for info in pkgutil.iter_modules(pkg.__path__, pkg.__name__ + "."):
+            mod = importlib.import_module(info.name)
+            assert "spread" not in vars(mod), info.name
+
+
+@pytest.mark.parametrize("name, widened", [
+    ("q58_corpus_build", False),            # widen past the window: gone
+    ("q134_corpus_build_semantic", False),  # widen past the join: gone
+    ("q01_pricing_summary", True),
+    ("q28_minhash_lsh_pairs", True),        # the shared shingle scan
+    ("q33_cosine_topk", True),              # corpus scan, not the probe
+    ("q99_fuzzy_linkage", True),
+])
+def test_round_robin_only_at_plan_scans(spark, sf_dir, name, widened):
+    """A round-robin Exchange appears exactly where a plan widens its own
+    narrow file scan, never behind a shuffle."""
+    from airflow_pipelines_from_mongo_to_postgres_spark.plans import all_queries
+
+    df = all_queries()[name](spark, sf_dir)
+    plan = df._jdf.queryExecution().sparkPlan().toString()
+    assert ("RoundRobinPartitioning" in plan) == widened, plan
 
 
 def test_new_text_audits_are_shuffle_free(spark, sf_dir):
