@@ -96,7 +96,10 @@ def _shingle_table(df: DataFrame, id_col: str, text_col: str, n: int,
     materialized inventory, the production pattern: count document
     frequencies ONCE per corpus snapshot, reuse across every dedup job) or
     ``max_df`` (count inline — a second pass over the corpus within this
-    plan). Both end in the same broadcast anti-join.
+    plan). Both end in the same broadcast anti-join. This precedence holds
+    for callers that pass both to this function; ``jaccard_pairs`` passes
+    only ``stop_shingles`` here and applies ``max_df`` itself, so there the
+    two compose.
     """
     sh = shingle_table if shingle_table is not None \
         else build_shingle_table(df, id_col, text_col, n)
@@ -149,9 +152,14 @@ def jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     broadcast anti-join just to find the hot shingles. Per-doc sizes
     re-derive from exploding the pruned postings (cached — they feed
     sizes AND pairs), counting exactly the rows the old post-prune
-    groupBy(doc) counted. Skew bound: |posting| ≤ max_df, so the
-    array-side blow-up is ≤ max_df·(max_df−1)/2 pairs per shingle and
-    the collect_list buffer ≤ max_df ids — both hard-bounded.
+    groupBy(doc) counted. Skew bound: only the pair fan-out is bounded —
+    after the size filter |posting| ≤ max_df, so the array-side blow-up
+    is ≤ max_df·(max_df−1)/2 pairs per shingle. The collect_list buffer
+    is NOT bounded by max_df: it holds the shingle's true document
+    frequency until the ``size(ds) <= max_df`` filter runs on the
+    aggregated row. ``stop_shingles`` and ``max_df`` compose here: the
+    stop list is anti-joined out first, then the size filter drops any
+    remaining posting above ``max_df``.
 
     The UNPRUNED form keeps the inverted-index self-join: its posting
     arrays have no bound (a stop-shingle's collect_list buffer would be

@@ -4,8 +4,9 @@ topologically-ordered, partition-parallel load (SURVEY.md §3, §7d).
 Full migration (ref mongo_to_postgres_migration.py): nested source →
 conform → warehouse. Daily update (ref mongo_to_postgres_updation.py):
 incremental batch → surrogate-key reconciliation → merge-upsert →
-warehouse. The warehouse is a parquet directory per table (tests); the
-JDBC/Postgres sink (sinks/jdbc.py) swaps in transparently for real targets.
+warehouse. The warehouse holds one snapshot table per entity
+(sources/snapshots.py); for a real Postgres target the same merged frame
+goes through ``jdbc_merge`` (sources/sinks.py).
 
 No CSV staging between stages (ref user_table.py:90,97) — the lazy
 DataFrame is the inter-stage IR; Spark checkpoints only at the sink.
@@ -27,38 +28,37 @@ from airflow_pipelines_from_mongo_to_postgres_spark.operators.merge import (
     quarantine_split,
 )
 from airflow_pipelines_from_mongo_to_postgres_spark.plans.entities import ENTITIES, topo_order
+from airflow_pipelines_from_mongo_to_postgres_spark.sources.snapshots import (
+    current_version,
+    read_snapshot,
+    snap_overwrite,
+)
 
 
 class Warehouse:
-    """Parquet-directory warehouse with the reference's table contract:
-    surrogate ``id`` + unique natural key, one directory per table."""
+    """Snapshot-table warehouse with the reference's table contract:
+    surrogate ``id`` + unique natural key, one snapshot table
+    (sources/snapshots.py) per table under ``root``.
+
+    Every write is one manifest commit, so a crash at any point leaves
+    the old or the new table readable, never neither, and a frame read
+    before a write keeps reading the snapshot it resolved. That is also
+    what lets an incremental merge READ the table it replaces. Superseded
+    snapshots stay on disk until ``snapshots.vacuum`` runs (the
+    Delta/Iceberg retention convention); writes never vacuum."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = Path(root)
 
-    def path(self, table: str) -> str:
-        return str(self.root / table)
-
     def exists(self, table: str) -> bool:
-        return (self.root / table).exists()
+        return current_version(self.spark, str(self.root / table)) > 0
 
     def read(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(table))
+        return read_snapshot(self.spark, str(self.root / table))
 
     def write(self, table: str, df: DataFrame) -> None:
-        """Write-stage-swap: materialize to a staging dir, then atomically
-        replace the table dir. Required because an incremental merge READS
-        the table it replaces (Spark cannot overwrite a path it is
-        scanning), and it gives readers a consistent view mid-rewrite."""
-        import shutil
-
-        stage = self.root / f".{table}.staging"
-        final = self.root / table
-        df.write.mode("overwrite").parquet(str(stage))
-        if final.exists():
-            shutil.rmtree(final)
-        stage.rename(final)
+        snap_overwrite(self.spark, str(self.root / table), df)
 
 
 @dataclass

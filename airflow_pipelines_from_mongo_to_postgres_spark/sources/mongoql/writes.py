@@ -457,8 +457,7 @@ def _write_stage(df: DataFrame, op: str, spec: Any, targets) -> DataFrame:
                 _jvm_fs,
             )
 
-            fs, jvm = _jvm_fs(spark, t["path"])
-            hpath = jvm.org.apache.hadoop.fs.Path(t["path"])
+            fs, hpath = _jvm_fs(spark, t["path"])
             # existence probe must mean "has data", not "dir exists" —
             # an empty dir (failed prior write) would make the target
             # read below die with a raw schema-inference

@@ -4,15 +4,16 @@ isolation, and time travel over plain parquet — the table-format layer
 hadoop-compatible store has: append-only data files with unique names,
 and an atomic single-file rename.
 
-Why this exists next to the ``lake_*`` family (sources/sinks.py): the
-hive-partitioned lake mutates DIRECTORIES, so its dynamic overwrite
-needs the ``_pending``/``_COMMITTED`` staging protocol to survive
-crashes, and a reader racing a writer can see a half-replaced
-partition. Here data files are IMMUTABLE and a commit is one manifest
-rename: readers resolve a manifest once and see a consistent file set
-forever (snapshot isolation); a crashed writer leaves only orphan data
-files that ``vacuum`` reclaims — no recovery step, nothing a reader can
-ever observe half-done.
+Why this exists: it is the package's one commit protocol for tables it
+owns — the pipeline warehouse (plans/pipeline.py), ``$out``/``$merge``
+snap targets and the streaming exactly-once appends all commit here.
+Data files are IMMUTABLE and a commit is one manifest rename: readers
+resolve a manifest once and see a consistent file set forever
+(snapshot isolation); a crashed writer leaves only orphan data files
+that ``vacuum`` reclaims — no recovery step, nothing a reader can ever
+observe half-done. The ``lake_*`` family (sources/sinks.py) keeps its
+own ``_pending``/``_COMMITTED`` staging protocol because its contract
+is a plain hive tree that other engines read in place.
 
 Layout::
 
@@ -46,27 +47,45 @@ from __future__ import annotations
 import json
 import re
 import uuid
+from types import SimpleNamespace
 
 from pyspark.sql import DataFrame, SparkSession
 
 
+def _jvm_classes(spark) -> SimpleNamespace:
+    """The JVM classes this module calls, resolved once per py4j gateway.
+    Every hop of a ``jvm.org.apache.hadoop.fs.Path`` chain is its own
+    reflection round trip, so the handles are cached on the gateway
+    object: a restarted gateway starts without them and never reuses a
+    dead client's handles. (Read through ``__dict__`` — JavaGateway
+    forwards unknown attributes to the JVM.)"""
+    gw = spark.sparkContext._gateway
+    classes = gw.__dict__.get("_snapshot_classes")
+    if classes is None:
+        jvm = gw.jvm
+        classes = gw._snapshot_classes = SimpleNamespace(
+            Path=jvm.org.apache.hadoop.fs.Path,
+            FileUtil=jvm.org.apache.hadoop.fs.FileUtil,
+            IOUtils=jvm.org.apache.commons.io.IOUtils,
+            System=jvm.java.lang.System)
+    return classes
+
+
 def _jvm_fs(spark, p: str):
-    sc = spark.sparkContext
-    jp = sc._jvm.org.apache.hadoop.fs.Path(p)
-    return jp.getFileSystem(sc._jsc.hadoopConfiguration()), sc._jvm
+    """``(FileSystem, Path)`` for ``p``."""
+    jp = _jvm_classes(spark).Path(p)
+    return jp.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), jp
 
 
 def _read_text(spark, p: str) -> str | None:
-    fs, jvm = _jvm_fs(spark, p)
-    jp = jvm.org.apache.hadoop.fs.Path(p)
+    fs, jp = _jvm_fs(spark, p)
     if not fs.exists(jp):
         return None
     stream = fs.open(jp)
     try:
         # one JVM call for the whole file (a byte-at-a-time .read() loop
         # would be one py4j round trip per byte)
-        return jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8")
+        return _jvm_classes(spark).IOUtils.toString(stream, "UTF-8")
     finally:
         stream.close()
 
@@ -75,14 +94,13 @@ def _write_text_atomic(spark, p: str, text: str) -> None:
     """Write via temp file + rename — the single atomic primitive the
     whole commit protocol rests on (atomic on HDFS/local; on S3 use a
     conditional PUT or a commit service, same one-object contract)."""
-    fs, jvm = _jvm_fs(spark, p)
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{p}.tmp-{uuid.uuid4().hex}")
+    fs, dst = _jvm_fs(spark, p)
+    tmp = _jvm_classes(spark).Path(f"{p}.tmp-{uuid.uuid4().hex}")
     out = fs.create(tmp, True)
     try:
         out.write(bytearray(text.encode("utf-8")))
     finally:
         out.close()
-    dst = jvm.org.apache.hadoop.fs.Path(p)
     fs.delete(dst, False)
     if not fs.rename(tmp, dst):
         raise IOError(f"atomic rename failed for {p}")
@@ -119,9 +137,9 @@ def current_version(spark: SparkSession, table: str) -> int:
     the true head instead of conflicting forever."""
     head = _read_text(spark, f"{table}/_manifests/HEAD")
     v = int(head.strip()) if head else 0
-    fs, jvm = _jvm_fs(spark, table)
-    while fs.exists(jvm.org.apache.hadoop.fs.Path(
-            _manifest_path(table, v + 1))):
+    fs, _ = _jvm_fs(spark, table)
+    Path = _jvm_classes(spark).Path
+    while fs.exists(Path(_manifest_path(table, v + 1))):
         v += 1
     return v
 
@@ -296,8 +314,6 @@ def partition_spark_type(values: list) -> str:
     """Spark SQL type for a hive partition column from its path-parsed
     values, mirroring Spark's own partition inference order (int →
     bigint → double → date → string) so every reader agrees."""
-    import re
-
     vs = [v for v in values if v is not None]
     if not vs:
         return "string"
@@ -371,9 +387,9 @@ def _write_data_files(df: DataFrame, table: str,
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(f"{table}/{sub}")
-    fs, jvm = _jvm_fs(df.sparkSession, f"{table}/{sub}")
+    fs, root = _jvm_fs(df.sparkSession, f"{table}/{sub}")
     names = []
-    it = fs.listFiles(jvm.org.apache.hadoop.fs.Path(f"{table}/{sub}"), True)
+    it = fs.listFiles(root, True)
     while it.hasNext():
         p = it.next().getPath().toString()
         if p.endswith(".parquet"):
@@ -633,8 +649,7 @@ def _commit(spark: SparkSession, table: str, files: list | None,
         # partition columns; pruning needs nothing extra (partition
         # values are already per-file min=max stats entries)
         manifest["partition_by"] = list(partition_by)
-    fs, jvm = _jvm_fs(spark, table)
-    mp = jvm.org.apache.hadoop.fs.Path(_manifest_path(table, v))
+    fs, mp = _jvm_fs(spark, _manifest_path(table, v))
     try:
         out = fs.create(mp, False)          # fail-if-exists: the OCC gate
     except Exception as exc:
@@ -713,6 +728,46 @@ def _resolve_layout(spark: SparkSession, table: str,
     return tuple(partition_by)
 
 
+def _commit_on_head(spark: SparkSession, table: str, note: str, op: str,
+                    new_seg: str | None = None, key_files: list = (),
+                    key_cols: list = (), partition_by: tuple | None = None,
+                    txn: str | None = None) -> int | None:
+    """Commit ``new_seg`` (appended rows) and/or equality deletes over
+    ``key_files`` on top of the current head, pinned to it by
+    ``expected_parent``: a commit landing between the manifest read and
+    the OCC create would otherwise be silently dropped (lost update). On
+    conflict only the version-file read + commit retry; data files and
+    segments are written once. The new segment and the deletes take the
+    version this commit will get as their data sequence. ``partition_by``
+    None keeps the head's layout; with ``txn``, a txn already in history
+    (possibly the racer this commit lost to) makes it a no-op."""
+    for _ in range(_APPEND_RETRIES):
+        if txn is not None and txn in committed_txns(spark, table):
+            return None
+        raw = _read_raw_manifest(spark, table)
+        segs, seg_seqs = _parent_segments(spark, table, raw)
+        v = raw["version"] + 1
+        if new_seg is not None:
+            segs, seg_seqs = segs + [new_seg], {**seg_seqs, new_seg: v}
+        if len(segs) > _MAX_SEGMENTS:
+            segs = [_coalesce_segments(spark, table, segs, seg_seqs)]
+            seg_seqs = {}
+        dels = list(raw.get("deletes") or []) + [
+            {"file": n, "cols": list(key_cols), "seq": v} for n in key_files]
+        try:
+            return _commit(spark, table, None, note, txn=txn,
+                           expected_parent=raw["version"], segments=segs,
+                           deletes=dels or None,
+                           partition_by=(raw.get("partition_by")
+                                         if partition_by is None
+                                         else list(partition_by) or None),
+                           segment_seqs=seg_seqs or None)
+        except CommitConflict:
+            continue
+    raise CommitConflict(
+        f"{table}: {op} lost the commit race {_APPEND_RETRIES} times")
+
+
 def snap_append(spark: SparkSession, table: str, df: DataFrame,
                 note: str = "append", stat_cols: tuple = (),
                 value_cols: tuple = (),
@@ -725,39 +780,15 @@ def snap_append(spark: SparkSession, table: str, df: DataFrame,
     segment list coalesces into one (amortized O(table/_MAX_SEGMENTS)).
     ``stat_cols`` enables manifest-level pruning stats for the new
     files; parent segments carry forward untouched (files are
-    immutable, so their stats are too).
-
-    The commit pins ``expected_parent`` to the manifest it derived its
-    segment list from: a commit landing between the manifest read and
-    the OCC create would otherwise be silently dropped from the new
-    list (lost update). On conflict the already-written data files and
-    segment are reused — only the version-file read + commit retries.
-    ``value_cols`` opt-in per-file distinct-value sets for categorical
-    equality pruning (see _collect_file_stats)."""
+    immutable, so their stats are too). OCC and retries: see
+    _commit_on_head. ``value_cols`` opt-in per-file distinct-value sets
+    for categorical equality pruning (see _collect_file_stats)."""
     partition_by = _resolve_layout(spark, table, partition_by)
     new, stats = _write_data_files(df, table, stat_cols, value_cols,
                                    partition_by)
-    new_seg = _write_segment(spark, table, new, stats)
-    for _ in range(_APPEND_RETRIES):
-        raw = _read_raw_manifest(spark, table)
-        psegs, seg_seqs = _parent_segments(spark, table, raw)
-        segs = psegs + [new_seg]
-        # the new segment's data sequence = the version this commit will
-        # take (expected_parent pins it — a racer forces a retry)
-        seg_seqs = {**seg_seqs, new_seg: raw["version"] + 1}
-        if len(segs) > _MAX_SEGMENTS:
-            segs = [_coalesce_segments(spark, table, segs, seg_seqs)]
-            seg_seqs = {}
-        try:
-            return _commit(spark, table, None, note,
-                           expected_parent=raw["version"], segments=segs,
-                           deletes=raw.get("deletes"),
-                           partition_by=list(partition_by) or None,
-                           segment_seqs=seg_seqs or None)
-        except CommitConflict:
-            continue
-    raise CommitConflict(
-        f"{table}: append lost the commit race {_APPEND_RETRIES} times")
+    return _commit_on_head(spark, table, note, "append",
+                           new_seg=_write_segment(spark, table, new, stats),
+                           partition_by=partition_by)
 
 
 def snap_overwrite(spark: SparkSession, table: str, df: DataFrame,
@@ -844,24 +875,11 @@ def snap_delete_keys(spark: SparkSession, table: str, keys: DataFrame,
     if current_version(spark, table) == 0:
         raise FileNotFoundError(f"nothing to delete at {table}")
     new, _ = _write_data_files(keys.select(*key_cols).distinct(), table)
-    for _ in range(_APPEND_RETRIES):
-        raw = _read_raw_manifest(spark, table)
-        segs, seg_seqs = _parent_segments(spark, table, raw)
-        # the delete's sequence = this commit's version: it applies only
-        # to files sequenced BEFORE it (Iceberg-v2 equality-delete rule),
-        # so a later append of the same key is NOT retro-deleted
-        entries = [{"file": n, "cols": list(key_cols),
-                    "seq": raw["version"] + 1} for n in new]
-        dels = list(raw.get("deletes", [])) + entries
-        try:
-            return _commit(spark, table, None, note,
-                           expected_parent=raw["version"], segments=segs,
-                           deletes=dels, segment_seqs=seg_seqs or None,
-                           partition_by=raw.get("partition_by"))
-        except CommitConflict:
-            continue
-    raise CommitConflict(
-        f"{table}: delete lost the commit race {_APPEND_RETRIES} times")
+    # the delete's sequence = this commit's version: it applies only to
+    # files sequenced BEFORE it (Iceberg-v2 equality-delete rule), so a
+    # later append of the same key is NOT retro-deleted
+    return _commit_on_head(spark, table, note, "delete", key_files=new,
+                           key_cols=key_cols)
 
 
 def snap_merge_keys(spark: SparkSession, table: str, df: DataFrame,
@@ -914,26 +932,9 @@ def snap_merge_keys(spark: SparkSession, table: str, df: DataFrame,
                                    partition_by=layout)
     new_seg = _write_segment(spark, table, new, stats)
     keyf, _ = _write_data_files(df.select(*key_cols).distinct(), table)
-    for _ in range(_APPEND_RETRIES):
-        raw = _read_raw_manifest(spark, table)
-        psegs, seg_seqs = _parent_segments(spark, table, raw)
-        segs = psegs + [new_seg]
-        v = raw["version"] + 1
-        seg_seqs = {**seg_seqs, new_seg: v}
-        if len(segs) > _MAX_SEGMENTS:
-            segs = [_coalesce_segments(spark, table, segs, seg_seqs)]
-            seg_seqs = {}
-        dels = list(raw.get("deletes", [])) + [
-            {"file": n, "cols": list(key_cols), "seq": v} for n in keyf]
-        try:
-            return _commit(spark, table, None, note,
-                           expected_parent=raw["version"], segments=segs,
-                           deletes=dels, segment_seqs=seg_seqs or None,
-                           partition_by=list(layout) or None)
-        except CommitConflict:
-            continue
-    raise CommitConflict(
-        f"{table}: merge lost the commit race {_APPEND_RETRIES} times")
+    return _commit_on_head(spark, table, note, "merge", new_seg=new_seg,
+                           key_files=keyf, key_cols=key_cols,
+                           partition_by=layout)
 
 
 def _apply_delete_entries(spark: SparkSession, table: str, df: DataFrame,
@@ -1019,29 +1020,11 @@ def snap_append_txn(spark: SparkSession, table: str, df: DataFrame,
     layout = _resolve_layout(spark, table, ())
     new, stats = _write_data_files(df, table, stat_cols,
                                    partition_by=layout)
-    new_seg = _write_segment(spark, table, new, stats)
-    for _ in range(_APPEND_RETRIES):
-        # re-check the txn inside the retry loop: the racer we lost to
-        # may have BEEN this txn (two replaying workers of one epoch)
-        if txn in committed_txns(spark, table):
-            return None
-        raw = _read_raw_manifest(spark, table)
-        psegs, seg_seqs = _parent_segments(spark, table, raw)
-        segs = psegs + [new_seg]
-        seg_seqs = {**seg_seqs, new_seg: raw["version"] + 1}
-        if len(segs) > _MAX_SEGMENTS:
-            segs = [_coalesce_segments(spark, table, segs, seg_seqs)]
-            seg_seqs = {}
-        try:
-            return _commit(spark, table, None, note, txn=txn,
-                           expected_parent=raw["version"], segments=segs,
-                           deletes=raw.get("deletes"),
-                           partition_by=list(layout) or None,
-                           segment_seqs=seg_seqs or None)
-        except CommitConflict:
-            continue
-    raise CommitConflict(
-        f"{table}: txn append lost the commit race {_APPEND_RETRIES} times")
+    # _commit_on_head re-checks the txn before every attempt: the racer
+    # we lost to may have BEEN this txn (two replaying workers of one epoch)
+    return _commit_on_head(spark, table, note, "txn append",
+                           new_seg=_write_segment(spark, table, new, stats),
+                           partition_by=layout, txn=txn)
 
 
 def read_snapshot(spark: SparkSession, table: str,
@@ -1222,12 +1205,11 @@ def vacuum(spark: SparkSession, table: str,
         keep.update(m["files"])
         keep.update(d["file"] for d in m.get("deletes", []))
         v = m["parent"] or 0
-    fs, jvm = _jvm_fs(spark, f"{table}/data")
-    root = jvm.org.apache.hadoop.fs.Path(f"{table}/data")
+    fs, root = _jvm_fs(spark, f"{table}/data")
     deleted = []
     if not fs.exists(root):
         return deleted
-    now_ms = jvm.java.lang.System.currentTimeMillis()
+    now_ms = _jvm_classes(spark).System.currentTimeMillis()
     for sub in fs.listStatus(root):
         for st in fs.listStatus(sub.getPath()):
             rel = f"data/{sub.getPath().getName()}/{st.getPath().getName()}"
@@ -1256,16 +1238,15 @@ def snap_clone(spark: SparkSession, src_table: str, dst_table: str,
     m = read_manifest(spark, src_table, version)
     if current_version(spark, dst_table) != 0:
         raise ValueError(f"snap_clone: {dst_table} is not empty")
-    fs, jvm = _jvm_fs(spark, src_table)
+    fs, _ = _jvm_fs(spark, src_table)
+    dfs, _ = _jvm_fs(spark, dst_table)
     conf = spark.sparkContext._jsc.hadoopConfiguration()
-    FileUtil = jvm.org.apache.hadoop.fs.FileUtil
-    Path = jvm.org.apache.hadoop.fs.Path
-    dfs = Path(dst_table).getFileSystem(conf)
+    jc = _jvm_classes(spark)
     to_copy = list(m["files"]) + [d["file"] for d in m.get("deletes", [])]
     for rel in to_copy:
-        src_p, dst_p = Path(f"{src_table}/{rel}"), Path(f"{dst_table}/{rel}")
+        src_p, dst_p = jc.Path(f"{src_table}/{rel}"), jc.Path(f"{dst_table}/{rel}")
         dfs.mkdirs(dst_p.getParent())
-        if not FileUtil.copy(fs, src_p, dfs, dst_p, False, True, conf):
+        if not jc.FileUtil.copy(fs, src_p, dfs, dst_p, False, True, conf):
             raise IOError(f"snap_clone: copy failed for {rel}")
     # Deletes travel with their seq fields, so the clone must pin the
     # source's file sequences too — an inline default of "everything is

@@ -155,3 +155,111 @@ def test_unknown_source_fails_in_isolation(spark, tmp_path):
 
     order = topo_order(["users", "no_such_entity"])
     assert order[-1] == "no_such_entity" and "users" in order
+
+
+# -- the table-commit protocol under Warehouse --------------------------------
+
+_SCHEMA = "id long, v string"
+
+
+def _rows(df):
+    return sorted((r.id, r.v) for r in df.collect())
+
+
+def test_frame_read_before_a_write_keeps_its_snapshot(spark, tmp_path):
+    """Snapshot isolation: a frame resolved before a rewrite still
+    collects the rows it saw, after the rewrite has committed."""
+    wh = Warehouse(spark, str(tmp_path))
+    wh.write("t", spark.createDataFrame([(1, "old")], _SCHEMA))
+    before = wh.read("t")
+    wh.write("t", spark.createDataFrame([(2, "new"), (3, "new")], _SCHEMA))
+    assert _rows(before) == [(1, "old")]
+    assert _rows(wh.read("t")) == [(2, "new"), (3, "new")]
+
+
+@pytest.mark.parametrize("crash_at", ["commit", "head_update"])
+def test_crashed_write_leaves_old_or_new_table(spark, tmp_path, monkeypatch,
+                                               crash_at):
+    """Kill the rewrite between its steps: after the data files are
+    written but before the manifest commit, the old table is what reads;
+    after the manifest is created but before HEAD moves, the new one is
+    (``current_version`` heals forward). Never neither, and the next
+    write commits normally."""
+    from airflow_pipelines_from_mongo_to_postgres_spark.sources import snapshots as S
+
+    wh = Warehouse(spark, str(tmp_path))
+    old = [(1, "old")]
+    new = [(2, "new"), (3, "new")]
+    wh.write("t", spark.createDataFrame(old, _SCHEMA))
+
+    if crash_at == "commit":
+        def crash(*args, **kwargs):
+            raise OSError("crash after the data files, before the commit")
+        monkeypatch.setattr(S, "_commit", crash)
+    else:
+        write_text = S._write_text_atomic
+
+        def crash(spark_, p, text):
+            if p.endswith("/_manifests/HEAD"):
+                raise OSError("crash after the manifest, before HEAD")
+            write_text(spark_, p, text)
+        monkeypatch.setattr(S, "_write_text_atomic", crash)
+    with pytest.raises(OSError, match="crash"):
+        wh.write("t", spark.createDataFrame(new, _SCHEMA))
+    monkeypatch.undo()
+
+    assert wh.exists("t")
+    assert _rows(wh.read("t")) == (old if crash_at == "commit" else new)
+    wh.write("t", spark.createDataFrame([(4, "next")], _SCHEMA))
+    assert _rows(wh.read("t")) == [(4, "next")]
+
+
+@pytest.mark.parametrize("empty", ["limit0", "no_rows"])
+def test_zero_row_frames_round_trip(spark, tmp_path, empty):
+    """A zero-row frame is a table: it writes, exists, and reads back 0
+    rows with its schema — fresh or over a populated table."""
+    full = spark.createDataFrame([(1, "a")], _SCHEMA)
+    frame = (full.limit(0) if empty == "limit0"
+             else spark.createDataFrame([], _SCHEMA))
+    wh = Warehouse(spark, str(tmp_path))
+    wh.write("fresh", frame)
+    wh.write("t", full)
+    wh.write("t", frame)
+    for table in ("fresh", "t"):
+        got = wh.read(table)
+        assert wh.exists(table)
+        assert got.count() == 0 and got.schema == full.schema
+
+
+def test_warehouse_py4j_sends_are_capped(spark, tmp_path, monkeypatch):
+    """Driver-side cost of one table write and one read, in py4j sends
+    from this thread (memory-release commands, ``m\\n``, are skipped: the
+    GC issues them at random points). A per-call JVM class lookup costs
+    one send per hop of ``org.apache.hadoop.fs.Path``; with the lookups
+    uncached the same calls took write 120 / read 73."""
+    import threading
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    main = threading.get_ident()
+    sends = [0]
+
+    def counting(command, *args, **kwargs):
+        if threading.get_ident() == main and not command.startswith("m\n"):
+            sends[0] += 1
+        return send(command, *args, **kwargs)
+
+    wh = Warehouse(spark, str(tmp_path))
+    df = spark.range(40, numPartitions=4)
+    wh.write("warm", df)
+    monkeypatch.setattr(client, "send_command", counting)
+
+    wh.write("t", df)
+    write_sends, sends[0] = sends[0], 0
+    got = wh.read("t")
+    read_sends = sends[0]
+    monkeypatch.undo()
+
+    assert got.count() == 40
+    assert write_sends <= 70, write_sends
+    assert read_sends <= 40, read_sends
