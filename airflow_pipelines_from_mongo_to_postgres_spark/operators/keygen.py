@@ -12,10 +12,9 @@ the misses reproduces the deterministic ordered assignment.
 
 Scale note: ``row_number`` over a global ordering is a single-partition
 bottleneck — acceptable because only the *misses* (the new-key slice of one
-incremental batch) pass through it, not the 100 TB target table. For
-bulk backfills where dense ordered ids are not required, use
-``monotonically_increasing_id`` or ``zipWithIndex`` semantics instead
-(``dense=False``), which stay fully parallel.
+incremental batch) pass through it, not the 100 TB target table. Bulk
+backfills use ``parallel=True`` (``dense_ranks_parallel``): the same
+dense ordered ids with every stage partition-parallel.
 """
 
 from __future__ import annotations
@@ -67,27 +66,24 @@ def dense_ranks_parallel(df: DataFrame, order_col: str,
 
 def assign_surrogate_keys(existing: DataFrame, incoming: DataFrame,
                           natural_key: str = "_id", surrogate: str = "id",
-                          dense: bool = True,
                           parallel: bool = False) -> DataFrame:
     """Return ``incoming`` with a ``surrogate`` column: matched rows keep the
     existing id; new rows get max(existing id) + row_number() in
     ``natural_key`` order (J2 determinism, ref utils.py:22-39).
 
-    ``existing`` needs columns (surrogate, natural_key). Three id modes:
+    ``existing`` needs columns (surrogate, natural_key). Two id modes:
 
-    * ``dense=True`` (default): ordered window — EXACT reference parity,
-      but the misses sort through one task (fine for incremental
-      batches, the gated q22 scenario).
-    * ``dense=True, parallel=True``: the same dense ordered ids via
+    * default: ordered window — EXACT reference parity, but the misses
+      sort through one task (fine for incremental batches, the gated
+      q22 scenario).
+    * ``parallel=True``: the same dense ordered ids via
       ``dense_ranks_parallel`` — identical values, no single-partition
       stage; the bulk-backfill scale path.
-    * ``dense=False``: ``monotonically_increasing_id`` (non-dense,
-      fully parallel, no ordering guarantee).
     """
     lookup = existing.select(F.col(natural_key), F.col(surrogate).alias("__existing_id"))
     joined = incoming.join(lookup, on=natural_key, how="left")  # J1: one join, not N+1
     max_id = existing.select(F.coalesce(F.max(surrogate), F.lit(0)).alias("m"))
-    if dense and parallel:
+    if parallel:
         misses = joined.filter(F.col("__existing_id").isNull()) \
             .drop("__existing_id")
         ranked = dense_ranks_parallel(misses, natural_key) \
@@ -99,11 +95,8 @@ def assign_surrogate_keys(existing: DataFrame, incoming: DataFrame,
             .drop("__existing_id")
         return hits.unionByName(ranked.select(*hits.columns))
     joined = joined.join(F.broadcast(max_id))  # attach scalar max, broadcast 1-row side
-    if dense:
-        w = Window.partitionBy(F.col("__existing_id").isNull()).orderBy(natural_key)
-        new_id = F.col("m") + F.row_number().over(w)
-    else:
-        new_id = F.col("m") + F.monotonically_increasing_id() + 1
+    w = Window.partitionBy(F.col("__existing_id").isNull()).orderBy(natural_key)
+    new_id = F.col("m") + F.row_number().over(w)
     out = joined.withColumn(surrogate, F.coalesce(F.col("__existing_id"),
                                                   new_id.cast("long")))
     return out.drop("__existing_id", "m")

@@ -11,8 +11,9 @@ Spark-first design: merge is a full-outer join + per-column-class coalesce —
 set-based, shuffle-partitioned on the key, no per-row round trips. At scale
 the join shuffles both sides on the key once; if the updates batch is small
 relative to the target it is broadcast (AQE decides). Writing to an actual
-Postgres target goes through the JDBC staging sink (sinks/jdbc.py) which
-executes ONE server-side set-based ON CONFLICT statement — never per-row.
+Postgres target goes through the JDBC staging sink (``jdbc_merge`` in
+sources/sinks.py), which executes ONE server-side set-based ON CONFLICT
+statement — never per-row.
 """
 
 from __future__ import annotations
@@ -72,12 +73,3 @@ def insert_if_absent(target: DataFrame, updates: DataFrame,
     fresh = updates.join(target.select(*keys), on=keys, how="left_anti")
     return target.unionByName(fresh.select(*target.columns))
 
-
-def quarantine_split(df: DataFrame, valid_cond) -> tuple[DataFrame, DataFrame]:
-    """M14: error-tolerant load. The reference silently drops rows that fail
-    to insert (ref user_table.py:116-121); the engine diverts them to a
-    quarantine DataFrame instead so the drop is observable.
-
-    Returns (clean, quarantined). ``valid_cond`` is a boolean Column.
-    """
-    return df.filter(valid_cond), df.filter(~F.coalesce(valid_cond, F.lit(False)))

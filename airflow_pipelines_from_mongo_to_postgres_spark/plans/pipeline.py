@@ -18,14 +18,14 @@ import time
 from dataclasses import dataclass, field
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from airflow_pipelines_from_mongo_to_postgres_spark.operators.keygen import assign_surrogate_keys
 from airflow_pipelines_from_mongo_to_postgres_spark.operators.merge import (
     insert_if_absent,
     merge_upsert,
-    quarantine_split,
 )
 from airflow_pipelines_from_mongo_to_postgres_spark.plans.entities import ENTITIES, topo_order
 from airflow_pipelines_from_mongo_to_postgres_spark.sources.snapshots import (
@@ -124,16 +124,49 @@ def _run_entities(names, step, on_error: str, retries: int,
     return report
 
 
-def _quarantine(warehouse: Warehouse, name: str, spec, flat: DataFrame
-                ) -> tuple[DataFrame, int]:
-    """M14 at the runner level: rows with a null natural key can never
-    merge (the key is the UNIQUE/ON CONFLICT column) — divert them to
-    ``{name}__quarantine`` instead of poisoning the join."""
-    clean, bad = quarantine_split(flat, F.col(spec.merge_key).isNotNull())
-    n_bad = bad.count()
+def _load(warehouse: Warehouse, name: str, src: DataFrame,
+          target: DataFrame | None) -> int:
+    """One table step: conform ``src``, divert null-key rows (M14), assign
+    surrogate ids (J1+J2), merge into ``target`` (the current table;
+    ``None`` on the initial load) and write. Returns the quarantined row
+    count.
+
+    Null natural keys can never merge (the key is the UNIQUE/ON CONFLICT
+    column), so they go to ``{name}__quarantine`` instead of poisoning
+    the join. An Observation on the table write counts them, so the
+    source runs once; only a non-empty quarantine costs its own
+    (filtered) write. The batch needs no sort: keygen's window orders the
+    new ids by natural key (O1)."""
+    spec = ENTITIES[name]
+    key = F.col(spec.merge_key)
+    flat = spec.conform(src)
+    nulls = Observation()
+    clean = flat.observe(nulls, F.count_if(key.isNull()).alias("n")) \
+        .filter(key.isNotNull())
+    # the empty id lookup comes from the frame WITHOUT the observation,
+    # so the plan carries exactly one CollectMetrics
+    existing = (flat.select(F.lit(None).cast("long").alias("id"), key).limit(0)
+                if target is None else target.select("id", key))
+    keyed = assign_surrogate_keys(existing, clean, natural_key=spec.merge_key,
+                                  surrogate="id").select("id", *flat.columns)
+    if target is None:
+        merged = keyed
+    elif spec.insert_only:
+        merged = insert_if_absent(target, keyed, key=spec.merge_key)
+    else:
+        merged = merge_upsert(target, keyed, key=spec.merge_key,
+                              mutable=list(spec.mutable))
+    warehouse.write(name, merged)
+    bad = flat.filter(key.isNull())
+    try:
+        n_bad = nulls.get["n"]
+    except Py4JJavaError:
+        # Spark drops the metrics of a subtree it prunes as empty, which
+        # happens when no row has a key: only then count the nulls apart
+        n_bad = bad.count()
     if n_bad:
         warehouse.write(f"{name}__quarantine", bad)
-    return clean, n_bad
+    return n_bad
 
 
 def migrate(spark: SparkSession, warehouse: Warehouse,
@@ -143,20 +176,10 @@ def migrate(spark: SparkSession, warehouse: Warehouse,
             retry_delay_s: float = 0.0) -> RunReport:
     """Initial full load: conform each nested source and write it with
     fresh surrogate ids, parents before children (J3)."""
-    def step(name: str) -> int:
-        spec = ENTITIES[name]
-        flat, n_bad = _quarantine(warehouse, name, spec,
-                                  spec.conform(sources[name]))
-        no_existing = flat.select(
-            F.lit(None).cast("long").alias("id"),
-            F.col(spec.merge_key)).limit(0)
-        keyed = assign_surrogate_keys(no_existing, flat,
-                                      natural_key=spec.merge_key, surrogate="id")
-        warehouse.write(name, keyed.select("id", *flat.columns))
-        return n_bad
-
     names = [n for n in topo_order(entities or list(sources)) if n in sources]
-    return _run_entities(names, step, on_error, retries, retry_delay_s)
+    return _run_entities(
+        names, lambda n: _load(warehouse, n, sources[n], None),
+        on_error, retries, retry_delay_s)
 
 
 def daily_update(spark: SparkSession, warehouse: Warehouse,
@@ -164,26 +187,11 @@ def daily_update(spark: SparkSession, warehouse: Warehouse,
                  entities: list[str] | None = None,
                  on_error: str = "raise", retries: int = 0,
                  retry_delay_s: float = 0.0) -> RunReport:
-    """Incremental upsert path (ref DAG 3.2): sort batch by natural key
-    (O1), reconcile surrogate keys (J1+J2), merge with the per-entity
-    mutable-column policy (M1–M13)."""
-    def step(name: str) -> int:
-        spec = ENTITIES[name]
-        flat, n_bad = _quarantine(
-            warehouse, name, spec,
-            spec.conform(batches[name]).orderBy(spec.merge_key))  # O1
-        target = warehouse.read(name)
-        keyed = assign_surrogate_keys(
-            target.select("id", F.col(spec.merge_key)),
-            flat, natural_key=spec.merge_key, surrogate="id",
-        ).select("id", *flat.columns)
-        if spec.insert_only:
-            merged = insert_if_absent(target, keyed, key=spec.merge_key)
-        else:
-            merged = merge_upsert(target, keyed, key=spec.merge_key,
-                                  mutable=list(spec.mutable))
-        warehouse.write(name, merged)
-        return n_bad
-
+    """Incremental upsert path (ref DAG 3.2): conform each batch,
+    reconcile surrogate keys against the current table (J1+J2; new ids
+    continue from its max in natural-key order, O1) and merge with the
+    per-entity mutable-column policy (M1–M13)."""
     names = [n for n in topo_order(entities or list(batches)) if n in batches]
-    return _run_entities(names, step, on_error, retries, retry_delay_s)
+    return _run_entities(
+        names, lambda n: _load(warehouse, n, batches[n], warehouse.read(n)),
+        on_error, retries, retry_delay_s)

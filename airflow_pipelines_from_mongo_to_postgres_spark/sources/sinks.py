@@ -28,6 +28,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from airflow_pipelines_from_mongo_to_postgres_spark.sources.snapshots import _jvm_classes, _jvm_fs
+
 
 #: chars Hive escapes in partition directory names — mirrors
 #: ExternalCatalogUtils.charToEscape (controls, %, and filesystem/shell
@@ -170,7 +172,7 @@ def _stage_pre_state(spark, path: str, current: DataFrame) -> str:
     ``<path>/_pending/<id>/data`` with Spark's own _SUCCESS marker.
     The id is derived from the JVM clock (monotonic enough for one lake's
     sequential batches)."""
-    ts = spark.sparkContext._jvm.java.lang.System.currentTimeMillis()
+    ts = _jvm_classes(spark).System.currentTimeMillis()
     pending = f"{path}/_pending/{ts}"
     current.write.mode("overwrite").parquet(f"{pending}/data")
     return pending
@@ -183,16 +185,12 @@ def _mark_committed(spark, pending: str) -> None:
     overwrite — the commit landed, so restoring the pre-state would
     ROLL BACK committed data. One tiny create, only on the crash-safety
     path."""
-    sc = spark.sparkContext
-    jp = sc._jvm.org.apache.hadoop.fs.Path(f"{pending}/_COMMITTED")
-    fs = jp.getFileSystem(sc._jsc.hadoopConfiguration())
+    fs, jp = _jvm_fs(spark, f"{pending}/_COMMITTED")
     fs.create(jp, True).close()
 
 
 def _delete_dir(spark, p: str) -> None:
-    sc = spark.sparkContext
-    jp = sc._jvm.org.apache.hadoop.fs.Path(p)
-    fs = jp.getFileSystem(sc._jsc.hadoopConfiguration())
+    fs, jp = _jvm_fs(spark, p)
     fs.delete(jp, True)
     parent = jp.getParent()
     if (parent.getName() == "_pending" and fs.exists(parent)
@@ -219,19 +217,17 @@ def lake_recover(spark, path: str, partition_col: str,
 
     Returns the restored partition values. No-op (returns []) on a
     clean lake — safe to call unconditionally at job start."""
-    sc = spark.sparkContext
-    root = sc._jvm.org.apache.hadoop.fs.Path(f"{path}/_pending")
-    fs = root.getFileSystem(sc._jsc.hadoopConfiguration())
+    fs, root = _jvm_fs(spark, f"{path}/_pending")
     if not fs.exists(root):
         return []
     restored = []
     entries = sorted((st.getPath().getName() for st in fs.listStatus(root)
                       if st.isDirectory()), key=str)
+    Path = _jvm_classes(spark).Path
     for name in entries:
         data = f"{path}/_pending/{name}/data"
-        jp = lambda p: sc._jvm.org.apache.hadoop.fs.Path(p)  # noqa: E731
-        committed = fs.exists(jp(f"{path}/_pending/{name}/_COMMITTED"))
-        if not committed and fs.exists(jp(f"{data}/_SUCCESS")):
+        committed = fs.exists(Path(f"{path}/_pending/{name}/_COMMITTED"))
+        if not committed and fs.exists(Path(f"{data}/_SUCCESS")):
             pre = spark.read.parquet(data)
             write_partitioned(pre, path, [partition_col],
                               files_per_partition)
@@ -351,13 +347,13 @@ def lake_apply_cdc(spark, path: str, changes: DataFrame,
             dead_dirs.append(
                 f"{path}/{partition_col}=__HIVE_DEFAULT_PARTITION__")
     write_partitioned(result, path, [partition_col], files_per_partition)
-    sc = spark.sparkContext
+    fs, _ = _jvm_fs(spark, path)
+    classes = _jvm_classes(spark)
     for d in dead_dirs:
         # input_file_name() yields URI-ENCODED paths (space -> %20,
         # the hive escape's own % -> %25); go through java.net.URI so
         # the JVM decodes them into the on-disk directory name
-        jp = sc._jvm.org.apache.hadoop.fs.Path(sc._jvm.java.net.URI(d))
-        jp.getFileSystem(sc._jsc.hadoopConfiguration()).delete(jp, True)
+        fs.delete(classes.Path(classes.URI(d)), True)
     if pending is not None:
         _mark_committed(spark, pending)
         _delete_dir(spark, pending)
@@ -384,9 +380,7 @@ def compact_lake(spark, path: str, partition_col: str,
     Returns the list of compacted partition values (as the strings from
     the directory names; Spark coerces them when filtering).
     """
-    sc = spark.sparkContext
-    jpath = sc._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())
+    fs, jpath = _jvm_fs(spark, path)
     touched = []
     skipped_null = False
     for st in fs.listStatus(jpath):

@@ -67,7 +67,8 @@ def _jvm_classes(spark) -> SimpleNamespace:
             Path=jvm.org.apache.hadoop.fs.Path,
             FileUtil=jvm.org.apache.hadoop.fs.FileUtil,
             IOUtils=jvm.org.apache.commons.io.IOUtils,
-            System=jvm.java.lang.System)
+            System=jvm.java.lang.System,
+            URI=jvm.java.net.URI)
     return classes
 
 

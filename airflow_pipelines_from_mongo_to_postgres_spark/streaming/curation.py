@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from airflow_pipelines_from_mongo_to_postgres_spark.plans.llmdata import curated_fingerprint_agg
+from airflow_pipelines_from_mongo_to_postgres_spark.sources.snapshots import _jvm_classes, _jvm_fs
 
 #: Schema of the documents drop files (matches the fixture tables).
 DOC_SCHEMA = ("doc_id long, text string, lang string, source string, "
@@ -34,9 +35,7 @@ DOC_SCHEMA = ("doc_id long, text string, lang string, source string, "
 
 def _latest_gen(spark: SparkSession, state_dir: str,
                 below: int | None = None) -> int | None:
-    sc = spark.sparkContext
-    jpath = sc._jvm.org.apache.hadoop.fs.Path(state_dir)
-    fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())
+    fs, jpath = _jvm_fs(spark, state_dir)
     if not fs.exists(jpath):
         return None
     # Only COMMITTED generations count: a parquet directory overwrite is
@@ -45,13 +44,12 @@ def _latest_gen(spark: SparkSession, state_dir: str,
     # Spark's committer drops _SUCCESS last — its presence is the commit
     # marker. (Retried batches were already safe via before_epoch.)
     gens = []
+    Path = _jvm_classes(spark).Path
     for st in fs.listStatus(jpath):
         name = st.getPath().getName()
         if not (st.isDirectory() and name.startswith("gen=")):
             continue
-        marker = sc._jvm.org.apache.hadoop.fs.Path(
-            f"{state_dir}/{name}/_SUCCESS")
-        if fs.exists(marker):
+        if fs.exists(Path(f"{state_dir}/{name}/_SUCCESS")):
             gens.append(int(name.split("=", 1)[1]))
     gens = [g for g in gens if below is None or g < below]
     return max(gens) if gens else None

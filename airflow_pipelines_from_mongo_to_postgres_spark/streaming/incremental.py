@@ -24,6 +24,8 @@ from datetime import datetime
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from airflow_pipelines_from_mongo_to_postgres_spark.sources.snapshots import _jvm_classes, _jvm_fs
+
 
 def date_stamped_name(name: str, when: datetime) -> str:
     """``{stem}_{dd_mm_YYYY}{ext}`` — the reference's backup naming
@@ -51,10 +53,7 @@ def stamp_archived_files(spark: SparkSession, archive_dir: str,
     """
     when = when or datetime.now()
     stamp = when.strftime("%d_%m_%Y")
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(archive_dir)
-    fs = root.getFileSystem(conf)
+    fs, root = _jvm_fs(spark, archive_dir)
     if not fs.exists(root):
         return []
     renamed: list[tuple[str, str]] = []
@@ -66,9 +65,9 @@ def stamp_archived_files(spark: SparkSession, archive_dir: str,
         name = p.getName()
         if name.endswith(suffix) and stamp not in name:
             todo.append(p)
+    Path = _jvm_classes(spark).Path
     for p in todo:
-        dst = jvm.org.apache.hadoop.fs.Path(
-            p.getParent(), date_stamped_name(p.getName(), when))
+        dst = Path(p.getParent(), date_stamped_name(p.getName(), when))
         if not fs.exists(dst) and fs.rename(p, dst):
             renamed.append((str(p), str(dst)))
     return renamed

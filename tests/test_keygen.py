@@ -49,14 +49,6 @@ def test_deterministic_under_reshuffle(spark):
     assert sorted((r._id, r.id) for r in a) == sorted((r._id, r.id) for r in b)
 
 
-def test_nondense_path_unique_and_above_max(spark):
-    incoming = spark.createDataFrame(
-        [(f"n{i}", "p") for i in range(20)], ["_id", "payload"])
-    out = assign_surrogate_keys(_existing(spark), incoming, dense=False).collect()
-    ids = [r.id for r in out]
-    assert len(set(ids)) == 20 and min(ids) > 7  # parallel path: unique, > max
-
-
 def test_parallel_dense_ids_equal_serial_window(spark):
     """The scale path must produce EXACTLY the serial window's ids
     (same values, same key order), with no single-partition window in

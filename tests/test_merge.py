@@ -1,13 +1,11 @@
-"""Merge family semantics (SURVEY.md §2.6 M1–M14) on literal frames."""
+"""Merge family semantics (SURVEY.md §2.6 M1–M13) on literal frames; M14
+(null-key quarantine) is covered in tests/test_pipeline.py."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from airflow_pipelines_from_mongo_to_postgres_spark.operators.merge import (
     insert_if_absent,
     merge_upsert,
-    quarantine_split,
 )
 
 COLS = ["_id", "status", "amount", "origin"]
@@ -55,14 +53,6 @@ def test_merge_column_order_agnostic(spark):
     upd = _updates(spark).select("origin", "amount", "status", "_id")
     out = merge_upsert(_target(spark), upd, "_id", ["status"])
     assert {r._id: r.status for r in out.collect()}["b"] == "done"
-
-
-def test_quarantine_split(spark):
-    df = spark.createDataFrame(
-        [("a", 1), (None, 2), ("c", None)], ["_id", "v"])
-    clean, bad = quarantine_split(
-        df, F.col("_id").isNotNull() & F.col("v").isNotNull())
-    assert clean.count() == 1 and bad.count() == 2  # M14: observable drops
 
 
 def test_combine_partial_aggs_multi_batch_equals_full(spark):

@@ -147,6 +147,60 @@ def test_null_key_rows_quarantined_not_merged(spark, tmp_path):
     assert {r._id for r in quarantined.collect()} == {None}
 
 
+
+@pytest.mark.parametrize("phase", ["migrate", "daily_update"])
+def test_table_step_reads_its_source_once(spark, tmp_path, phase):
+    """One pass per table step: the quarantine count rides the table
+    write (no separate count action) and the batch is not pre-sorted, so
+    every source row is evaluated exactly once. The natural key goes
+    through a Python UDF that bumps an accumulator per evaluation."""
+    spec = ENTITIES["organizations"]
+    wh = Warehouse(spark, str(tmp_path))
+    day1 = gen_rows(spec.schema, 40, seed=11)
+    rows = day1
+    if phase == "daily_update":
+        migrate(spark, wh, {"organizations":
+                            spark.createDataFrame(day1, spec.schema)})
+        rows = day1[:15] + gen_rows(spec.schema, 10, seed=12)
+    evals = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def counted(v):
+        evals.add(1)
+        return v
+
+    src = spark.createDataFrame(rows, spec.schema) \
+        .withColumn("_id", counted("_id"))
+    run = migrate if phase == "migrate" else daily_update
+    report = run(spark, wh, {"organizations": src})
+    assert report.ok and report.tables[0].quarantined == 0
+    assert evals.value == len(rows)
+    n = 40 if phase == "migrate" else 50
+    assert sorted(r.id for r in wh.read("organizations").collect()) \
+        == list(range(1, n + 1))
+
+
+@pytest.mark.parametrize("batch", ["all_null_keys", "no_rows"])
+@pytest.mark.parametrize("phase", ["migrate", "daily_update"])
+def test_batch_without_a_valid_key(spark, tmp_path, phase, batch):
+    """A batch in which no row has a key still reports its quarantine
+    count and leaves the table as it was (Spark prunes the empty
+    key-side subtree, metrics and all)."""
+    spec = ENTITIES["organizations"]
+    wh = Warehouse(spark, str(tmp_path))
+    n0 = 0
+    if phase == "daily_update":
+        n0 = 8
+        migrate(spark, wh, {"organizations": spark.createDataFrame(
+            gen_rows(spec.schema, n0, seed=13), spec.schema)})
+    rows = ([dict(r, _id=None) for r in gen_rows(spec.schema, 5, seed=14)]
+            if batch == "all_null_keys" else [])
+    run = migrate if phase == "migrate" else daily_update
+    report = run(spark, wh, {"organizations":
+                             spark.createDataFrame(rows, spec.schema)})
+    assert report.ok and report.tables[0].quarantined == len(rows)
+    assert wh.read("organizations").count() == n0
+
 def test_unknown_source_fails_in_isolation(spark, tmp_path):
     """An unknown source key must be recorded as its OWN table failure
     with on_error='continue' — never abort the siblings before the
