@@ -33,20 +33,22 @@ Scale notes (the 100-TB view):
   appended in ``(start, end]`` — immutable by construction), the same
   exactly-once argument as the change feed (``snap_changes``).
 
-Manifest and parquet I/O here runs in plain Python processes (driver
-AND executors run outside any SparkSession — a DataSource cannot use
-the JVM FS), routed through a small picklable io object per path
-scheme: local / ``file:`` paths take the plain-``open`` fast path,
+The manifest logic — HEAD probe, format gate, segment resolution,
+the OCC commit, the change-feed walk and the delete rule — lives in
+sources/snapshots.py; this module runs those helpers over its own byte
+I/O and keeps only what it alone does: filter translation, Arrow reads
+and task-side Arrow stats. The I/O runs in plain Python processes
+(driver AND executors run outside any SparkSession — a DataSource
+cannot use the JVM FS), routed through a small picklable io object per
+path scheme: local / ``file:`` paths take the plain-``open`` fast path,
 ``scheme://`` paths route through fsspec (``_FsspecIO`` — s3/gs/az/...
 with the scheme's backend installed), and ``mock://`` (with a
 ``mockroot`` option) is a disk-backed test double that exercises the
-identical non-local code path where fsspec isn't available. The format
-itself (sources/snapshots.py) is scheme-agnostic.
+identical non-local code path where fsspec isn't available.
 """
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass
 
@@ -69,15 +71,26 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from airflow_pipelines_from_mongo_to_postgres_spark.sources.snapshots import (
+    CommitConflict,
+    _added_files,
+    _commit,
+    _commit_on_head,
+    _delete_applies,
+    _resolve_layout,
+    _stat_json,
+    _write_segment,
+    current_version,
     partition_values_of,
     prune_files,
+    read_manifest,
 )
 
 
 # --- pluggable filesystem I/O (no SparkSession / JVM FS available) ----------
 # A DataSource's reader/writer runs in plain Python worker processes, so
 # every byte of manifest + parquet I/O goes through one of these small,
-# PICKLABLE io objects (the instance ships to executors with the
+# PICKLABLE io objects — the byte stores the snapshots.py manifest
+# helpers take (the instance ships to executors with the
 # reader/writer): local paths take the plain-open fast path, any
 # ``scheme://`` path routes through fsspec, and the ``mock://`` scheme
 # (activated by a ``mockroot`` option) is a disk-backed stand-in that
@@ -270,60 +283,6 @@ def _io_for(path: str, options=None):
     return _FsspecIO(scheme)
 
 
-def _py_current_version(io, table: str) -> int:
-    head = io.read_text(f"{table}/_manifests/HEAD")
-    v = int(head.strip()) if head else 0
-    # self-healing forward probe, mirroring snapshots.current_version
-    while io.exists(f"{table}/_manifests/v{v + 1:08d}.json"):
-        v += 1
-    return v
-
-
-def _py_read_manifest(io, table: str, version: int | None = None) -> dict:
-    """Resolved manifest (full files list + merged stats), pure Python —
-    the same resolution as snapshots.read_manifest."""
-    v = _py_current_version(io, table) if version is None else int(version)
-    if v == 0:
-        return {"version": 0, "files": [], "parent": None}
-    text = io.read_text(f"{table}/_manifests/v{v:08d}.json")
-    if text is None:
-        raise FileNotFoundError(f"no snapshot v{v} at {table}")
-    m = json.loads(text)
-    if m.get("format", 1) > 2:
-        # format 2 = sequenced deletes (this reader understands them);
-        # a NEWER format must refuse — applying unknown semantics
-        # loosely would silently corrupt results (snapshots._FORMAT_VERSION)
-        raise ValueError(
-            f"{table}: manifest format {m['format']} is newer than this "
-            "reader (supports <= 2) — upgrade the library")
-    if "segments" not in m:
-        out = dict(m)
-        if "file_seqs" not in out:
-            out["file_seqs"] = {f: m.get("version", 0)
-                                for f in m.get("files", [])}
-        return out
-    files: list = []
-    stats: dict = {}
-    seqs: dict = {}
-    seg_seqs = m.get("segment_seqs") or {}
-    for name in m["segments"]:
-        seg = json.loads(io.read_text(f"{table}/_manifests/{name}") or "{}")
-        files += seg.get("files", [])
-        stats.update(seg.get("stats", {}))
-        if "file_seqs" in seg:
-            seqs.update({f: seg["file_seqs"].get(f, 0)
-                         for f in seg.get("files", [])})
-        else:
-            seqs.update({f: seg_seqs.get(name, 0)
-                         for f in seg.get("files", [])})
-    out = dict(m)
-    out["files"] = files
-    out["file_seqs"] = seqs
-    if stats:
-        out["stats"] = stats
-    return out
-
-
 def _infer_partition_type(values: list):
     """Arrow twin of snapshots.partition_spark_type — ONE inference
     rule shared across the JVM and Python readers."""
@@ -410,8 +369,8 @@ class _SnapTableReader(DataSourceReader):
         self.table = options["path"].rstrip("/")
         self.io = _io_for(self.table, options)
         v = options.get("version")
-        self.manifest = _py_read_manifest(self.io, self.table,
-                                          None if v is None else int(v))
+        self.manifest = read_manifest(self.io, self.table,
+                                      None if v is None else int(v))
         self.preds: list = []
         self.ins: list = []
 
@@ -425,20 +384,21 @@ class _SnapTableReader(DataSourceReader):
         files = _prune_with_ins(self.manifest, self.preds, self.ins)
         return [_FilePartition(f) for f in files]
 
-    def _delete_entries(self):
-        """[(cols, seq, key set)] from the snapshot's merge-on-read
-        delete files — key-sized by contract. ``seq`` None = legacy
-        (applies to every file); otherwise the delete applies only to
-        files with data sequence strictly BELOW it (Iceberg-v2 rule,
-        same as snapshots._read_with_deletes)."""
-        entries = []
+    def _delete_keys(self, file: str) -> dict:
+        """{key cols: key set} of the snapshot's merge-on-read deletes
+        that apply to ``file`` (snapshots._delete_applies) — key-sized
+        by contract."""
+        fseq = (self.manifest.get("file_seqs") or {}).get(file, 0)
+        out: dict = {}
         for d in self.manifest.get("deletes") or []:
+            if not _delete_applies(d, fseq):
+                continue
             cols = tuple(d["cols"])
             t = self.io.parquet_read(f"{self.table}/{d['file']}",
                                      columns=list(cols))
-            entries.append((cols, d.get("seq"), set(
-                zip(*[t.column(c).to_pylist() for c in cols]))))
-        return entries
+            out.setdefault(cols, set()).update(
+                zip(*[t.column(c).to_pylist() for c in cols]))
+        return out
 
     def read(self, partition):
         import pyarrow as pa
@@ -460,13 +420,7 @@ class _SnapTableReader(DataSourceReader):
             col = (pa.nulls(table.num_rows, ft) if v is None else
                    pa.array([v] * table.num_rows).cast(ft))
             table = table.append_column(c, col)
-        fseq = (self.manifest.get("file_seqs") or {}).get(partition.file, 0)
-        merged: dict = {}
-        for cols, seq, keys in self._delete_entries():
-            if seq is not None and seq <= fseq:
-                continue        # this file is as new as the delete
-            merged.setdefault(cols, set()).update(keys)
-        for cols, keys in merged.items():
+        for cols, keys in self._delete_keys(partition.file).items():
             if not set(cols) <= set(table.column_names):
                 continue
             mask = [t not in keys for t in
@@ -485,31 +439,15 @@ class _WriteMessage(WriterCommitMessage):
     stats: dict
 
 
-def _py_write_segment(io, table: str, files: list, stats: dict,
-                      file_seqs: dict | None = None) -> str:
-    import uuid as _uuid
-
-    name = f"seg-{_uuid.uuid4().hex}.json"
-    body = {"files": list(files),
-            "stats": {k: v for k, v in (stats or {}).items()
-                      if k in set(files)}}
-    if file_seqs:
-        body["file_seqs"] = {k: v for k, v in file_seqs.items()
-                             if k in set(files)}
-    io.write_text_atomic(f"{table}/_manifests/{name}",
-                         json.dumps(body, indent=1))
-    return name
-
-
 class _SnapTableWriter(DataSourceArrowWriter):
     """Each task writes ONE immutable parquet file into this commit's
     unique data/ subdirectory and ships back (name, rows, per-column
     min/max/null stats computed from the Arrow table — no second pass
-    over the data, unlike the JVM path's stats job). commit() then
-    performs the same manifest protocol as snap_append/snap_overwrite:
-    append commits write one O(delta) segment referenced next to the
-    parent's segments; the version file is created fail-if-exists (the
-    OCC gate) with bounded retries."""
+    over the data, unlike the JVM path's stats job). commit() then runs
+    snap_overwrite's and snap_append's own manifest commit over this
+    writer's io object: an overwrite is one inline ``_commit``; an
+    append writes one O(delta) segment and commits it with
+    ``_commit_on_head`` (OCC gate, bounded retries)."""
 
     def __init__(self, schema: StructType, options, overwrite: bool):
         import uuid as _uuid
@@ -533,8 +471,8 @@ class _SnapTableWriter(DataSourceArrowWriter):
             nulls = arr.null_count
             if t.num_rows > nulls:
                 mm = pc.min_max(arr)
-                mn = _stat_py(mm["min"].as_py())
-                mx = _stat_py(mm["max"].as_py())
+                mn = _stat_json(mm["min"].as_py())
+                mx = _stat_json(mm["max"].as_py())
             else:
                 mn = mx = None
             cols[c] = {"min": mn, "max": mx, "nulls": nulls}
@@ -562,8 +500,6 @@ class _SnapTableWriter(DataSourceArrowWriter):
     def abort(self, messages):
         self._cleanup([m for m in messages if m])
 
-    _MAX_SEGMENTS = 64
-
     def commit(self, messages):
         files = sorted(m.file for m in messages if m and m.file)
         stats = {m.file: m.stats for m in messages
@@ -571,102 +507,26 @@ class _SnapTableWriter(DataSourceArrowWriter):
         if not files and not self.overwrite:
             return                       # empty append: no-op, no commit
         if not self.overwrite:
-            parent = _py_current_version(self.io, self.table)
-            raw = ({} if parent == 0 else json.loads(self.io.read_text(
-                f"{self.table}/_manifests/v{parent:08d}.json") or "{}"))
-            if raw.get("partition_by"):
+            layout = _resolve_layout(self.io, self.table, ())
+            if layout:
                 self._cleanup(messages)
                 raise ValueError(
-                    f"{self.table} is hive-partitioned by "
-                    f"{raw['partition_by']}; the snaptable Python writer "
-                    "appends unpartitioned files — append with "
-                    "snap_append(partition_by=...) or reset the layout "
-                    "with mode('overwrite')")
-        # the delta segment is immutable and uncontended — write it once;
-        # only the version file retries (mirrors snap_append)
-        new_seg = (None if self.overwrite else
-                   _py_write_segment(self.io, self.table, files, stats))
-        last_exc = None
-        for _ in range(5):
-            try:
-                self._commit_once(files, stats, new_seg)
-                return
-            except FileExistsError as exc:   # OCC loser: retry on new head
-                last_exc = exc
-        self._cleanup(messages)
-        raise IOError(
-            f"{self.table}: write lost the commit race 5 times"
-        ) from last_exc
-
-    def _commit_once(self, files: list, stats: dict,
-                     new_seg: str | None) -> None:
-        parent = _py_current_version(self.io, self.table)
-        v = parent + 1
-        manifest = {"version": v, "parent": parent or None,
-                    "note": "pyds overwrite" if self.overwrite
-                    else "pyds append"}
-        if self.overwrite:
-            manifest["files"] = files
-            if stats:
-                manifest["stats"] = stats
-        else:
-            raw = ({} if parent == 0 else
-                   json.loads(self.io.read_text(
-                       f"{self.table}/_manifests/v{parent:08d}.json") or "{}"))
-            seg_seqs = dict(raw.get("segment_seqs") or {})
-            if "segments" in raw:
-                segs = list(raw["segments"])
-            elif raw.get("files"):
-                # inline lift: bake per-file seqs into the segment body
-                # (inline commits materialize deletes → own version is
-                # each file's safe sequence; clones pin explicit seqs)
-                fseqs = raw.get("file_seqs") or {
-                    f: raw.get("version", 0) for f in raw["files"]}
-                segs = [_py_write_segment(self.io, self.table, raw["files"],
-                                          raw.get("stats", {}),
-                                          file_seqs=fseqs)]
+                    f"{self.table} is hive-partitioned by {list(layout)}; "
+                    "the snaptable Python writer appends unpartitioned "
+                    "files — append with snap_append(partition_by=...) or "
+                    "reset the layout with mode('overwrite')")
+        try:
+            if self.overwrite:
+                _commit(self.io, self.table, files, "pyds overwrite",
+                        stats=stats)
             else:
-                segs = []
-            segs.append(new_seg)
-            seg_seqs[new_seg] = v
-            if len(segs) > self._MAX_SEGMENTS:
-                merged_files: list = []
-                merged_stats: dict = {}
-                merged_seqs: dict = {}
-                for s in segs:
-                    seg = json.loads(self.io.read_text(
-                        f"{self.table}/_manifests/{s}") or "{}")
-                    merged_files += seg.get("files", [])
-                    merged_stats.update(seg.get("stats", {}))
-                    if "file_seqs" in seg:
-                        merged_seqs.update({f: seg["file_seqs"].get(f, 0)
-                                            for f in seg.get("files", [])})
-                    else:
-                        merged_seqs.update({f: seg_seqs.get(s, 0)
-                                            for f in seg.get("files", [])})
-                segs = [_py_write_segment(self.io, self.table, merged_files,
-                                          merged_stats,
-                                          file_seqs=merged_seqs)]
-                seg_seqs = {}
-            manifest["segments"] = segs
-            seg_seqs = {k: s for k, s in seg_seqs.items() if k in set(segs)}
-            if seg_seqs:
-                manifest["segment_seqs"] = seg_seqs
-            if raw.get("deletes"):
-                manifest["deletes"] = raw["deletes"]
-        # fail-if-exists create: the OCC gate (mirrors snapshots._commit)
-        self.io.create_text_exclusive(
-            f"{self.table}/_manifests/v{v:08d}.json",
-            json.dumps(manifest, indent=1))
-        self.io.write_text_atomic(f"{self.table}/_manifests/HEAD", str(v))
-
-
-def _stat_py(v):
-    if v is None or isinstance(v, (int, float, str, bool)):
-        return v
-    if hasattr(v, "isoformat"):
-        return v.isoformat()
-    return str(v)
+                _commit_on_head(
+                    self.io, self.table, "pyds append", "append",
+                    new_seg=_write_segment(self.io, self.table, files,
+                                           stats))
+        except CommitConflict:
+            self._cleanup(messages)
+            raise
 
 
 class SnapTableDataSource(DataSource):
@@ -692,7 +552,7 @@ class SnapTableDataSource(DataSource):
         table = self.options["path"].rstrip("/")
         io = _io_for(table, self.options)
         v = self.options.get("version")
-        m = _py_read_manifest(io, table, None if v is None else int(v))
+        m = read_manifest(io, table, None if v is None else int(v))
         return from_arrow_schema(_arrow_schema_of(io, table, m))
 
     def reader(self, schema: StructType):
@@ -714,8 +574,9 @@ class _SnapFeedStreamReader(DataSourceStreamReader):
     appended in ``(start, end]``. Append-only by contract (the
     change-feed rule snap_changes enforces): a version that REMOVES
     files (overwrite/replace/compact) raises — downstreams of a feed
-    must not silently miss rewrites. Delete-key commits add no files
-    and emit nothing (deletes don't flow through an append feed)."""
+    must not silently miss rewrites. Same walk as snap_changes
+    (snapshots._added_files), so a commit that changes the delete list
+    (delete or merge keys) raises too."""
 
     def __init__(self, schema: StructType, options):
         self.schema = schema
@@ -729,29 +590,12 @@ class _SnapFeedStreamReader(DataSourceStreamReader):
         return {"version": self.start_version}
 
     def latestOffset(self):
-        return {"version": _py_current_version(self.io, self.table)}
-
-    def _files_of(self, version: int) -> set:
-        if version == 0:
-            return set()
-        return set(_py_read_manifest(self.io, self.table, version)["files"])
+        return {"version": current_version(self.io, self.table)}
 
     def partitions(self, start: dict, end: dict):
-        lo, hi = start["version"], end["version"]
-        parts = []
-        prev = self._files_of(lo)
-        for v in range(lo + 1, hi + 1):
-            cur = self._files_of(v)
-            removed = prev - cur
-            if removed:
-                raise ValueError(
-                    f"snapfeed: v{v} of {self.table} removed "
-                    f"{len(removed)} file(s) (overwrite/replace/compact) — "
-                    "the append-only change feed cannot represent it; "
-                    "restart the stream from this version")
-            parts += [_FeedPartition(f, v) for f in sorted(cur - prev)]
-            prev = cur
-        return parts or [_FeedPartition("", hi)]
+        parts = [_FeedPartition(f, v) for v, f, _ in _added_files(
+            self.io, self.table, start["version"], end["version"])]
+        return parts or [_FeedPartition("", end["version"])]
 
     def read(self, partition):
         import pyarrow as pa
@@ -803,7 +647,7 @@ class SnapChangeFeedDataSource(DataSource):
 
         table = self.options["path"].rstrip("/")
         io = _io_for(table, self.options)
-        m = _py_read_manifest(io, table)
+        m = read_manifest(io, table)
         base = from_arrow_schema(_arrow_schema_of(io, table, m))
         return StructType(base.fields).add("_commit_version", "long")
 

@@ -159,12 +159,33 @@ def lake_merge(spark, path: str, updates: DataFrame,
     current = spark.read.parquet(path) \
         .filter(F.col(partition_col).isin(touched))
     merged = merge_upsert(current, updates, key, mutable)
+    _overwrite_staged(spark, path, current, merged, partition_col,
+                      files_per_partition, backup)
+    return touched
+
+
+def _overwrite_staged(spark, path: str, current: DataFrame,
+                      result: DataFrame, partition_col: str,
+                      files_per_partition: int, backup: bool,
+                      drop_dirs: Sequence[str] = ()) -> None:
+    """Dynamic-overwrite ``result`` over the touched partitions under the
+    lake's crash protocol: stage ``current`` (their pre-state) to
+    ``_pending``, overwrite, delete ``drop_dirs`` (URI-encoded partition
+    directories the overwrite cannot empty) still inside the crash
+    window, then mark ``_COMMITTED`` and drop the staging."""
     pending = _stage_pre_state(spark, path, current) if backup else None
-    write_partitioned(merged, path, [partition_col], files_per_partition)
+    write_partitioned(result, path, [partition_col], files_per_partition)
+    if drop_dirs:
+        fs, _ = _jvm_fs(spark, path)
+        classes = _jvm_classes(spark)
+        for d in drop_dirs:
+            # input_file_name() yields URI-ENCODED paths (space -> %20,
+            # the hive escape's own % -> %25); go through java.net.URI
+            # so the JVM decodes them into the on-disk directory name
+            fs.delete(classes.Path(classes.URI(d)), True)
     if pending is not None:
         _mark_committed(spark, pending)
         _delete_dir(spark, pending)
-    return touched
 
 
 def _stage_pre_state(spark, path: str, current: DataFrame) -> str:
@@ -315,7 +336,6 @@ def lake_apply_cdc(spark, path: str, changes: DataFrame,
     upserts = changes.filter(F.col(op_col) != "D") \
         .select(*current.columns)
     result = survivors.unionByName(upserts)
-    pending = _stage_pre_state(spark, path, current) if backup else None
     # dynamic overwrite only replaces partitions PRESENT in the result: a
     # partition whose every row was deleted would silently keep its old
     # files. Find those BEFORE the overwrite (the lazy plan reads the
@@ -346,17 +366,8 @@ def lake_apply_cdc(spark, path: str, changes: DataFrame,
             # ambiguity), and isin() can't see null rows to resolve it
             dead_dirs.append(
                 f"{path}/{partition_col}=__HIVE_DEFAULT_PARTITION__")
-    write_partitioned(result, path, [partition_col], files_per_partition)
-    fs, _ = _jvm_fs(spark, path)
-    classes = _jvm_classes(spark)
-    for d in dead_dirs:
-        # input_file_name() yields URI-ENCODED paths (space -> %20,
-        # the hive escape's own % -> %25); go through java.net.URI so
-        # the JVM decodes them into the on-disk directory name
-        fs.delete(classes.Path(classes.URI(d)), True)
-    if pending is not None:
-        _mark_committed(spark, pending)
-        _delete_dir(spark, pending)
+    _overwrite_staged(spark, path, current, result, partition_col,
+                      files_per_partition, backup, drop_dirs=dead_dirs)
     return touched
 
 
@@ -410,11 +421,8 @@ def compact_lake(spark, path: str, partition_col: str,
         sub = spark.read.parquet(path).filter(cond)
         # same crash-safety staging as lake_merge: a crash inside the
         # dynamic-overwrite commit window must not lose the partition
-        pending = _stage_pre_state(spark, path, sub) if backup else None
-        write_partitioned(sub, path, [partition_col], files_per_partition)
-        if pending is not None:
-            _mark_committed(spark, pending)
-            _delete_dir(spark, pending)
+        _overwrite_staged(spark, path, sub, sub, partition_col,
+                          files_per_partition, backup)
     return touched + ([None] if skipped_null else [])
 
 

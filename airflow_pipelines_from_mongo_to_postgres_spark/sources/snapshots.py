@@ -7,13 +7,19 @@ and an atomic single-file rename.
 Why this exists: it is the package's one commit protocol for tables it
 owns — the pipeline warehouse (plans/pipeline.py), ``$out``/``$merge``
 snap targets and the streaming exactly-once appends all commit here.
-Data files are IMMUTABLE and a commit is one manifest rename: readers
-resolve a manifest once and see a consistent file set forever
-(snapshot isolation); a crashed writer leaves only orphan data files
-that ``vacuum`` reclaims — no recovery step, nothing a reader can ever
-observe half-done. The ``lake_*`` family (sources/sinks.py) keeps its
-own ``_pending``/``_COMMITTED`` staging protocol because its contract
-is a plain hive tree that other engines read in place.
+It is also the only code that reads or writes ``_manifests/``: the
+manifest helpers (``current_version``, ``read_manifest``, ``_commit``,
+``_commit_on_head``, ...) take a SparkSession or a byte store
+(``_store``). A SparkSession's Hadoop FileSystem is one store; the
+``snaptable``/``snapfeed`` DataSource (sources/pyds.py) is a second
+byte store over the same code, its Python-process io objects. Data
+files are IMMUTABLE and a commit is one manifest rename: readers resolve a manifest once and see a
+consistent file set forever (snapshot isolation); a crashed writer
+leaves only orphan data files that ``vacuum`` reclaims — no recovery
+step, nothing a reader can ever observe half-done. The ``lake_*``
+family (sources/sinks.py) keeps its own ``_pending``/``_COMMITTED``
+staging protocol because its contract is a plain hive tree that other
+engines read in place.
 
 Layout::
 
@@ -78,19 +84,6 @@ def _jvm_fs(spark, p: str):
     return jp.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), jp
 
 
-def _read_text(spark, p: str) -> str | None:
-    fs, jp = _jvm_fs(spark, p)
-    if not fs.exists(jp):
-        return None
-    stream = fs.open(jp)
-    try:
-        # one JVM call for the whole file (a byte-at-a-time .read() loop
-        # would be one py4j round trip per byte)
-        return _jvm_classes(spark).IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-
-
 def _write_text_atomic(spark, p: str, text: str) -> None:
     """Write via temp file + rename — the single atomic primitive the
     whole commit protocol rests on (atomic on HDFS/local; on S3 use a
@@ -107,14 +100,63 @@ def _write_text_atomic(spark, p: str, text: str) -> None:
         raise IOError(f"atomic rename failed for {p}")
 
 
+class _JvmStore:
+    """The byte store the manifest helpers run on inside a SparkSession:
+    the session JVM's Hadoop FileSystem. ``sources/pyds.py``'s io
+    objects are the Python-process stores with the same four methods
+    (``read_text``, ``exists``, ``write_text_atomic``,
+    ``create_text_exclusive`` — the last raises ``FileExistsError``)."""
+
+    def __init__(self, spark):
+        self.spark = spark
+
+    def read_text(self, p: str) -> str | None:
+        fs, jp = _jvm_fs(self.spark, p)
+        if not fs.exists(jp):
+            return None
+        stream = fs.open(jp)
+        try:
+            # one JVM call for the whole file (a byte-at-a-time .read()
+            # loop would be one py4j round trip per byte)
+            return _jvm_classes(self.spark).IOUtils.toString(stream, "UTF-8")
+        finally:
+            stream.close()
+
+    def exists(self, p: str) -> bool:
+        fs, jp = _jvm_fs(self.spark, p)
+        return fs.exists(jp)
+
+    def write_text_atomic(self, p: str, text: str) -> None:
+        _write_text_atomic(self.spark, p, text)
+
+    def create_text_exclusive(self, p: str, text: str) -> None:
+        fs, jp = _jvm_fs(self.spark, p)
+        try:
+            out = fs.create(jp, False)          # fail-if-exists
+        except Exception as exc:
+            raise FileExistsError(p) from exc
+        try:
+            out.write(bytearray(text.encode("utf-8")))
+        finally:
+            out.close()
+
+
+def _store(spark):
+    """The byte store behind a manifest helper's first argument: a
+    SparkSession is wrapped in a ``_JvmStore``; a store (the pyds io
+    objects) is used as given. Helpers pass their argument on
+    unwrapped, so patching a helper sees what its caller passed."""
+    return _JvmStore(spark) if isinstance(spark, SparkSession) else spark
+
+
 #: Highest manifest format this reader understands. Format 2 = data-
 #: sequenced equality deletes (Iceberg-v2 rule: a delete applies only
 #: to files sequenced strictly before it). A manifest that RELIES on
 #: sequence semantics stamps ``"format": 2`` so a pre-sequence reader
-#: (older library build, stale pyds copy) REFUSES it instead of
-#: applying every delete to every file and silently dropping a MERGE's
-#: replacement rows. Manifests without sequenced deletes stay
-#: unstamped (format 1) — readable by every build.
+#: (older library build) REFUSES it instead of applying every delete to
+#: every file and silently dropping a MERGE's replacement rows.
+#: Manifests without sequenced deletes stay unstamped (format 1) —
+#: readable by every build.
 _FORMAT_VERSION = 2
 
 
@@ -131,28 +173,27 @@ def _manifest_path(table: str, version: int) -> str:
     return f"{table}/_manifests/v{version:08d}.json"
 
 
-def current_version(spark: SparkSession, table: str) -> int:
+def current_version(spark, table: str) -> int:
     """HEAD, self-healing forward: a writer that crashed between its
     manifest create and the HEAD update leaves HEAD one behind — probe
     for newer manifests so the next reader/writer adopts (and re-pins)
     the true head instead of conflicting forever."""
-    head = _read_text(spark, f"{table}/_manifests/HEAD")
+    store = _store(spark)
+    head = store.read_text(f"{table}/_manifests/HEAD")
     v = int(head.strip()) if head else 0
-    fs, _ = _jvm_fs(spark, table)
-    Path = _jvm_classes(spark).Path
-    while fs.exists(Path(_manifest_path(table, v + 1))):
+    while store.exists(_manifest_path(table, v + 1)):
         v += 1
     return v
 
 
-def _read_raw_manifest(spark: SparkSession, table: str,
+def _read_raw_manifest(store, table: str,
                        version: int | None = None) -> dict:
     """The version file EXACTLY as committed — segment refs unresolved.
     Writers use this to reuse the parent's segment list at O(refs) cost."""
-    v = current_version(spark, table) if version is None else version
+    v = current_version(store, table) if version is None else version
     if v == 0:
         return {"version": 0, "files": [], "parent": None, "note": "empty"}
-    text = _read_text(spark, _manifest_path(table, v))
+    text = _store(store).read_text(_manifest_path(table, v))
     if text is None:
         raise FileNotFoundError(f"no snapshot v{v} at {table}")
     return _check_format(json.loads(text), table)
@@ -162,7 +203,7 @@ def _segment_path(table: str, name: str) -> str:
     return f"{table}/_manifests/{name}"
 
 
-def _write_segment(spark: SparkSession, table: str, files: list,
+def _write_segment(store, table: str, files: list,
                    stats: dict, file_seqs: dict | None = None) -> str:
     """One immutable segment manifest: the (files, per-file stats) of a
     single commit's delta. Uniquely named, so no OCC needed — only the
@@ -179,20 +220,42 @@ def _write_segment(spark: SparkSession, table: str, files: list,
     if file_seqs:
         body["file_seqs"] = {k: v for k, v in file_seqs.items()
                              if k in set(files)}
-    _write_text_atomic(spark, _segment_path(table, name),
-                       json.dumps(body, indent=1))
+    _store(store).write_text_atomic(_segment_path(table, name),
+                                    json.dumps(body, indent=1))
     return name
 
 
-def _read_segment(spark: SparkSession, table: str, name: str) -> dict:
-    text = _read_text(spark, _segment_path(table, name))
+def _read_segment(store, table: str, name: str) -> dict:
+    text = _store(store).read_text(_segment_path(table, name))
     if text is None:
         raise FileNotFoundError(f"missing segment {name} at {table}")
     return json.loads(text)
 
 
-def read_manifest(spark: SparkSession, table: str,
-                  version: int | None = None) -> dict:
+def _resolve_segments(store, table: str, segs: list,
+                      seg_seqs: dict) -> tuple:
+    """``(files, stats, file_seqs)`` over segment manifests ``segs``.
+    A multi-commit segment (lift/coalesce) carries per-file sequences
+    in its body; a one-commit segment takes its sequence from the
+    version file's ``segment_seqs``, and a legacy segment without one
+    reads as 0 (oldest: every delete applies — the pre-sequence
+    behavior)."""
+    files: list = []
+    stats: dict = {}
+    seqs: dict = {}
+    for name in segs:
+        seg = _read_segment(store, table, name)
+        files += seg["files"]
+        stats.update(seg.get("stats", {}))
+        if "file_seqs" in seg:
+            seqs.update({f: seg["file_seqs"].get(f, 0)
+                         for f in seg["files"]})
+        else:
+            seqs.update({f: seg_seqs.get(name, 0) for f in seg["files"]})
+    return files, stats, seqs
+
+
+def read_manifest(spark, table: str, version: int | None = None) -> dict:
     """Resolved manifest: always carries the FULL ``files`` list and
     merged ``stats``, whether the version file inlines them (legacy /
     bootstrap) or references segment manifests (the append path — each
@@ -210,24 +273,8 @@ def read_manifest(spark: SparkSession, table: str,
             out["file_seqs"] = {f: m["version"]
                                 for f in m.get("files", [])}
         return out
-    files: list = []
-    stats: dict = {}
-    seqs: dict = {}
-    seg_seqs = m.get("segment_seqs") or {}
-    for name in m["segments"]:
-        seg = _read_segment(spark, table, name)
-        files += seg["files"]
-        stats.update(seg.get("stats", {}))
-        if "file_seqs" in seg:
-            # multi-commit segment (lift/coalesce): per-file seqs baked
-            # into the body at the time the source seqs were known
-            seqs.update({f: seg["file_seqs"].get(f, 0)
-                         for f in seg["files"]})
-        else:
-            # legacy segments without a recorded sequence read as 0
-            # (oldest: every delete applies — the pre-sequence
-            # behavior, unchanged)
-            seqs.update({f: seg_seqs.get(name, 0) for f in seg["files"]})
+    files, stats, seqs = _resolve_segments(
+        spark, table, m["segments"], m.get("segment_seqs") or {})
     out = dict(m)
     out["files"] = files
     out["file_seqs"] = seqs
@@ -574,7 +621,7 @@ class CommitConflict(Exception):
     its commit attempt. Retry: re-read, re-derive, re-commit."""
 
 
-def _commit(spark: SparkSession, table: str, files: list | None,
+def _commit(store, table: str, files: list | None,
             note: str, expected_parent: int | None = None,
             txn: str | None = None, stats: dict | None = None,
             segments: list | None = None,
@@ -602,7 +649,7 @@ def _commit(spark: SparkSession, table: str, files: list | None,
                 f"_commit: {seq_name} must be a list of str names, got "
                 f"{type(seq_val).__name__} of "
                 f"{[type(x).__name__ for x in seq_val][:3]}")
-    parent = current_version(spark, table)
+    parent = current_version(store, table)
     if expected_parent is not None and parent != expected_parent:
         raise CommitConflict(
             f"{table}: head moved to v{parent} (derived from "
@@ -650,17 +697,14 @@ def _commit(spark: SparkSession, table: str, files: list | None,
         # partition columns; pruning needs nothing extra (partition
         # values are already per-file min=max stats entries)
         manifest["partition_by"] = list(partition_by)
-    fs, mp = _jvm_fs(spark, _manifest_path(table, v))
     try:
-        out = fs.create(mp, False)          # fail-if-exists: the OCC gate
-    except Exception as exc:
+        # fail-if-exists create: the OCC gate
+        _store(store).create_text_exclusive(_manifest_path(table, v),
+                                            json.dumps(manifest, indent=1))
+    except FileExistsError as exc:
         raise CommitConflict(
             f"{table}: v{v} already committed by another writer") from exc
-    try:
-        out.write(bytearray(json.dumps(manifest, indent=1).encode("utf-8")))
-    finally:
-        out.close()
-    _write_text_atomic(spark, f"{table}/_manifests/HEAD", str(v))
+    _store(store).write_text_atomic(f"{table}/_manifests/HEAD", str(v))
     return v
 
 
@@ -668,7 +712,7 @@ _APPEND_RETRIES = 5
 _MAX_SEGMENTS = 64
 
 
-def _parent_segments(spark: SparkSession, table: str, raw: dict) -> tuple:
+def _parent_segments(store, table: str, raw: dict) -> tuple:
     """``(segment refs, segment_seqs)`` for the parent snapshot. A
     legacy inline manifest (or the replace/compact paths, which commit
     inline) is lifted into one segment so the child append stays
@@ -682,42 +726,29 @@ def _parent_segments(spark: SparkSession, table: str, raw: dict) -> tuple:
         return list(raw["segments"]), dict(raw.get("segment_seqs") or {})
     fseqs = raw.get("file_seqs") or {f: raw["version"]
                                      for f in raw["files"]}
-    return [_write_segment(spark, table, raw["files"],
+    return [_write_segment(store, table, raw["files"],
                            raw.get("stats", {}), file_seqs=fseqs)], {}
 
 
-def _coalesce_segments(spark: SparkSession, table: str,
-                       segs: list, seg_seqs: dict) -> str:
+def _coalesce_segments(store, table: str, segs: list, seg_seqs: dict) -> str:
     """Merge many segment manifests into one — amortized maintenance
     (every _MAX_SEGMENTS appends) that keeps read-side resolution
     O(_MAX_SEGMENTS) small reads instead of O(commits). The merged
     segment spans many commits, so per-file sequences (from each source
     segment's body or the version file's ``segment_seqs``) are baked
     into its body."""
-    files: list = []
-    stats: dict = {}
-    fseqs: dict = {}
-    for name in segs:
-        seg = _read_segment(spark, table, name)
-        files += seg["files"]
-        stats.update(seg.get("stats", {}))
-        if "file_seqs" in seg:
-            fseqs.update({f: seg["file_seqs"].get(f, 0)
-                          for f in seg["files"]})
-        else:
-            fseqs.update({f: seg_seqs.get(name, 0) for f in seg["files"]})
-    return _write_segment(spark, table, files, stats, file_seqs=fseqs)
+    files, stats, fseqs = _resolve_segments(store, table, segs, seg_seqs)
+    return _write_segment(store, table, files, stats, file_seqs=fseqs)
 
 
-def _resolve_layout(spark: SparkSession, table: str,
-                    partition_by: tuple) -> tuple:
+def _resolve_layout(store, table: str, partition_by: tuple) -> tuple:
     """The ONE hive layout a snapshot's live files may use: mixing
     partitioned and unpartitioned files (or two different partition
     specs) in one manifest would fail Spark's partition discovery at
     read time, so appends inherit the table's recorded layout when none
     is given and REFUSE a conflicting explicit one (relayout goes
     through snap_overwrite, which resets it)."""
-    cur = _read_raw_manifest(spark, table)
+    cur = _read_raw_manifest(store, table)
     recorded = tuple(cur.get("partition_by") or ())
     if not partition_by:
         return recorded
@@ -729,7 +760,7 @@ def _resolve_layout(spark: SparkSession, table: str,
     return tuple(partition_by)
 
 
-def _commit_on_head(spark: SparkSession, table: str, note: str, op: str,
+def _commit_on_head(store, table: str, note: str, op: str,
                     new_seg: str | None = None, key_files: list = (),
                     key_cols: list = (), partition_by: tuple | None = None,
                     txn: str | None = None) -> int | None:
@@ -743,20 +774,20 @@ def _commit_on_head(spark: SparkSession, table: str, note: str, op: str,
     None keeps the head's layout; with ``txn``, a txn already in history
     (possibly the racer this commit lost to) makes it a no-op."""
     for _ in range(_APPEND_RETRIES):
-        if txn is not None and txn in committed_txns(spark, table):
+        if txn is not None and txn in committed_txns(store, table):
             return None
-        raw = _read_raw_manifest(spark, table)
-        segs, seg_seqs = _parent_segments(spark, table, raw)
+        raw = _read_raw_manifest(store, table)
+        segs, seg_seqs = _parent_segments(store, table, raw)
         v = raw["version"] + 1
         if new_seg is not None:
             segs, seg_seqs = segs + [new_seg], {**seg_seqs, new_seg: v}
         if len(segs) > _MAX_SEGMENTS:
-            segs = [_coalesce_segments(spark, table, segs, seg_seqs)]
+            segs = [_coalesce_segments(store, table, segs, seg_seqs)]
             seg_seqs = {}
         dels = list(raw.get("deletes") or []) + [
             {"file": n, "cols": list(key_cols), "seq": v} for n in key_files]
         try:
-            return _commit(spark, table, None, note, txn=txn,
+            return _commit(store, table, None, note, txn=txn,
                            expected_parent=raw["version"], segments=segs,
                            deletes=dels or None,
                            partition_by=(raw.get("partition_by")
@@ -954,6 +985,13 @@ def _apply_delete_entries(spark: SparkSession, table: str, df: DataFrame,
     return df
 
 
+def _delete_applies(d: dict, file_seq) -> bool:
+    """The data-sequence rule (Iceberg v2), for every reader: a delete
+    with sequence s applies only to files sequenced strictly BEFORE s;
+    a legacy delete without ``seq`` applies to every file."""
+    return d.get("seq") is None or d["seq"] > file_seq
+
+
 def _read_with_deletes(spark: SparkSession, table: str, files: list,
                        manifest: dict,
                        merge_schema: bool = False) -> DataFrame:
@@ -975,9 +1013,8 @@ def _read_with_deletes(spark: SparkSession, table: str, files: list,
     fseqs = manifest.get("file_seqs") or {}
     groups: dict = {}
     for f in files:
-        s = fseqs.get(f, 0)
         key = tuple(i for i, d in enumerate(dels)
-                    if d.get("seq") is None or d["seq"] > s)
+                    if _delete_applies(d, fseqs.get(f, 0)))
         groups.setdefault(key, []).append(f)
     out = None
     for key in sorted(groups):
@@ -990,7 +1027,7 @@ def _read_with_deletes(spark: SparkSession, table: str, files: list,
     return out
 
 
-def committed_txns(spark: SparkSession, table: str) -> set:
+def committed_txns(spark, table: str) -> set:
     """Transaction ids recorded by ``snap_append_txn`` across the
     retained history (walk is O(versions), driver-side, manifest-sized).
     """
@@ -1114,44 +1151,54 @@ def snap_restore(spark: SparkSession, table: str, version: int,
         file_seqs=m.get("file_seqs") if dels else None)
 
 
+def _added_files(spark, table: str, from_version: int,
+                 to_version: int) -> list:
+    """``[(version, file, partition_by)]`` for the data files each commit
+    in ``(from_version, to_version]`` ADDED, in commit order — the one
+    walk behind both change feeds (``snap_changes`` here, ``snapfeed``
+    in sources/pyds.py), with ``partition_by`` from the commit that
+    added the file. Append-only by contract (Delta's CDF rule for
+    non-append commits): a commit that REMOVED files (overwrite/
+    replace_where/compact) or changed the delete list (delete or merge
+    keys) raises, since added files then no longer mean added rows."""
+    base = read_manifest(spark, table, from_version)
+    prev = set(base["files"])
+    prev_dels = [d["file"] for d in base.get("deletes", [])]
+    added: list = []
+    for v in range(from_version + 1, to_version + 1):
+        m = read_manifest(spark, table, v)
+        cur = set(m["files"])
+        cur_dels = [d["file"] for d in m.get("deletes", [])]
+        if prev - cur:
+            raise ValueError(
+                f"{table} v{v} removed files (non-append commit) — the "
+                "append-only change feed is undefined; re-read the "
+                "snapshot")
+        if cur_dels != prev_dels:
+            raise ValueError(
+                f"{table} v{v} changed the delete list (merge-on-read "
+                "delete, merge or compaction) — added files no longer "
+                "mean added rows, so the append-only change feed is "
+                "undefined; re-read the snapshot")
+        pb = tuple(m.get("partition_by") or ())
+        added += [(v, f, pb) for f in sorted(cur - prev)]
+        prev, prev_dels = cur, cur_dels
+    return added
+
+
 def snap_changes(spark: SparkSession, table: str,
                  from_version: int, to_version: int | None = None) -> DataFrame:
     """Change feed for append-style tables: rows in files ADDED by
     commits in (from_version, to_version] — the incremental-consumer
     contract (\"give me what landed since v\"). Cost is a read of only
     the added files, never the table. Raises if any commit in the range
-    REMOVED files (overwrite/replace_where/compact rewrite history, so
-    added-files no longer mean added-rows; consumers must re-read the
-    snapshot instead — same rule as Delta's CDF for non-append commits).
+    removed files or changed the delete list (``_added_files``);
+    consumers must re-read the snapshot instead.
     """
     to_v = current_version(spark, table) if to_version is None else to_version
     if to_v < from_version:
         raise ValueError(f"to_version {to_v} < from_version {from_version}")
-    base_m = read_manifest(spark, table, from_version) \
-        if from_version else {"files": []}
-    prev = set(base_m["files"])
-    prev_dels = [d["file"] for d in base_m.get("deletes", [])]
-    added: list = []
-    layout_of: dict = {}  # file -> partition_by of the commit that ADDED it
-    for v in range(from_version + 1, to_v + 1):
-        m = read_manifest(spark, table, v)
-        cur = set(m["files"])
-        cur_dels = [d["file"] for d in m.get("deletes", [])]
-        if prev - cur:
-            raise ValueError(
-                f"{table} v{v} removed files (non-append commit) — "
-                "change feed undefined; re-read the snapshot")
-        if cur_dels != prev_dels:
-            raise ValueError(
-                f"{table} v{v} changed the delete list (merge-on-read "
-                "delete or compaction) — added-files no longer mean "
-                "added-rows; re-read the snapshot")
-        new = sorted(cur - prev)
-        pb = tuple(m.get("partition_by") or ())
-        for f in new:
-            layout_of[f] = pb
-        added += new
-        prev, prev_dels = cur, cur_dels
+    added = _added_files(spark, table, from_version, to_v)
     if not added:
         return read_snapshot(spark, table, version=to_v).limit(0)
     # partition_by is resolved PER SOURCE VERSION, not from HEAD: if the
@@ -1161,8 +1208,8 @@ def snap_changes(spark: SparkSession, table: str,
     # schema divergence surfaces as its clear error rather than NULLed
     # partition columns.
     groups: dict = {}
-    for f in added:
-        groups.setdefault(layout_of[f], []).append(f)
+    for _, f, pb in added:
+        groups.setdefault(pb, []).append(f)
     out = None
     for pb in sorted(groups):
         df = _read_files(spark, table, groups[pb], list(pb) or None)

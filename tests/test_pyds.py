@@ -215,18 +215,46 @@ def test_snaptable_writer_stats_enable_pruning(registered, tmp_path):
     assert len(r.partitions()) == 1
 
 
-def test_snapfeed_refuses_rewrites(registered, tmp_path):
+@pytest.mark.parametrize("rewrite", ["overwrite", "merge_keys",
+                                     "delete_keys"])
+def test_snapfeed_refuses_rewrites(registered, tmp_path, rewrite):
+    """The feed is append-only like snap_changes: a commit that removes
+    files or changes the delete list raises instead of delivering a
+    merge's replacement rows as appends (the old row never retracted)."""
     spark = registered
     t = str(tmp_path / "tab")
     S.snap_append(spark, t, spark.createDataFrame(
         [("a", 1)], "k string, v int"))
-    S.snap_overwrite(spark, t, spark.createDataFrame(
-        [("z", 9)], "k string, v int"))
+    if rewrite == "overwrite":
+        S.snap_overwrite(spark, t, spark.createDataFrame(
+            [("z", 9)], "k string, v int"))
+    elif rewrite == "merge_keys":
+        S.snap_merge_keys(spark, t, spark.createDataFrame(
+            [("a", 9)], "k string, v int"), ["k"])
+    else:
+        S.snap_delete_keys(spark, t, spark.createDataFrame(
+            [("a",)], "k string"), ["k"])
     rdr = pyds._SnapFeedStreamReader(
         spark.read.format("snaptable").load(t).schema,
         {"path": t, "startingversion": "0"})
     with pytest.raises(ValueError, match="append-only"):
         rdr.partitions({"version": 0}, {"version": 2})
+    with pytest.raises(ValueError):
+        S.snap_changes(spark, t, 0, 2)
+
+
+def test_one_manifest_implementation():
+    """sources/snapshots.py is the only module that knows the manifest
+    layout: no other package module names the ``_manifests/`` directory
+    (the DataSource runs the snapshots.py helpers over its byte I/O)."""
+    import pathlib
+
+    import airflow_pipelines_from_mongo_to_postgres_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    naming = sorted(str(p.relative_to(root)) for p in root.rglob("*.py")
+                    if "_manifests/" in p.read_text(encoding="utf-8"))
+    assert naming == ["sources/snapshots.py"], naming
 
 
 def test_snaptable_nonlocal_scheme_roundtrip(registered, tmp_path):

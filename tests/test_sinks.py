@@ -1332,7 +1332,8 @@ def test_manifest_format_version_gate(spark, tmp_path):
     both readers refuse a NEWER format instead of misreading it (a
     pre-sequence reader applying every delete to every file would
     silently drop a MERGE's replacement rows). Plain appends stay
-    unstamped — readable by every build."""
+    unstamped — readable by every build — and an append that carries
+    sequenced deletes forward keeps the stamp, whichever writer made it."""
     import json
 
     import pytest
@@ -1342,14 +1343,18 @@ def test_manifest_format_version_gate(spark, tmp_path):
         snapshots as S,
     )
 
+    pyds.register_python_sources(spark)
     t = str(tmp_path / "fmt")
     S.snap_append(spark, t, spark.createDataFrame(
         [("a", 1)], "k string, v int"))
     assert "format" not in S._read_raw_manifest(spark, t)
     S.snap_merge_keys(spark, t, spark.createDataFrame(
         [("a", 2)], "k string, v int"), ["k"])
+    assert S._read_raw_manifest(spark, t)["format"] == 2
+    spark.createDataFrame([("b", 3)], "k string, v int") \
+        .write.format("snaptable").mode("append").save(t)
     raw = S._read_raw_manifest(spark, t)
-    assert raw["format"] == 2
+    assert raw["note"] == "pyds append" and raw["format"] == 2
 
     # hand-write a FUTURE-format head: both readers must refuse
     doctored = dict(raw, format=3, version=raw["version"] + 1,
@@ -1358,8 +1363,8 @@ def test_manifest_format_version_gate(spark, tmp_path):
                          json.dumps(doctored))
     with pytest.raises(ValueError, match="format 3"):
         S.read_manifest(spark, t)
-    with pytest.raises(ValueError, match="format 3"):
-        pyds._py_read_manifest(pyds._io_for(t), t)
+    with pytest.raises(Exception, match="format 3"):
+        spark.read.format("snaptable").load(t).collect()
 
 
 def test_snap_merge_keys_duplicate_batch_guard(spark, tmp_path):
