@@ -27,7 +27,8 @@ Scale notes (the 100-TB view):
 - ``read()`` streams pyarrow record batches (Arrow pages back to the
   JVM, no per-row Python), applying the snapshot's equality-delete keys
   (merge-on-read) as a per-batch anti-filter; delete files are
-  key-sized, loaded once per task.
+  key-sized, read once per scan by ``partitions()`` on the driver and
+  shipped with the file partitions.
 - The stream reader's offset IS the snapshot version: Spark's
   checkpoint makes re-delivery impossible (a micro-batch is the files
   appended in ``(start, end]`` — immutable by construction), the same
@@ -318,6 +319,7 @@ def _arrow_schema_of(io, table: str, manifest: dict):
 @dataclass
 class _FilePartition(InputPartition):
     file: str
+    deletes: dict      # {key cols: key set} applying to ``file``
 
 
 # --- filter translation: Spark pushed filters -> prune predicates -----------
@@ -381,24 +383,33 @@ class _SnapTableReader(DataSourceReader):
         return filters
 
     def partitions(self):
+        """One partition per surviving file, carrying the keys of the
+        merge-on-read deletes that apply to it (snapshots.
+        _delete_applies). Each delete file is read once per scan here,
+        and files with the same applicable deletes share one key dict."""
         files = _prune_with_ins(self.manifest, self.preds, self.ins)
-        return [_FilePartition(f) for f in files]
-
-    def _delete_keys(self, file: str) -> dict:
-        """{key cols: key set} of the snapshot's merge-on-read deletes
-        that apply to ``file`` (snapshots._delete_applies) — key-sized
-        by contract."""
-        fseq = (self.manifest.get("file_seqs") or {}).get(file, 0)
-        out: dict = {}
-        for d in self.manifest.get("deletes") or []:
-            if not _delete_applies(d, fseq):
-                continue
-            cols = tuple(d["cols"])
-            t = self.io.parquet_read(f"{self.table}/{d['file']}",
-                                     columns=list(cols))
-            out.setdefault(cols, set()).update(
-                zip(*[t.column(c).to_pylist() for c in cols]))
-        return out
+        dels = self.manifest.get("deletes") or []
+        fseqs = self.manifest.get("file_seqs") or {}
+        keys: dict = {}        # delete index -> key set
+        shared: dict = {}      # applicable delete indices -> {cols: keys}
+        parts = []
+        for f in files:
+            applicable = tuple(i for i, d in enumerate(dels)
+                               if _delete_applies(d, fseqs.get(f, 0)))
+            if applicable not in shared:
+                merged: dict = {}
+                for i in applicable:
+                    cols = tuple(dels[i]["cols"])
+                    if i not in keys:
+                        t = self.io.parquet_read(
+                            f"{self.table}/{dels[i]['file']}",
+                            columns=list(cols))
+                        keys[i] = set(zip(*[t.column(c).to_pylist()
+                                            for c in cols]))
+                    merged.setdefault(cols, set()).update(keys[i])
+                shared[applicable] = merged
+            parts.append(_FilePartition(f, shared[applicable]))
+        return parts
 
     def read(self, partition):
         import pyarrow as pa
@@ -420,7 +431,7 @@ class _SnapTableReader(DataSourceReader):
             col = (pa.nulls(table.num_rows, ft) if v is None else
                    pa.array([v] * table.num_rows).cast(ft))
             table = table.append_column(c, col)
-        for cols, keys in self._delete_keys(partition.file).items():
+        for cols, keys in partition.deletes.items():
             if not set(cols) <= set(table.column_names):
                 continue
             mask = [t not in keys for t in

@@ -6,7 +6,9 @@ and an atomic single-file rename.
 
 Why this exists: it is the package's one commit protocol for tables it
 owns — the pipeline warehouse (plans/pipeline.py), ``$out``/``$merge``
-snap targets and the streaming exactly-once appends all commit here.
+snap targets and the streaming exactly-once appends (the NDV, DQ and
+VARIANT-ingest ledgers, and the curation and SemDeDup state ledgers of
+streaming/curation.py) all commit here.
 It is also the only code that reads or writes ``_manifests/``: the
 manifest helpers (``current_version``, ``read_manifest``, ``_commit``,
 ``_commit_on_head``, ...) take a SparkSession or a byte store
@@ -636,7 +638,10 @@ def _commit(store, table: str, files: list | None,
     new head. ``expected_parent`` additionally pins the snapshot the
     writer DERIVED its files from (a lost-update guard for
     read-modify-write commits like replace_where; append-only commits
-    can leave it None)."""
+    can leave it None). A pinned parent is trusted without re-probing
+    HEAD: the fail-if-exists create of v(parent+1) is already the gate,
+    so a stale pin surfaces as CommitConflict and the caller's retry
+    re-reads the (self-healed) head."""
     # malformed manifests must die at write time, not at a later read:
     # a files list that isn't flat strings (e.g. the (names, stats)
     # tuple _write_data_files returns, passed un-unpacked) would
@@ -649,11 +654,8 @@ def _commit(store, table: str, files: list | None,
                 f"_commit: {seq_name} must be a list of str names, got "
                 f"{type(seq_val).__name__} of "
                 f"{[type(x).__name__ for x in seq_val][:3]}")
-    parent = current_version(store, table)
-    if expected_parent is not None and parent != expected_parent:
-        raise CommitConflict(
-            f"{table}: head moved to v{parent} (derived from "
-            f"v{expected_parent}) — re-read and retry")
+    parent = (current_version(store, table) if expected_parent is None
+              else expected_parent)
     v = parent + 1
     manifest = {"version": v, "parent": parent or None, "note": note}
     if segments is not None:
@@ -703,7 +705,8 @@ def _commit(store, table: str, files: list | None,
                                             json.dumps(manifest, indent=1))
     except FileExistsError as exc:
         raise CommitConflict(
-            f"{table}: v{v} already committed by another writer") from exc
+            f"{table}: head moved — v{v} already committed by another "
+            "writer; re-read and retry") from exc
     _store(store).write_text_atomic(f"{table}/_manifests/HEAD", str(v))
     return v
 

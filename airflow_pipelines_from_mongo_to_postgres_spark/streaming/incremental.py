@@ -73,10 +73,22 @@ def stamp_archived_files(spark: SparkSession, archive_dir: str,
     return renamed
 
 
+def _stream_id(checkpoint_dir: str, stream_id: str | None = None) -> str:
+    """The ``<sid>`` of a stream's exactly-once txn ids
+    (``"<prefix>-<sid>-epoch-<epoch>"``). Epoch ids are only unique PER
+    CHECKPOINT, so a bare epoch key would make a rebuilt checkpoint dir,
+    or a second stream feeding the same table, restart at epoch 0 and
+    silently no-op against history: the default is a hash of
+    ``checkpoint_dir`` (distinct checkpoints never collide), and a
+    caller-supplied ``stream_id`` survives checkpoint relocation."""
+    return stream_id or hashlib.sha256(
+        checkpoint_dir.encode("utf-8")).hexdigest()[:16]
+
+
 def run_incremental_merge(
     spark: SparkSession,
     drop_dir: str,
-    schema: StructType,
+    schema: StructType | str,
     merge_batch: Callable[[DataFrame, int], None],
     checkpoint_dir: str,
     archive_dir: str | None = None,
@@ -85,7 +97,9 @@ def run_incremental_merge(
 ) -> None:
     """Process all pending files in ``drop_dir`` through ``merge_batch``,
     then stop (Trigger.AvailableNow) — the reference's daily cadence with
-    exactly-once-per-batch bookkeeping."""
+    exactly-once-per-batch bookkeeping. The one drop-folder stream
+    driver: every ``run_incremental_*`` job is this call with its own
+    ``merge_batch(batch, epoch)``."""
     reader = (spark.readStream.schema(schema).format(fmt))
     if fmt == "csv":
         reader = reader.option("header", True)
@@ -143,21 +157,8 @@ def run_incremental_cdc(
         lake_apply_cdc(spark, lake_path, batch, key, partition_col,
                        op_col=op_col, ts_col=ts_col)
 
-    reader = spark.readStream.schema(schema).format(fmt)
-    if fmt == "csv":
-        reader = reader.option("header", True)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger",
-                               str(max_files_per_trigger))
-    query = (
-        reader.load(drop_dir)
-        .writeStream
-        .foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    run_incremental_merge(spark, drop_dir, schema, apply, checkpoint_dir,
+                          fmt=fmt, max_files_per_trigger=max_files_per_trigger)
 
 
 def run_incremental_ndv_sketches(
@@ -175,13 +176,8 @@ def run_incremental_ndv_sketches(
     """Maintain a standing HLL-partial ledger from a drop folder: each
     micro-batch aggregates to per-``keys`` sketches (batch-sized work)
     and appends them to a manifest-snapshot table EXACTLY-ONCE
-    (``snap_append_txn`` keyed by ``stream_id`` + epoch — epoch ids are
-    only unique PER CHECKPOINT, so a bare epoch key would make a rebuilt
-    checkpoint dir, or a second stream feeding the same ledger, restart
-    at epoch 0 and silently no-op against history; ``stream_id``
-    defaults to a hash of ``checkpoint_dir`` so distinct checkpoints
-    never collide, and a caller-supplied id survives checkpoint
-    relocation). Any NDV rollup is then ``operators.sketches.hll_rollup``
+    (``snap_append_txn`` keyed by stream id + epoch, see ``_stream_id``).
+    Any NDV rollup is then ``operators.sketches.hll_rollup``
     over the ledger: sketch-union cost, never a rescan of history.
     This is the streaming twin of the q142 batch pattern; parity with a
     full batch recompute is gated in tests/test_sketches.py."""
@@ -192,8 +188,7 @@ def run_incremental_ndv_sketches(
         snap_append_txn,
     )
 
-    sid = stream_id or hashlib.sha256(
-        checkpoint_dir.encode("utf-8")).hexdigest()[:16]
+    sid = _stream_id(checkpoint_dir, stream_id)
 
     def apply(batch: DataFrame, epoch: int) -> None:
         if batch.isEmpty():
@@ -202,18 +197,8 @@ def run_incremental_ndv_sketches(
                         hll_partials(batch, keys, col, lgk=lgk),
                         txn=f"ndv-{sid}-epoch-{epoch}")
 
-    reader = spark.readStream.schema(schema).format(fmt)
-    if fmt == "csv":
-        reader = reader.option("header", True)
-    query = (
-        reader.load(drop_dir)
-        .writeStream
-        .foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    run_incremental_merge(spark, drop_dir, schema, apply, checkpoint_dir,
+                          fmt=fmt)
 
 
 def run_incremental_expectations(
@@ -249,8 +234,7 @@ def run_incremental_expectations(
     )
     from pyspark.sql import functions as F
 
-    sid = stream_id or hashlib.sha256(
-        checkpoint_dir.encode("utf-8")).hexdigest()[:16]
+    sid = _stream_id(checkpoint_dir, stream_id)
 
     def apply(batch: DataFrame, epoch: int) -> None:
         if batch.isEmpty():
@@ -260,21 +244,8 @@ def run_incremental_expectations(
         snap_append_txn(spark, table, report,
                         txn=f"dq-{sid}-epoch-{epoch}")
 
-    reader = spark.readStream.schema(schema).format(fmt)
-    if fmt == "csv":
-        reader = reader.option("header", True)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger",
-                               str(max_files_per_trigger))
-    query = (
-        reader.load(drop_dir)
-        .writeStream
-        .foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    run_incremental_merge(spark, drop_dir, schema, apply, checkpoint_dir,
+                          fmt=fmt, max_files_per_trigger=max_files_per_trigger)
 
 
 def run_incremental_variant_ingest(
@@ -336,8 +307,7 @@ def run_incremental_variant_ingest(
 
     conform_fn = ejson_conform if ejson else variant_conform
 
-    sid = stream_id or hashlib.sha256(
-        checkpoint_dir.encode("utf-8")).hexdigest()[:16]
+    sid = _stream_id(checkpoint_dir, stream_id)
 
     def apply(batch: DataFrame, epoch: int) -> None:
         if batch.isEmpty():
@@ -371,16 +341,6 @@ def run_incremental_variant_ingest(
         finally:
             docs.unpersist()
 
-    reader = spark.readStream.format("text")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger",
-                               str(max_files_per_trigger))
-    query = (
-        reader.load(drop_dir)
-        .writeStream
-        .foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    run_incremental_merge(spark, drop_dir, "value string", apply,
+                          checkpoint_dir, fmt="text",
+                          max_files_per_trigger=max_files_per_trigger)

@@ -343,3 +343,80 @@ def test_snaptable_reads_hive_partitioned_snapshots(registered, tmp_path):
 
     with pytest.raises(Exception, match="partitioned"):
         df.limit(1).write.format("snaptable").mode("append").save(t)
+
+
+class _CountingIO(pyds._LocalIO):
+    """Local byte store that counts what the manifest helpers and the
+    reader ask of it."""
+
+    def __init__(self):
+        import collections
+
+        self.calls = collections.Counter()
+
+    def read_text(self, path):
+        name = path.rsplit("/", 1)[-1]
+        kind = ("head" if name == "HEAD" else
+                "version" if name.startswith("v") and name.endswith(".json")
+                else "other")
+        self.calls[f"read_{kind}"] += 1
+        return super().read_text(path)
+
+    def exists(self, path):
+        self.calls["exists"] += 1
+        return super().exists(path)
+
+    def parquet_read(self, path, columns=None):
+        self.calls[path] += 1
+        return super().parquet_read(path, columns=columns)
+
+
+def test_append_commit_reads_the_head_twice(tmp_path):
+    """One append over a byte store (layout resolve + segment write +
+    commit on head, the DataSource append path): the commit trusts the
+    parent it was pinned to — the fail-if-exists create is the OCC gate
+    — so the head is read once by the layout check and once by the
+    commit, never re-probed inside ``_commit``."""
+    io, t = _CountingIO(), str(tmp_path / "tab")
+
+    def append(name):
+        layout = S._resolve_layout(io, t, ())
+        seg = S._write_segment(io, t, [name], {})
+        return S._commit_on_head(io, t, "append", "append", new_seg=seg,
+                                 partition_by=layout)
+
+    assert append("data/a.parquet") == 1
+    io.calls.clear()
+    assert append("data/b.parquet") == 2
+    assert (io.calls["read_head"], io.calls["exists"],
+            io.calls["read_version"]) == (2, 2, 2)
+    assert S.read_manifest(io, t)["files"] == ["data/a.parquet",
+                                               "data/b.parquet"]
+
+
+def test_snaptable_reads_each_delete_file_once_per_scan(spark, tmp_path):
+    """Merge-on-read deletes are loaded once per scan when the reader
+    plans its partitions, not once per data file: 4 data files under 3
+    delete commits cost 3 delete-file reads, and the rows match the
+    native reader."""
+    t = str(tmp_path / "tab")
+    for i in range(4):
+        S.snap_append(spark, t, spark.createDataFrame(
+            [(f"k{i}{j}", i * 10 + j) for j in range(3)],
+            "k string, v int").coalesce(1))
+    for i in range(3):
+        S.snap_delete_keys(spark, t, spark.createDataFrame(
+            [(f"k{i}{i}",)], "k string"), ["k"])
+
+    native = S.read_snapshot(spark, t)
+    r = pyds._SnapTableReader(native.schema, {"path": t})
+    r.io = _CountingIO()
+    got = sorted((row["k"], row["v"]) for p in r.partitions()
+                 for b in r.read(p) for row in b.to_pylist())
+
+    data = r.manifest["files"]
+    deletes = [f"{t}/{d['file']}" for d in r.manifest["deletes"]]
+    assert len(data) == 4 and len(deletes) == 3
+    assert {f: r.io.calls[f] for f in deletes} == {f: 1 for f in deletes}
+    assert {f: r.io.calls[f"{t}/{f}"] for f in data} == {f: 1 for f in data}
+    assert got == _rows(native) and len(got) == 4 * 3 - 3

@@ -326,8 +326,8 @@ def test_stream_stream_interval_join_equals_batch(spark, tmp_path):
 
 
 def test_streaming_curation_equals_batch(spark, tmp_path, sf_dir):
-    """Streamed corpus curation (two micro-batch file drops folded into
-    generation-addressed state) must converge to exactly the batch q50
+    """Streamed corpus curation (two micro-batch file drops appended to
+    the state ledger) must converge to exactly the batch q50
     answer on the union — min/count combiners are associative."""
     from airflow_pipelines_from_mongo_to_postgres_spark.plans.llmdata import (
         curated_fingerprint_agg,
@@ -350,9 +350,11 @@ def test_streaming_curation_equals_batch(spark, tmp_path, sf_dir):
                              str(tmp_path / "state"),
                              max_files_per_trigger=1)
 
-    import glob
-    gens = glob.glob(str(tmp_path / "state" / "gen=*"))
-    assert len(gens) >= 2  # the cross-batch combine path actually ran
+    from airflow_pipelines_from_mongo_to_postgres_spark.sources.snapshots import (
+        current_version,
+    )
+    # the cross-batch rollup path actually ran
+    assert current_version(spark, str(tmp_path / "state")) >= 2
 
     got = {r.fp: (r.keeper_id, r.copies) for r in
            read_curated_state(spark, str(tmp_path / "state")).collect()}
@@ -361,40 +363,178 @@ def test_streaming_curation_equals_batch(spark, tmp_path, sf_dir):
     assert got == want and len(want) > 0
 
 
-def test_read_curated_state_ignores_uncommitted_generation(spark, tmp_path, sf_dir):
-    """A generation directory without _SUCCESS is a crashed mid-overwrite
-    batch — a terminal reader must fall back to the last COMMITTED
-    generation, never observe the half-written one (ADVICE r4)."""
+def _drop_files(drop: str, frames: list) -> None:
+    """Each frame as one parquet file ``drop/b<i>.parquet`` with
+    increasing mtimes, so under maxFilesPerTrigger=1 frame i is epoch i
+    (the file source orders by mtime)."""
+    import glob
+    import os
+    import shutil
+
+    for i, df in enumerate(frames):
+        df.coalesce(1).write.parquet(f"{drop}/tmp{i}")
+        (f,) = glob.glob(f"{drop}/tmp{i}/*.parquet")
+        os.replace(f, f"{drop}/b{i}.parquet")
+        os.utime(f"{drop}/b{i}.parquet", (1_000_000 + i,) * 2)
+        shutil.rmtree(f"{drop}/tmp{i}")
+
+
+def _two_document_drops(spark, drop: str, sf_dir: str):
+    """The documents table as two drop files: even doc_ids (epoch 0),
+    then odd."""
+    docs = load_table(spark, "documents", sf_dir)
+    _drop_files(drop, [docs.filter(F.col("doc_id") % 2 == part)
+                       for part in (0, 1)])
+    return docs
+
+
+def _fp_rows(df):
+    return {r.fp: (r.keeper_id, r.copies) for r in df.collect()}
+
+
+def test_curation_ledger_crash_commits_nothing(spark, tmp_path, sf_dir,
+                                               monkeypatch):
+    """A batch that dies before its commit leaves the ledger at the
+    previous epoch (readers see epoch 0's rows only, never a partial
+    epoch 1), and the rerun from the same checkpoint replays epoch 1 into
+    exactly the batch q50 answer."""
     from airflow_pipelines_from_mongo_to_postgres_spark.plans.llmdata import (
         curated_fingerprint_agg,
     )
-    from airflow_pipelines_from_mongo_to_postgres_spark.sources.catalog import load_table
+    from airflow_pipelines_from_mongo_to_postgres_spark.sources import snapshots as S
     from airflow_pipelines_from_mongo_to_postgres_spark.streaming.curation import (
         read_curated_state,
+        run_incremental_curation,
     )
 
-    docs = load_table(spark, "documents", sf_dir)
-    state = tmp_path / "state"
-    good = curated_fingerprint_agg(docs)
-    good.write.mode("overwrite").parquet(str(state / "gen=1"))
+    drop, ckpt, state = (str(tmp_path / d) for d in ("drop", "ckpt", "state"))
+    docs = _two_document_drops(spark, drop, sf_dir)
+    assert read_curated_state(spark, state) is None     # before any batch
 
-    # simulate a crash: gen=2 has data files but no _SUCCESS marker
-    good.limit(1).write.mode("overwrite").parquet(str(state / "gen=2"))
-    (state / "gen=2" / "_SUCCESS").unlink()
+    real_commit, calls = S._commit, []
 
-    got = read_curated_state(spark, str(state))
-    assert got.count() == good.count() > 1  # gen=1, not the 1-row gen=2
+    def crash_on_second_epoch(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 2:
+            raise OSError("simulated crash before the epoch-1 commit")
+        return real_commit(*args, **kwargs)
 
-    # and with no committed generation at all -> None
-    import shutil
-    shutil.rmtree(state / "gen=1")
-    assert read_curated_state(spark, str(state)) is None
+    monkeypatch.setattr(S, "_commit", crash_on_second_epoch)
+    with pytest.raises(Exception, match="simulated crash"):
+        run_incremental_curation(spark, drop, ckpt, state,
+                                 max_files_per_trigger=1)
+    monkeypatch.undo()
+
+    assert S.current_version(spark, state) == 1
+    even = docs.filter(F.col("doc_id") % 2 == 0)
+    assert _fp_rows(read_curated_state(spark, state)) == \
+        _fp_rows(curated_fingerprint_agg(even))
+
+    run_incremental_curation(spark, drop, ckpt, state,
+                             max_files_per_trigger=1)
+    want = _fp_rows(curated_fingerprint_agg(docs))
+    assert _fp_rows(read_curated_state(spark, state)) == want
+    assert len(want) > 0
+
+
+@pytest.mark.parametrize("job", ["curation", "semantic_dedup"])
+def test_streaming_ledger_replay_is_exactly_once(spark, tmp_path, sf_dir, job):
+    """A batch whose ledger commit landed but whose checkpoint commit did
+    not (its ``commits/N`` and ``.N.crc`` deleted) is replayed by the
+    next run with the same epoch id: the replay finds its txn and skips,
+    so the ledger neither grows nor double-counts, and still equals the
+    batch answer."""
+    import os
+
+    from airflow_pipelines_from_mongo_to_postgres_spark.sources import snapshots as S
+
+    drop, ckpt, state = (str(tmp_path / d) for d in ("drop", "ckpt", "state"))
+    if job == "curation":
+        from airflow_pipelines_from_mongo_to_postgres_spark.plans.llmdata import (
+            curated_fingerprint_agg,
+        )
+        from airflow_pipelines_from_mongo_to_postgres_spark.streaming.curation import (
+            read_curated_state,
+            run_incremental_curation,
+        )
+
+        docs = _two_document_drops(spark, drop, sf_dir)
+
+        def run():
+            run_incremental_curation(spark, drop, ckpt, state,
+                                     max_files_per_trigger=1)
+
+        def got():
+            return _fp_rows(read_curated_state(spark, state))
+
+        want = _fp_rows(curated_fingerprint_agg(docs))
+    else:
+        from airflow_pipelines_from_mongo_to_postgres_spark.operators.similarity import (
+            semantic_dedup_state,
+        )
+        from airflow_pipelines_from_mongo_to_postgres_spark.plans._ivf_centroids import (
+            IVF_CENTROIDS,
+        )
+        from airflow_pipelines_from_mongo_to_postgres_spark.streaming.curation import (
+            run_incremental_semantic_dedup,
+        )
+
+        e = load_table(spark, "embeddings", sf_dir) \
+            .select("vec_id", F.col("embedding").cast("array<double>"),
+                    "label")
+        _drop_files(drop, [e.filter(F.col("vec_id") < 400),
+                           e.filter(F.col("vec_id") >= 400)])
+
+        def run():
+            run_incremental_semantic_dedup(
+                spark, drop, ckpt, state, threshold=0.42,
+                centroids=IVF_CENTROIDS, max_files_per_trigger=1)
+
+        def rows(df):
+            return {r.vid: (r.cell, r.is_kept) for r in df.collect()}
+
+        def got():
+            return rows(S.read_snapshot(spark, state))
+
+        want = rows(semantic_dedup_state(e, "vec_id", "embedding", 0.42,
+                                         IVF_CENTROIDS))
+
+    run()
+    head = S.current_version(spark, state)
+    assert head >= 2 and got() == want and len(want) > 0
+
+    last = max(int(n) for n in os.listdir(f"{ckpt}/commits") if n.isdigit())
+    os.remove(f"{ckpt}/commits/{last}")
+    os.remove(f"{ckpt}/commits/.{last}.crc")
+    run()
+    assert os.path.exists(f"{ckpt}/commits/{last}")   # the epoch re-ran
+    assert S.current_version(spark, state) == head   # ... and committed nothing
+    assert got() == want
+
+
+def test_streaming_sinks_commit_through_one_protocol():
+    """Every drop-folder stream drains through the one
+    ``run_incremental_merge`` driver, and no streaming module keeps a
+    table protocol of its own (generation directories, ``_SUCCESS``
+    markers, direct ``.write.mode(...)`` state writes): streaming sinks
+    commit through sources/snapshots.py or sources/sinks.py."""
+    import pathlib
+
+    import airflow_pipelines_from_mongo_to_postgres_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent / "streaming"
+    texts = {p.name: p.read_text(encoding="utf-8") for p in root.glob("*.py")}
+    assert sum(t.count(".foreachBatch(") for t in texts.values()) == 1
+    own_protocol = sorted(
+        n for n, t in texts.items()
+        if any(tok in t for tok in ("_SUCCESS", "gen=", ".write.mode(")))
+    assert own_protocol == [], own_protocol
 
 
 def test_streaming_semantic_dedup_matches_batch(spark, tmp_path):
     """Two embedding drops streamed one file per micro-batch through
     run_incremental_semantic_dedup == one-shot semantic_dedup_state over
-    the union (cells AND keeper verdicts), with multi-generation state
+    the union (cells AND keeper verdicts), with a multi-epoch ledger
     actually exercised."""
     import glob
 
@@ -431,14 +571,14 @@ def test_streaming_semantic_dedup_matches_batch(spark, tmp_path):
         spark, str(drop), str(tmp_path / "ckpt"), state,
         threshold=t, centroids=IVF_CENTROIDS, max_files_per_trigger=1)
 
-    gens = glob.glob(f"{state}/gen=*")
-    assert len(gens) >= 2                      # multi-generation path ran
-
-    from airflow_pipelines_from_mongo_to_postgres_spark.streaming.curation import (
-        read_curated_state,
+    from airflow_pipelines_from_mongo_to_postgres_spark.sources.snapshots import (
+        current_version,
+        read_snapshot,
     )
+    assert current_version(spark, state) >= 2      # multi-epoch path ran
+
     got = {r.vid: (r.cell, r.is_kept)
-           for r in read_curated_state(spark, state).collect()}
+           for r in read_snapshot(spark, state).collect()}
     want = {r.vid: (r.cell, r.is_kept)
             for r in semantic_dedup_state(e, "vec_id", "embedding", t,
                                           IVF_CENTROIDS).collect()}
