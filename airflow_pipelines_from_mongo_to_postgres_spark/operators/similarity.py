@@ -417,8 +417,7 @@ def semantic_dedup_state(df: DataFrame, id_col: str, vec_col: str,
 
 def incremental_semantic_dedup(standing: DataFrame, new_vecs: DataFrame,
                                id_col: str, vec_col: str,
-                               threshold: float, centroids: list,
-                               enforce_monotone: bool = True
+                               threshold: float, centroids: list
                                ) -> tuple[DataFrame, DataFrame]:
     """Semantic-dedup index maintenance for an APPENDED vector batch —
     the embedding-space twin of ``incremental_jaccard_pairs``. The batch
@@ -440,20 +439,17 @@ def incremental_semantic_dedup(standing: DataFrame, new_vecs: DataFrame,
     every new id sorts AFTER every standing id. ENFORCED via two 1-row
     bounded aggregates (max standing id vs min batch id — the same
     guard-collect class as incremental_jaccard_pairs' 5-row sample);
-    out-of-order ids would silently flip old verdicts, so they raise.
-    Pipelines with a monotone id-assignment service can pass
-    ``enforce_monotone=False`` to skip the two probe jobs."""
+    out-of-order ids would silently flip old verdicts, so they raise."""
     new_assigned = _assign_cells(new_vecs, id_col, vec_col, centroids)
-    if enforce_monotone:
-        mx = standing.agg(F.max("vid")).first()[0]
-        mn = new_vecs.agg(F.min(id_col)).first()[0]
-        if mx is not None and mn is not None and mn <= mx:
-            raise ValueError(
-                "incremental_semantic_dedup: batch id "
-                f"{mn!r} does not sort after the standing max {mx!r}; "
-                "monotone-append contract violated — out-of-order ids "
-                "would flip standing keeper verdicts (full recompute or "
-                "the merge path handles those)")
+    mx = standing.agg(F.max("vid")).first()[0]
+    mn = new_vecs.agg(F.min(id_col)).first()[0]
+    if mx is not None and mn is not None and mn <= mx:
+        raise ValueError(
+            "incremental_semantic_dedup: batch id "
+            f"{mn!r} does not sort after the standing max {mx!r}; "
+            "monotone-append contract violated — out-of-order ids "
+            "would flip standing keeper verdicts (full recompute or "
+            "the merge path handles those)")
     earlier = standing.select("vid", "v", "cell").unionByName(new_assigned)
     a = earlier.select(F.col("vid").alias("d1"), F.col("cell"),
                        F.col("v").alias("v1"))

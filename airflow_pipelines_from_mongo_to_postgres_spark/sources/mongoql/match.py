@@ -149,6 +149,18 @@ def _match_op(col: Column, op: str, val: Any, spec: dict | None = None,
     raise ValueError(f"unsupported $match operator: {op}")
 
 
+def _path_col(schema, field: str) -> Column:
+    """The column a query path reads. Under a known schema, a path whose
+    top-level field the documents lack (an earlier stage dropped it) is
+    missing from every document, so it reads as null: a bare ``F.col``
+    would let Spark resolve the filter below the Project that dropped
+    the field and match against its old values."""
+    if schema is not None and field.split(".")[0].lower() not in {
+            n.lower() for n in schema.names}:
+        return F.lit(None)
+    return F.col(field)
+
+
 def _match_cond(cond: dict[str, Any], schema=None) -> Column:
     """``schema`` (the input DataFrame's) enables Mongo's type-bracketed
     matching: an int query against a string field matches NOTHING (and
@@ -183,7 +195,7 @@ def _match_cond(cond: dict[str, Any], schema=None) -> Column:
             # per-document bernoulli sample, Mongo's nondeterminism
             parts.append(F.rand() < F.lit(float(spec)))
         elif isinstance(spec, dict) and any(k.startswith("$") for k in spec):
-            col = F.col(field)
+            col = _path_col(schema, field)
             for op, val in spec.items():
                 if op == "$options":
                     if "$regex" not in spec:
@@ -195,7 +207,7 @@ def _match_cond(cond: dict[str, Any], schema=None) -> Column:
             if _compatible(schema, field, spec) is False:
                 parts.append(F.lit(False))
             else:
-                parts.append(F.col(field) == F.lit(spec))
+                parts.append(_path_col(schema, field) == F.lit(spec))
     acc = parts[0]
     for c in parts[1:]:
         acc = acc & c

@@ -31,20 +31,6 @@ from pyspark.sql import functions as F
 from airflow_pipelines_from_mongo_to_postgres_spark.sources.snapshots import _jvm_classes, _jvm_fs
 
 
-#: chars Hive escapes in partition directory names — mirrors
-#: ExternalCatalogUtils.charToEscape (controls, %, and filesystem/shell
-#: specials); used to locate a partition's directory from its VALUE.
-_HIVE_ESCAPED = set('"#%\'*/:=?\\\x7f{[]^') | {chr(c) for c in range(32)}
-
-
-def _hive_escape(value: str) -> str:
-    """Hive partition-directory escaping (space is NOT escaped; '/',
-    ':', '=', '%' etc. become %XX uppercase) — the inverse of
-    ``_hive_unescape`` for the characters Spark escapes on write."""
-    return "".join(f"%{ord(c):02X}" if c in _HIVE_ESCAPED else c
-                   for c in value)
-
-
 def _hive_unescape(name: str) -> str:
     """Invert Hive's partition-directory escaping (space -> %20, '/' ->
     %2F, ...). Mirrors
@@ -120,7 +106,7 @@ def write_partitioned(df: DataFrame, path: str,
 def lake_merge(spark, path: str, updates: DataFrame,
                key: str | Sequence[str], partition_col: str,
                mutable: Sequence[str],
-               files_per_partition: int = 1, backup: bool = True) -> list:
+               files_per_partition: int = 1) -> list:
     """MERGE (upsert with partial-column update) into a hive-partitioned
     parquet lake, rewriting ONLY the partitions the update batch touches —
     the table-format-free equivalent of a Delta/Iceberg ``MERGE INTO``.
@@ -138,7 +124,7 @@ def lake_merge(spark, path: str, updates: DataFrame,
     date-partitioned-fact contract) — a key that moves partitions would
     leave its old row in an untouched directory.
 
-    **Crash safety** (``backup=True``): dynamic partition overwrite is
+    **Crash safety**: dynamic partition overwrite is
     not atomic across the touched directories — a crash inside the
     commit window can leave a partition deleted-but-not-repopulated, and
     a naive re-run would then read the DAMAGED state as "current" and
@@ -160,20 +146,20 @@ def lake_merge(spark, path: str, updates: DataFrame,
         .filter(F.col(partition_col).isin(touched))
     merged = merge_upsert(current, updates, key, mutable)
     _overwrite_staged(spark, path, current, merged, partition_col,
-                      files_per_partition, backup)
+                      files_per_partition)
     return touched
 
 
 def _overwrite_staged(spark, path: str, current: DataFrame,
                       result: DataFrame, partition_col: str,
-                      files_per_partition: int, backup: bool,
+                      files_per_partition: int,
                       drop_dirs: Sequence[str] = ()) -> None:
     """Dynamic-overwrite ``result`` over the touched partitions under the
     lake's crash protocol: stage ``current`` (their pre-state) to
     ``_pending``, overwrite, delete ``drop_dirs`` (URI-encoded partition
     directories the overwrite cannot empty) still inside the crash
     window, then mark ``_COMMITTED`` and drop the staging."""
-    pending = _stage_pre_state(spark, path, current) if backup else None
+    pending = _stage_pre_state(spark, path, current)
     write_partitioned(result, path, [partition_col], files_per_partition)
     if drop_dirs:
         fs, _ = _jvm_fs(spark, path)
@@ -183,9 +169,8 @@ def _overwrite_staged(spark, path: str, current: DataFrame,
             # the hive escape's own % -> %25); go through java.net.URI
             # so the JVM decodes them into the on-disk directory name
             fs.delete(classes.Path(classes.URI(d)), True)
-    if pending is not None:
-        _mark_committed(spark, pending)
-        _delete_dir(spark, pending)
+    _mark_committed(spark, pending)
+    _delete_dir(spark, pending)
 
 
 def _stage_pre_state(spark, path: str, current: DataFrame) -> str:
@@ -204,8 +189,7 @@ def _mark_committed(spark, pending: str) -> None:
     overwrite and the staging cleanup: a crash in that gap then leaves a
     staging dir that ``lake_recover`` can tell apart from a torn
     overwrite — the commit landed, so restoring the pre-state would
-    ROLL BACK committed data. One tiny create, only on the crash-safety
-    path."""
+    ROLL BACK committed data. One tiny create per overwrite."""
     fs, jp = _jvm_fs(spark, f"{pending}/_COMMITTED")
     fs.create(jp, True).close()
 
@@ -295,8 +279,7 @@ def check_partition_immutability(spark, path: str, batch: DataFrame,
 def lake_apply_cdc(spark, path: str, changes: DataFrame,
                    key: str | Sequence[str], partition_col: str,
                    op_col: str = "op", ts_col: str | None = None,
-                   files_per_partition: int = 1,
-                   backup: bool = True) -> list:
+                   files_per_partition: int = 1) -> list:
     """Apply a change-data-capture batch (insert / update / DELETE rows)
     to the partitioned lake — the hard-delete path ``lake_merge`` (an
     upsert) cannot express. ``changes`` carries ``op_col`` ∈ {'I','U',
@@ -367,13 +350,12 @@ def lake_apply_cdc(spark, path: str, changes: DataFrame,
             dead_dirs.append(
                 f"{path}/{partition_col}=__HIVE_DEFAULT_PARTITION__")
     _overwrite_staged(spark, path, current, result, partition_col,
-                      files_per_partition, backup, drop_dirs=dead_dirs)
+                      files_per_partition, drop_dirs=dead_dirs)
     return touched
 
 
 def compact_lake(spark, path: str, partition_col: str,
-                 max_files: int = 8, files_per_partition: int = 1,
-                 backup: bool = True) -> list:
+                 max_files: int = 8, files_per_partition: int = 1) -> list:
     """Small-file compaction for a hive-partitioned parquet lake: rewrite
     ONLY the partitions whose parquet file count exceeds ``max_files``,
     coalescing each to ``files_per_partition`` files.
@@ -422,7 +404,7 @@ def compact_lake(spark, path: str, partition_col: str,
         # same crash-safety staging as lake_merge: a crash inside the
         # dynamic-overwrite commit window must not lose the partition
         _overwrite_staged(spark, path, sub, sub, partition_col,
-                          files_per_partition, backup)
+                          files_per_partition)
     return touched + ([None] if skipped_null else [])
 
 

@@ -30,11 +30,14 @@ Layout::
                                        one commit's DELTA (immutable)
     <table>/_manifests/v00000001.json  {"version", "segments": [names],
                                         "parent", "note",
-                                        "deletes": [{file, cols}]}
+                                        "deletes": [{file, cols}],
+                                        "txns": {app_id: last_epoch}}
                                        (appends / merge-on-read deletes)
                                        or inline {"files", "stats"}
                                        (overwrite/replace/compact —
-                                       these MATERIALIZE any deletes)
+                                       these MATERIALIZE any deletes);
+                                       every commit carries "txns"
+                                       forward (snap_append_txn)
     <table>/_manifests/HEAD            text: current version number
 
 At 100 TB the manifest layer lists file names, not data — and the
@@ -533,10 +536,6 @@ def _collect_file_stats(spark: SparkSession, table: str, names: list,
 _PRUNE_OPS = ("<", "<=", ">", ">=", "=", "is_null", "is_not_null")
 
 
-def _prune_value(v):
-    return _stat_json(v)
-
-
 def prune_files(manifest: dict, predicates: list) -> list:
     """Manifest-level file pruning: return the subset of the snapshot's
     files whose [min, max]/null-count window can still satisfy EVERY
@@ -567,7 +566,7 @@ def prune_files(manifest: dict, predicates: list) -> list:
                 if mn is None or mx is None:  # all-NULL file: no value
                     keep = False              # can match a comparison
                 else:
-                    v = _prune_value(p[2])
+                    v = _stat_json(p[2])
                     if any(isinstance(x, float) and x != x
                            for x in (mn, mx, v)):
                         continue  # NaN window or predicate: every
@@ -625,7 +624,7 @@ class CommitConflict(Exception):
 
 def _commit(store, table: str, files: list | None,
             note: str, expected_parent: int | None = None,
-            txn: str | None = None, stats: dict | None = None,
+            txns: dict | None = None, stats: dict | None = None,
             segments: list | None = None,
             deletes: list | None = None,
             partition_by: list | None = None,
@@ -641,7 +640,9 @@ def _commit(store, table: str, files: list | None,
     can leave it None). A pinned parent is trusted without re-probing
     HEAD: the fail-if-exists create of v(parent+1) is already the gate,
     so a stale pin surfaces as CommitConflict and the caller's retry
-    re-reads the (self-healed) head."""
+    re-reads the (self-healed) head. ``txns`` are the per-stream epoch
+    marks the new version records (``snap_append_txn``); None carries
+    the parent's forward, at the cost of one parent version-file read."""
     # malformed manifests must die at write time, not at a later read:
     # a files list that isn't flat strings (e.g. the (names, stats)
     # tuple _write_data_files returns, passed un-unpacked) would
@@ -656,6 +657,8 @@ def _commit(store, table: str, files: list | None,
                 f"{[type(x).__name__ for x in seq_val][:3]}")
     parent = (current_version(store, table) if expected_parent is None
               else expected_parent)
+    if txns is None:
+        txns = _read_raw_manifest(store, table, parent).get("txns")
     v = parent + 1
     manifest = {"version": v, "parent": parent or None, "note": note}
     if segments is not None:
@@ -692,8 +695,8 @@ def _commit(store, table: str, files: list | None,
             # would apply these deletes to EVERY file and drop a MERGE's
             # replacement rows — make it refuse instead (_check_format)
             manifest["format"] = _FORMAT_VERSION
-    if txn is not None:
-        manifest["txn"] = txn
+    if txns:
+        manifest["txns"] = dict(txns)
     if partition_by:
         # informational + the pyds reader's cue to rebuild hive
         # partition columns; pruning needs nothing extra (partition
@@ -766,7 +769,8 @@ def _resolve_layout(store, table: str, partition_by: tuple) -> tuple:
 def _commit_on_head(store, table: str, note: str, op: str,
                     new_seg: str | None = None, key_files: list = (),
                     key_cols: list = (), partition_by: tuple | None = None,
-                    txn: str | None = None) -> int | None:
+                    app_id: str | None = None,
+                    epoch: int | None = None) -> int | None:
     """Commit ``new_seg`` (appended rows) and/or equality deletes over
     ``key_files`` on top of the current head, pinned to it by
     ``expected_parent``: a commit landing between the manifest read and
@@ -774,12 +778,17 @@ def _commit_on_head(store, table: str, note: str, op: str,
     conflict only the version-file read + commit retry; data files and
     segments are written once. The new segment and the deletes take the
     version this commit will get as their data sequence. ``partition_by``
-    None keeps the head's layout; with ``txn``, a txn already in history
-    (possibly the racer this commit lost to) makes it a no-op."""
+    None keeps the head's layout. The head's epoch marks carry forward;
+    with ``app_id``, a mark at or past ``epoch`` (possibly set by the
+    racer this commit lost to) makes it a no-op, else it advances to
+    ``epoch``."""
     for _ in range(_APPEND_RETRIES):
-        if txn is not None and txn in committed_txns(store, table):
-            return None
         raw = _read_raw_manifest(store, table)
+        txns = dict(raw.get("txns") or {})
+        if app_id is not None:
+            if txns.get(app_id, -1) >= epoch:
+                return None
+            txns[app_id] = epoch
         segs, seg_seqs = _parent_segments(store, table, raw)
         v = raw["version"] + 1
         if new_seg is not None:
@@ -790,7 +799,7 @@ def _commit_on_head(store, table: str, note: str, op: str,
         dels = list(raw.get("deletes") or []) + [
             {"file": n, "cols": list(key_cols), "seq": v} for n in key_files]
         try:
-            return _commit(store, table, None, note, txn=txn,
+            return _commit(store, table, None, note, txns=txns,
                            expected_parent=raw["version"], segments=segs,
                            deletes=dels or None,
                            partition_by=(raw.get("partition_by")
@@ -1030,42 +1039,37 @@ def _read_with_deletes(spark: SparkSession, table: str, files: list,
     return out
 
 
-def committed_txns(spark, table: str) -> set:
-    """Transaction ids recorded by ``snap_append_txn`` across the
-    retained history (walk is O(versions), driver-side, manifest-sized).
-    """
-    out = set()
-    v = current_version(spark, table)
-    while v:
-        m = _read_raw_manifest(spark, table, v)   # txn/parent only —
-        if m.get("txn") is not None:              # no segment resolution
-            out.add(m["txn"])
-        v = m["parent"] or 0
-    return out
+def committed_epoch(spark, table: str, app_id: str) -> int:
+    """The last epoch ``snap_append_txn`` committed for ``app_id`` (the
+    head manifest's mark), or -1 when the app has none. One head read,
+    whatever the history length."""
+    return (_read_raw_manifest(spark, table).get("txns") or {}).get(app_id, -1)
 
 
 def snap_append_txn(spark: SparkSession, table: str, df: DataFrame,
-                    txn: str, note: str = "append",
+                    app_id: str, epoch: int, note: str = "append",
                     stat_cols: tuple = ()) -> int | None:
-    """EXACTLY-ONCE append: the commit records ``txn`` in its manifest,
-    and a txn already present in history makes the call a NO-OP (returns
-    None). This is the ``foreachBatch(epoch_id)`` sink contract —
-    Structured Streaming replays a failed epoch, the replayed commit
-    sees its own txn and skips, so the table reflects each epoch exactly
-    once. (Files written by the failed first attempt become vacuumable
-    orphans; the manifest never saw them.) Retention caveat: vacuum
-    truncates history, so keep ``keep_versions`` above the deepest
-    replay the stream can attempt — in practice one epoch."""
-    if txn in committed_txns(spark, table):
+    """EXACTLY-ONCE append for one stream: the commit advances
+    ``app_id``'s epoch mark (the version file's ``"txns"``) to
+    ``epoch``, and a head whose mark is already at or past ``epoch``
+    makes the call a NO-OP (returns None). This is the
+    ``foreachBatch(df, epoch_id)`` sink contract (Delta's
+    ``SetTransaction``): batch ids are monotone per checkpoint and a
+    restart replays only the epochs after its last checkpoint commit,
+    so "epoch <= mark" means "already committed" — one head read,
+    however long the history. (Files written by a failed first attempt
+    become vacuumable orphans; the manifest never saw them.)"""
+    head = _read_raw_manifest(spark, table)
+    if (head.get("txns") or {}).get(app_id, -1) >= epoch:
         return None
-    layout = _resolve_layout(spark, table, ())
+    layout = tuple(head.get("partition_by") or ())
     new, stats = _write_data_files(df, table, stat_cols,
                                    partition_by=layout)
-    # _commit_on_head re-checks the txn before every attempt: the racer
-    # we lost to may have BEEN this txn (two replaying workers of one epoch)
+    # _commit_on_head re-checks the mark before every attempt: the racer
+    # we lost to may have BEEN this epoch (two replaying workers)
     return _commit_on_head(spark, table, note, "txn append",
                            new_seg=_write_segment(spark, table, new, stats),
-                           partition_by=layout, txn=txn)
+                           partition_by=layout, app_id=app_id, epoch=epoch)
 
 
 def read_snapshot(spark: SparkSession, table: str,

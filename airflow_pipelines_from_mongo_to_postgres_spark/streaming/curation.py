@@ -4,12 +4,12 @@ micro-batch job with persistent cross-batch state.
 
 State is a per-epoch DELTA LEDGER: a manifest-snapshot table
 (sources/snapshots.py) to which each micro-batch appends only its own
-rows, EXACTLY-ONCE — ``snap_append_txn`` records the txn id
-``"<prefix>-<sid>-epoch-<epoch>"`` (``incremental._stream_id``) in the
-commit, so a batch the checkpoint replays after a crash sees its txn
-and skips, and a crash before the commit leaves nothing a reader can
-see. An epoch writes O(batch) rows; the standing state is never
-rewritten.
+rows, EXACTLY-ONCE — ``snap_append_txn`` advances the stream's epoch
+mark (app id ``"<prefix>-<sid>"``, ``incremental._stream_id``) in the
+commit, so a batch the checkpoint replays after a crash finds its epoch
+at or under the head's mark and skips, and a crash before the commit
+leaves nothing a reader can see. An epoch writes O(batch) rows; the
+standing state is never rewritten.
 
 * Curation appends ``plans.llmdata.curated_fingerprint_agg(batch)`` —
   the SAME plan the batch query runs, not a reimplementation — and
@@ -31,7 +31,7 @@ from pyspark.sql.types import StructType
 
 from airflow_pipelines_from_mongo_to_postgres_spark.plans.llmdata import curated_fingerprint_agg
 from airflow_pipelines_from_mongo_to_postgres_spark.sources.snapshots import (
-    committed_txns,
+    committed_epoch,
     current_version,
     read_snapshot,
     snap_append_txn,
@@ -69,7 +69,7 @@ def run_incremental_curation(spark: SparkSession, drop_dir: str,
 
     def fold(batch: DataFrame, epoch: int) -> None:
         snap_append_txn(spark, state_dir, curated_fingerprint_agg(batch),
-                        txn=f"curation-{sid}-epoch-{epoch}")
+                        app_id=f"curation-{sid}", epoch=epoch)
 
     run_incremental_merge(spark, drop_dir, schema, fold, checkpoint_dir,
                           fmt="parquet",
@@ -92,9 +92,10 @@ def run_incremental_semantic_dedup(spark: SparkSession, drop_dir: str,
     (``read_snapshot``) through ``operators.similarity.
     incremental_semantic_dedup`` (batch-proportional pair work, same
     frozen quantizer), and only its delta rows are appended, under the
-    same exactly-once txn. A replayed epoch whose txn is already
-    committed returns before reading: its own rows are in the ledger,
-    and the operator's monotone-id guard would reject them as a batch.
+    same exactly-once epoch mark. A replayed epoch at or under the
+    ledger's mark (``committed_epoch``) returns before reading: its own
+    rows are in the ledger, and the operator's monotone-id guard would
+    reject them as a batch.
     Stream == batch parity is the test: any file→batch partitioning
     converges to ``semantic_dedup_state`` over the union, because the
     min-id keeper under the monotone-append contract is associative
@@ -108,8 +109,8 @@ def run_incremental_semantic_dedup(spark: SparkSession, drop_dir: str,
     sid = _stream_id(checkpoint_dir)
 
     def fold(batch: DataFrame, epoch: int) -> None:
-        txn = f"semdedup-{sid}-epoch-{epoch}"
-        if txn in committed_txns(spark, state_dir):
+        app_id = f"semdedup-{sid}"
+        if committed_epoch(spark, state_dir, app_id) >= epoch:
             return
         if current_version(spark, state_dir) == 0:
             delta = semantic_dedup_state(batch, "vec_id", "embedding",
@@ -118,7 +119,7 @@ def run_incremental_semantic_dedup(spark: SparkSession, drop_dir: str,
             delta, _ = incremental_semantic_dedup(
                 read_snapshot(spark, state_dir), batch, "vec_id",
                 "embedding", threshold, centroids)
-        snap_append_txn(spark, state_dir, delta, txn=txn)
+        snap_append_txn(spark, state_dir, delta, app_id, epoch)
 
     run_incremental_merge(spark, drop_dir, schema, fold, checkpoint_dir,
                           fmt="parquet",

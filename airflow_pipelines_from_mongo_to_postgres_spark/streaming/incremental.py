@@ -74,11 +74,12 @@ def stamp_archived_files(spark: SparkSession, archive_dir: str,
 
 
 def _stream_id(checkpoint_dir: str, stream_id: str | None = None) -> str:
-    """The ``<sid>`` of a stream's exactly-once txn ids
-    (``"<prefix>-<sid>-epoch-<epoch>"``). Epoch ids are only unique PER
-    CHECKPOINT, so a bare epoch key would make a rebuilt checkpoint dir,
-    or a second stream feeding the same table, restart at epoch 0 and
-    silently no-op against history: the default is a hash of
+    """The ``<sid>`` of a stream's exactly-once app id
+    (``"<prefix>-<sid>"``, whose epoch mark ``snap_append_txn`` keeps in
+    the table's head manifest). Epoch ids are only monotone PER
+    CHECKPOINT, so one app id shared by a rebuilt checkpoint dir, or by
+    a second stream feeding the same table, would restart at epoch 0
+    under a higher mark and silently no-op: the default is a hash of
     ``checkpoint_dir`` (distinct checkpoints never collide), and a
     caller-supplied ``stream_id`` survives checkpoint relocation."""
     return stream_id or hashlib.sha256(
@@ -195,7 +196,7 @@ def run_incremental_ndv_sketches(
             return
         snap_append_txn(spark, table,
                         hll_partials(batch, keys, col, lgk=lgk),
-                        txn=f"ndv-{sid}-epoch-{epoch}")
+                        app_id=f"ndv-{sid}", epoch=epoch)
 
     run_incremental_merge(spark, drop_dir, schema, apply, checkpoint_dir,
                           fmt=fmt)
@@ -242,7 +243,7 @@ def run_incremental_expectations(
         report = run_expectations(batch, checks_factory(batch)) \
             .withColumn("epoch", F.lit(epoch).cast("long"))
         snap_append_txn(spark, table, report,
-                        txn=f"dq-{sid}-epoch-{epoch}")
+                        app_id=f"dq-{sid}", epoch=epoch)
 
     run_incremental_merge(spark, drop_dir, schema, apply, checkpoint_dir,
                           fmt=fmt, max_files_per_trigger=max_files_per_trigger)
@@ -274,7 +275,7 @@ def run_incremental_variant_ingest(
 
     * parse-able documents conform to typed rows and append to
       ``table`` (``snap_append_txn`` keyed by stream id + epoch — a
-      replayed epoch sees its txn and skips);
+      replayed epoch finds the head's mark at or past it and skips);
     * malformed lines (NULL variant) append RAW to
       ``quarantine_table`` with the epoch, never dropped silently (the
       M14 quarantine discipline; ref ``user_table.py:116-121`` drops
@@ -288,7 +289,7 @@ def run_incremental_variant_ingest(
     persisted across the three sinks (the standard foreachBatch
     multi-sink discipline), so at scale each micro-batch costs one
     text scan + one parse, then three bounded appends. All three
-    tables share the txn id but dedupe independently, so a crash
+    tables share the app id but keep their own marks, so a crash
     between sinks replays only the missing appends."""
     from pyspark.sql import functions as F
 
@@ -316,15 +317,15 @@ def run_incremental_variant_ingest(
             F.col("value").alias("_raw"),
             as_variant(F.col("value")).alias("__doc__")).persist()
         try:
-            txn = f"vi-{sid}-epoch-{epoch}"
+            app_id = f"vi-{sid}"
             conformed = conform_fn(
                 docs.where(F.col("__doc__").isNotNull()), "__doc__", spec)
-            snap_append_txn(spark, table, conformed, txn=txn,
+            snap_append_txn(spark, table, conformed, app_id, epoch,
                             note=f"variant ingest epoch {epoch}")
             if quarantine_table:
                 bad = docs.where(F.col("__doc__").isNull()).select(
                     "_raw", F.lit(epoch).cast("long").alias("epoch"))
-                snap_append_txn(spark, quarantine_table, bad, txn=txn,
+                snap_append_txn(spark, quarantine_table, bad, app_id, epoch,
                                 note=f"variant quarantine epoch {epoch}")
             if ledger_table:
                 checks = [custom("variant_parse",
@@ -337,7 +338,7 @@ def run_incremental_variant_ingest(
                     spark, ledger_table,
                     report.withColumn("epoch",
                                       F.lit(epoch).cast("long")),
-                    txn=txn, note=f"variant dq epoch {epoch}")
+                    app_id, epoch, note=f"variant dq epoch {epoch}")
         finally:
             docs.unpersist()
 

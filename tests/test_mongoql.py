@@ -444,6 +444,21 @@ def test_match_is_type_bracketed_like_mongo(spark):
     assert apply_pipeline(df, [{"$match": {"a": {"$gte": 2}}}]).count() == 2
 
 
+def test_match_reads_a_dropped_field_as_missing(spark):
+    """A field an earlier $project dropped is missing from every
+    document: $match on it matches nothing and ``$exists: false``
+    matches everything. Spark would otherwise resolve the filter below
+    the projection and compare the dropped values (an int query on the
+    dropped string column crashed under ANSI — found by the pipeline
+    fuzz test)."""
+    df = spark.createDataFrame([(1, "x"), (2, "y")], "a int, b string")
+    proj = [{"$project": {"a": 1}}]
+    assert apply_pipeline(df, proj + [{"$match": {"b": 0}}]).count() == 0
+    assert apply_pipeline(df, proj + [{"$match": {"b": "x"}}]).count() == 0
+    assert apply_pipeline(
+        df, proj + [{"$match": {"b": {"$exists": False}}}]).count() == 2
+
+
 def test_expression_operators_cond_ifnull_concat_arith(apps):
     """Aggregation expressions in computed values: $cond (both forms),
     $ifNull, $concat (null-if-any-null), n-ary $add/$multiply, binary

@@ -541,16 +541,17 @@ def test_zorder_n_skip_bound_matrix(spark, tmp_path, k, num_files):
     assert back.count() == n and sorted(back.columns) == cols
 
 
-def test_lake_recover_keeps_committed_but_uncleaned_merge(spark, tmp_path):
+def test_lake_recover_keeps_committed_but_uncleaned_merge(
+        spark, tmp_path, monkeypatch):
     """The _COMMITTED marker (ADVICE r5): a crash AFTER the dynamic
     overwrite fully landed but BEFORE staging cleanup must not roll the
     lake back to the pre-merge state — lake_recover sees the marker,
     keeps the committed data, and just clears the staging dir."""
+    import glob
     import os
 
+    from airflow_pipelines_from_mongo_to_postgres_spark.sources import sinks
     from airflow_pipelines_from_mongo_to_postgres_spark.sources.sinks import (
-        _mark_committed,
-        _stage_pre_state,
         lake_merge,
         lake_recover,
         write_partitioned,
@@ -563,11 +564,16 @@ def test_lake_recover_keeps_committed_but_uncleaned_merge(spark, tmp_path):
     updates = spark.createDataFrame([("d2", 2, 99.0)],
                                     "dt string, k int, v double")
 
-    # simulate: pre-state staged, merge committed, cleanup lost
-    pre = spark.read.parquet(path).filter(F.col("dt") == "d2")
-    pending = _stage_pre_state(spark, path, pre)
-    lake_merge(spark, path, updates, "k", "dt", ["v"], backup=False)
-    _mark_committed(spark, pending)
+    # crash in the real window: the merge committed (marker written),
+    # then the staging cleanup dies
+    def crash(*_):
+        raise RuntimeError("crash before staging cleanup")
+
+    monkeypatch.setattr(sinks, "_delete_dir", crash)
+    with pytest.raises(RuntimeError, match="staging cleanup"):
+        lake_merge(spark, path, updates, "k", "dt", ["v"])
+    monkeypatch.undo()
+    assert len(glob.glob(f"{path}/_pending/*/_COMMITTED")) == 1
 
     def snap():
         return sorted((r.dt, r.k, r.v)
@@ -686,9 +692,9 @@ def test_snapshot_txn_append_is_exactly_once(spark, tmp_path):
     b0 = spark.createDataFrame([(1, "x")], "id long, s string")
     b1 = spark.createDataFrame([(2, "y")], "id long, s string")
 
-    assert S.snap_append_txn(spark, t, b0, txn="epoch-0") == 1
-    assert S.snap_append_txn(spark, t, b0, txn="epoch-0") is None  # replay
-    assert S.snap_append_txn(spark, t, b1, txn="epoch-1") == 2
+    assert S.snap_append_txn(spark, t, b0, "app", 0) == 1
+    assert S.snap_append_txn(spark, t, b0, "app", 0) is None  # replay
+    assert S.snap_append_txn(spark, t, b1, "app", 1) == 2
     assert sorted(r.id for r in S.read_snapshot(spark, t).collect()) == [1, 2]
 
     # real stream: file source -> foreachBatch(snap_append_txn)
@@ -700,12 +706,100 @@ def test_snapshot_txn_append_is_exactly_once(spark, tmp_path):
               .parquet(str(src / "d1")))
     q = (stream.writeStream
          .foreachBatch(lambda df, eid: S.snap_append_txn(
-             spark, t, df, txn=f"stream-{eid}"))
+             spark, t, df, "stream", eid))
          .option("checkpointLocation", str(tmp_path / "ckpt"))
          .trigger(availableNow=True).start())
     q.awaitTermination(120)
     got = sorted(r.id for r in S.read_snapshot(spark, t).collect())
     assert got == [1, 2, 10, 11]
+
+
+def _txn_store(monkeypatch):
+    """A counting local byte store that ``snap_append_txn`` runs on
+    without Spark: each call "writes" one fresh data-file name, so only
+    the manifest path runs."""
+    import uuid
+
+    from airflow_pipelines_from_mongo_to_postgres_spark.sources import snapshots as S
+    from tests.test_pyds import _CountingIO
+
+    monkeypatch.setattr(S, "_write_data_files", lambda *a, **k: (
+        [f"data/{uuid.uuid4().hex}.parquet"], {}))
+    return _CountingIO()
+
+
+def test_txn_append_reads_the_head_not_the_history(tmp_path, monkeypatch):
+    """The exactly-once check reads the head manifest's epoch mark, so
+    the 10th and the 40th append of a stream make the same reads (at
+    most 3 HEAD reads, 3 existence probes and 3 version-file reads);
+    a walk over the manifest chain would grow with the version."""
+    from airflow_pipelines_from_mongo_to_postgres_spark.sources import snapshots as S
+
+    io, t = _txn_store(monkeypatch), str(tmp_path / "ledger")
+    seen = {}
+    for epoch in range(40):
+        io.calls.clear()
+        assert S.snap_append_txn(io, t, None, "app", epoch) == epoch + 1
+        seen[epoch + 1] = (io.calls["read_head"], io.calls["exists"],
+                           io.calls["read_version"])
+    assert seen[10] == seen[40], seen
+    assert all(n <= 3 for n in seen[40]), seen[40]
+    io.calls.clear()
+    assert S.snap_append_txn(io, t, None, "app", 39) is None    # replay
+    assert io.calls["read_version"] == 1
+    assert S.committed_epoch(io, t, "app") == 39
+
+
+def test_txn_marks_are_per_app(spark, tmp_path, monkeypatch):
+    """Two streams appending to one table keep independent marks: one's
+    progress never makes the other's next epoch a no-op. A table
+    without marks (or without versions) answers -1."""
+    from airflow_pipelines_from_mongo_to_postgres_spark.sources import snapshots as S
+
+    assert S.committed_epoch(spark, str(tmp_path / "none"), "a") == -1
+    io, t = _txn_store(monkeypatch), str(tmp_path / "shared")
+    assert S.committed_epoch(io, t, "a") == -1
+    assert S.snap_append_txn(io, t, None, "a", 5) == 1
+    assert S.committed_epoch(io, t, "b") == -1
+    assert S.snap_append_txn(io, t, None, "b", 0) == 2
+    assert S.snap_append_txn(io, t, None, "a", 5) is None
+    assert S.snap_append_txn(io, t, None, "b", 1) == 3
+    assert S.snap_append_txn(io, t, None, "a", 6) == 4
+    assert (S.committed_epoch(io, t, "a"),
+            S.committed_epoch(io, t, "b")) == (6, 1)
+
+
+def test_txn_marks_survive_rewrites(spark, tmp_path):
+    """Compaction, overwrite (both writers) and restore commit inline
+    manifests; each carries the head's epoch marks forward, so replaying
+    an already committed epoch stays a no-op after any of them."""
+    from airflow_pipelines_from_mongo_to_postgres_spark.sources import (
+        pyds,
+        snapshots as S,
+    )
+
+    pyds.register_python_sources(spark)
+    t = str(tmp_path / "marks")
+
+    def batch(i):
+        return spark.createDataFrame([(i, "x")], "id long, s string")
+
+    assert S.snap_append_txn(spark, t, batch(0), "app", 0) == 1
+    assert S.snap_append_txn(spark, t, batch(1), "app", 1) == 2
+    for rewrite in (lambda: S.snap_compact(spark, t),
+                    lambda: S.snap_overwrite(spark, t, batch(7)),
+                    lambda: batch(8).write.format("snaptable")
+                    .mode("overwrite").save(t),
+                    lambda: S.snap_restore(spark, t, 2)):
+        rewrite()
+        v = S.current_version(spark, t)
+        assert S.committed_epoch(spark, t, "app") == 1
+        assert S.snap_append_txn(spark, t, batch(1), "app", 1) is None
+        assert S.current_version(spark, t) == v
+    assert sorted(r.id for r in S.read_snapshot(spark, t).collect()) == [0, 1]
+    assert S.snap_append_txn(spark, t, batch(2), "app", 2) == 7
+    assert sorted(r.id for r in S.read_snapshot(spark, t).collect()) == [
+        0, 1, 2]
 
 
 def test_lake_apply_cdc_replay_is_idempotent(spark, tmp_path):
@@ -1044,7 +1138,7 @@ def test_lake_apply_cdc_drops_emptied_timestamp_partition(spark, tmp_path):
 
     changes = spark.createDataFrame(
         [("D", t1, 1, None)], "op string, dt timestamp, k int, v double")
-    lake_apply_cdc(spark, path, changes, "k", "dt", backup=False)
+    lake_apply_cdc(spark, path, changes, "k", "dt")
 
     left = glob.glob(f"{path}/dt=*")
     assert len(left) == 1, left                    # emptied t1 dir GONE
