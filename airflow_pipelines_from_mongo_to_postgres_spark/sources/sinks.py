@@ -158,17 +158,28 @@ def _overwrite_staged(spark, path: str, current: DataFrame,
     lake's crash protocol: stage ``current`` (their pre-state) to
     ``_pending``, overwrite, delete ``drop_dirs`` (URI-encoded partition
     directories the overwrite cannot empty) still inside the crash
-    window, then mark ``_COMMITTED`` and drop the staging."""
+    window, then mark ``_COMMITTED`` and drop the staging.
+
+    A drop that leaves the lake with no partition directory at all
+    keeps the first dropped directory holding one zero-row parquet
+    file: Spark cannot infer a schema from a lake without data files,
+    so an all-deleted lake would otherwise be unreadable."""
     pending = _stage_pre_state(spark, path, current)
     write_partitioned(result, path, [partition_col], files_per_partition)
     if drop_dirs:
-        fs, _ = _jvm_fs(spark, path)
+        fs, root = _jvm_fs(spark, path)
         classes = _jvm_classes(spark)
         for d in drop_dirs:
             # input_file_name() yields URI-ENCODED paths (space -> %20,
             # the hive escape's own % -> %25); go through java.net.URI
             # so the JVM decodes them into the on-disk directory name
             fs.delete(classes.Path(classes.URI(d)), True)
+        if not any(st.isDirectory() and st.getPath().getName()
+                   .startswith(f"{partition_col}=")
+                   for st in fs.listStatus(root)):
+            keep = classes.Path(classes.URI(drop_dirs[0])).toString()
+            spark.createDataFrame([], current.drop(partition_col).schema) \
+                .write.mode("overwrite").parquet(keep)
     _mark_committed(spark, pending)
     _delete_dir(spark, pending)
 

@@ -632,6 +632,34 @@ def test_lake_apply_cdc_deletes_replaces_and_drops_emptied_partition(spark, tmp_
     assert not os.path.exists(f"{path}/_pending")     # clean run, no residue
 
 
+def test_lake_apply_cdc_deleting_every_row_leaves_readable_lake(spark, tmp_path):
+    """A CDC batch that deletes every row of the lake leaves it empty
+    but readable (one partition directory keeps a zero-row file with
+    the schema), and a later insert batch lands normally."""
+    from airflow_pipelines_from_mongo_to_postgres_spark.sources.sinks import (
+        lake_apply_cdc,
+        write_partitioned,
+    )
+
+    path = str(tmp_path / "lake")
+    write_partitioned(spark.createDataFrame(
+        [("d1", 1, 10.0), ("d2", 3, 30.0), ("d1", 5, 50.0)],
+        "dt string, k int, v double"), path, ["dt"])
+    schema = "op string, dt string, k int, v double, ts int"
+
+    lake_apply_cdc(spark, path, spark.createDataFrame(
+        [("D", "d1", 1, None, 0), ("D", "d2", 3, None, 1),
+         ("D", "d1", 5, None, 2)], schema), "k", "dt", ts_col="ts")
+    empty = spark.read.parquet(path)
+    assert empty.count() == 0
+    assert sorted(empty.columns) == ["dt", "k", "v"]
+
+    lake_apply_cdc(spark, path, spark.createDataFrame(
+        [("I", "d2", 7, 70.0, 3)], schema), "k", "dt", ts_col="ts")
+    got = [(r.dt, r.k, r.v) for r in spark.read.parquet(path).collect()]
+    assert got == [("d2", 7, 70.0)]
+
+
 def test_snapshot_table_commits_time_travel_and_vacuum(spark, tmp_path):
     """Manifest-snapshot table: append/overwrite/replace_where commits
     are atomic manifest swaps; a reader resolved at v1 still sees v1
