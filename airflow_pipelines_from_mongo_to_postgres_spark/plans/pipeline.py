@@ -5,8 +5,9 @@ Full migration (ref mongo_to_postgres_migration.py): nested source →
 conform → warehouse. Daily update (ref mongo_to_postgres_updation.py):
 incremental batch → surrogate-key reconciliation → merge-upsert →
 warehouse. The warehouse holds one snapshot table per entity
-(sources/snapshots.py); for a real Postgres target the same merged frame
-goes through ``jdbc_merge`` (sources/sinks.py).
+(sources/snapshots.py). No Postgres write is wired in here:
+``jdbc_merge`` (sources/sinks.py) is the set-based Postgres merge, and
+its one package caller is the ``$merge`` jdbc target.
 
 No CSV staging between stages (ref user_table.py:90,97) — the lazy
 DataFrame is the inter-stage IR; Spark checkpoints only at the sink.

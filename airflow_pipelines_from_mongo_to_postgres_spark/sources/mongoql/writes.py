@@ -1,4 +1,4 @@
-"""Terminal write stages ``$merge``/``$out`` — snap/lake/jdbc targets,
+"""Terminal write stages ``$merge``/``$out`` — snap/jdbc targets,
 whenMatched/whenNotMatched policies, update pipelines (dataflow
 form AND the server-side SET-clause compilation for jdbc targets),
 plus the SQL-literal/expression renderers. Split from
@@ -22,9 +22,9 @@ def _target_spec(targets, name, op: str) -> dict:
     """Normalize a target binding. A bare string is a snapshot-table
     path (the default sink); a dict selects the kind:
 
-    - ``{"kind": "snap", "path": p}`` — snapshot table (full matrix)
-    - ``{"kind": "lake", "path": p, "partition_col": c}`` — hive-
-      partitioned lake via ``lake_merge`` (partition-pruned rewrite)
+    - ``{"kind": "snap", "path": p}`` — snapshot table (full matrix);
+      a table created partitioned (``snap_append(partition_by=...)``)
+      keeps its layout through ``$merge``
     - ``{"kind": "jdbc", "url": u, "table": t[, "properties",
       "dialect"]}`` — live database via ``jdbc_merge`` (staging + ONE
       set-based MERGE/ON CONFLICT statement)
@@ -351,7 +351,7 @@ def _write_stage(df: DataFrame, op: str, spec: Any, targets) -> DataFrame:
                                    on a rectangular schema)
     -              [pipeline]   -> $set/$addFields update pipeline over
                                    the matched target rows, $$new bound
-                                   to the batch doc — snap/lake targets
+                                   to the batch doc — snap targets
                                    via _merge_update_pipeline (column
                                    expressions), jdbc targets compiled
                                    into the single server-side
@@ -367,7 +367,7 @@ def _write_stage(df: DataFrame, op: str, spec: Any, targets) -> DataFrame:
     documented: the batch must have at most one row per ``on`` key (a
     distributed engine has no doc order to break ties; Mongo errors on
     multi-matches too), whenMatched update pipelines support the
-    $set/$addFields/$unset subset (all three target kinds; jdbc takes
+    $set/$addFields/$unset subset (both target kinds; jdbc takes
     the SQL-compilable expression subset), and batch columns
     absent from the target's schema
     raise (evolve the schema with $out/snap_overwrite first). Returns
@@ -389,12 +389,6 @@ def _write_stage(df: DataFrame, op: str, spec: Any, targets) -> DataFrame:
         if kind == "snap":
             snap_overwrite(spark, t["path"], df, note="$out")
             return _read_or_empty(spark, t["path"], df)
-        if kind == "lake":
-            w = df.write.mode("overwrite")
-            if t.get("partition_col"):
-                w = w.partitionBy(t["partition_col"])
-            w.parquet(t["path"])
-            return spark.read.parquet(t["path"])
         if kind == "jdbc":
             props = t.get("properties") or {}
             df.write.mode("overwrite").jdbc(t["url"], t["table"],
@@ -437,89 +431,40 @@ def _write_stage(df: DataFrame, op: str, spec: Any, targets) -> DataFrame:
             f"{ {k: dup[0][k] for k in keys} } — dedupe upstream")
 
     kind = t.get("kind", "snap")
-    if kind != "snap":
-        # lake/jdbc sinks implement exactly the UPSERT (the reference's
+    if kind == "jdbc":
+        # the jdbc sink implements exactly the UPSERT (the reference's
         # flagship write, ref user_table.py:105-121 made set-based):
         # matched rows update, misses insert — Mongo's default
         # merge+insert (== replace+insert on a rectangular full-column
         # batch). The full matrix needs the snapshot sink.
         if wm not in ("merge", "replace", "pipeline") or wnm != "insert":
             raise ValueError(
-                f"$merge into a {kind!r} target supports whenMatched "
+                "$merge into a 'jdbc' target supports whenMatched "
                 "merge/replace + whenNotMatched insert (the sink's "
                 "upsert); use a snap target for the full matrix")
-        mutable = [c for c in df.columns if c not in keys]
-        if kind == "lake":
-            from airflow_pipelines_from_mongo_to_postgres_spark.sources.sinks import (
-                lake_merge,
-            )
-            from airflow_pipelines_from_mongo_to_postgres_spark.sources.snapshots import (
-                _jvm_fs,
-            )
+        from airflow_pipelines_from_mongo_to_postgres_spark.sources.sinks import (
+            jdbc_merge,
+        )
 
-            fs, hpath = _jvm_fs(spark, t["path"])
-            # existence probe must mean "has data", not "dir exists" —
-            # an empty dir (failed prior write) would make the target
-            # read below die with a raw schema-inference
-            # AnalysisException instead of bootstrapping
-            if not fs.exists(hpath) or not fs.listStatus(hpath):
-                # bootstrap: Mongo creates the target collection. This
-                # covers whenMatched update pipelines too — with no
-                # existing target every batch row is whenNotMatched,
-                # so insert-all IS Mongo's result (the pipeline never
-                # runs against an empty matched set).
-                (df.write.mode("overwrite")
-                 .partitionBy(t["partition_col"]).parquet(t["path"]))
+        props = t.get("properties") or {}
+        dialect = t.get("dialect", "postgres")
+        set_sql = None
+        if wm == "pipeline":
+            # compile the $set pipeline into the SET clause of the
+            # single server-side statement — the update runs in the
+            # SAME transaction as the insert, no read-modify-write
+            if dialect == "postgres":
+                quote, tq, sq = (lambda c: c), t["table"], "EXCLUDED"
             else:
-                batch = df
-                if wm == "pipeline":
-                    # read-modify-write: evaluate the $set pipeline over
-                    # the MATCHED target rows (partition pruning happens
-                    # inside lake_merge's touched-partition isin scan;
-                    # here the target read is key-bounded by the semi
-                    # join), then upsert the computed rows — matched
-                    # rows carry pipeline results, misses insert as-is
-                    tgt = spark.read.parquet(t["path"])
-                    if set(df.columns) != set(tgt.columns):
-                        raise ValueError(
-                            "$merge whenMatched pipeline into a lake "
-                            "target needs a rectangular batch (same "
-                            "columns as the target)")
-                    tkeys = tgt.select(*keys).dropDuplicates(keys)
-                    up = _merge_update_pipeline(
-                        tgt, df.join(tkeys, keys, "left_semi"),
-                        keys, wm_pipe, df.columns, spec.get("let"))
-                    batch = up.unionByName(
-                        df.join(tkeys, keys, "left_anti")
-                        .select(*up.columns))
-                lake_merge(spark, t["path"], batch, keys,
-                           t["partition_col"],
-                           [c for c in batch.columns if c not in keys])
-            return spark.read.parquet(t["path"])
-        if kind == "jdbc":
-            from airflow_pipelines_from_mongo_to_postgres_spark.sources.sinks import (
-                jdbc_merge,
-            )
-
-            props = t.get("properties") or {}
-            dialect = t.get("dialect", "postgres")
-            set_sql = None
-            if wm == "pipeline":
-                # compile the $set pipeline into the SET clause of the
-                # single server-side statement — the update runs in the
-                # SAME transaction as the insert, no read-modify-write
-                if dialect == "postgres":
-                    quote, tq, sq = (lambda c: c), t["table"], "EXCLUDED"
-                else:
-                    quote, tq, sq = (lambda c: f'"{c}"'), "t", "s"
-                set_sql = _compile_merge_set_sql(
-                    wm_pipe, keys, list(df.columns), spec.get("let"),
-                    quote, tq, sq)
-            jdbc_merge(df, t["url"], t["table"], keys, mutable,
-                       properties=props, dialect=dialect,
-                       set_sql=set_sql)
-            return spark.read.jdbc(t["url"], t["table"],
-                                   properties=props)
+                quote, tq, sq = (lambda c: f'"{c}"'), "t", "s"
+            set_sql = _compile_merge_set_sql(
+                wm_pipe, keys, list(df.columns), spec.get("let"),
+                quote, tq, sq)
+        jdbc_merge(df, t["url"], t["table"], keys,
+                   [c for c in df.columns if c not in keys],
+                   properties=props, dialect=dialect, set_sql=set_sql)
+        return spark.read.jdbc(t["url"], t["table"], properties=props)
+    if kind != "snap":
         raise ValueError(f"unknown $merge target kind: {kind!r}")
 
     path = t["path"]

@@ -295,6 +295,7 @@ def _infer_partition_type(values: list):
 
     return {"int": pa.int32(), "bigint": pa.int64(),
             "double": pa.float64(), "date": pa.date32(),
+            "timestamp": pa.timestamp("us", tz="UTC"),
             "string": pa.string()}[partition_spark_type(values)]
 
 

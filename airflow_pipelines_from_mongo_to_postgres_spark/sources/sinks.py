@@ -28,33 +28,6 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from airflow_pipelines_from_mongo_to_postgres_spark.sources.snapshots import _jvm_classes, _jvm_fs
-
-
-def _hive_unescape(name: str) -> str:
-    """Invert Hive's partition-directory escaping (space -> %20, '/' ->
-    %2F, ...). Mirrors
-    org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    .unescapePathName: every %XX with two hex digits decodes; malformed
-    sequences pass through literally."""
-    import string
-
-    out = []
-    i, n = 0, len(name)
-    while i < n:
-        c = name[i]
-        if c == "%" and i + 3 <= n:
-            hx = name[i + 1:i + 3]
-            # strict two-hex-digit rule like the Java implementation —
-            # int(hx, 16) alone would also accept '+5' or ' f'
-            if all(ch in string.hexdigits for ch in hx):
-                out.append(chr(int(hx, 16)))
-                i += 3
-                continue
-        out.append(c)
-        i += 1
-    return "".join(out)
-
 
 def write_parquet(df: DataFrame, path: str, mode: str = "overwrite",
                   partition_by: Sequence[str] = ()) -> None:
@@ -62,361 +35,6 @@ def write_parquet(df: DataFrame, path: str, mode: str = "overwrite",
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
-
-
-def write_partitioned(df: DataFrame, path: str,
-                      partition_by: Sequence[str],
-                      files_per_partition: int = 1,
-                      dynamic: bool = True) -> None:
-    """Lake-layout writer: hive-partitioned parquet with dynamic
-    partition overwrite and small-file control.
-
-    * **Dynamic overwrite** (``partitionOverwriteMode=dynamic``, set as a
-      per-write option so the session default is untouched): an
-      incremental batch replaces ONLY the partition directories it
-      contains. This is what makes a daily re-run idempotent at 100 TB —
-      static overwrite mode would truncate the whole lake to write one
-      day.
-    * **Small-file control**: rows are repartitioned by the partition
-      columns (plus a bounded file-bucket salt when
-      ``files_per_partition > 1``) before the write, so each partition
-      directory gets ~``files_per_partition`` parquet files instead of
-      one tiny file per shuffle task — the classic small-files bomb
-      (tasks × partitions files) that kills a 1000-executor scan with
-      open/seek overhead.
-
-    Readers prune on the partition columns for free (PartitionFilters in
-    the scan, asserted in tests/test_sinks.py).
-    """
-    keys = [F.col(c) for c in partition_by]
-    if files_per_partition > 1:
-        salted = df.withColumn(
-            "__file_bucket",
-            F.pmod(F.spark_partition_id(), F.lit(files_per_partition)))
-        salted = salted.repartition(*keys, F.col("__file_bucket")) \
-            .drop("__file_bucket")
-    else:
-        salted = df.repartition(*keys)
-    w = salted.write.mode("overwrite").partitionBy(*partition_by)
-    if dynamic:
-        w = w.option("partitionOverwriteMode", "dynamic")
-    w.parquet(path)
-
-
-def lake_merge(spark, path: str, updates: DataFrame,
-               key: str | Sequence[str], partition_col: str,
-               mutable: Sequence[str],
-               files_per_partition: int = 1) -> list:
-    """MERGE (upsert with partial-column update) into a hive-partitioned
-    parquet lake, rewriting ONLY the partitions the update batch touches —
-    the table-format-free equivalent of a Delta/Iceberg ``MERGE INTO``.
-
-    Plan: the batch's distinct partition values are collected (bounded by
-    the batch's partition spread — a daily batch touches a handful of
-    days, never the lake), the lake is read WITH a static ``isin`` filter
-    on those values (partition pruning: untouched directories are never
-    opened), ``operators.merge.merge_upsert`` runs the set-based merge,
-    and ``write_partitioned``'s dynamic overwrite replaces exactly the
-    touched directories. Untouched partitions keep their files
-    byte-for-byte (asserted in tests/test_sinks.py).
-
-    Constraint: ``partition_col`` must be immutable per key (the standard
-    date-partitioned-fact contract) — a key that moves partitions would
-    leave its old row in an untouched directory.
-
-    **Crash safety**: dynamic partition overwrite is
-    not atomic across the touched directories — a crash inside the
-    commit window can leave a partition deleted-but-not-repopulated, and
-    a naive re-run would then read the DAMAGED state as "current" and
-    lose the rows that weren't in the batch. So before overwriting, the
-    touched partitions' pre-state is staged to ``<path>/_pending/<id>``
-    (underscore-prefixed → invisible to every Spark reader; cost is one
-    extra read+write of just the touched partitions, bounded by the
-    batch's partition spread, never the lake). The staging dir is
-    removed after a successful overwrite; ``lake_recover`` restores any
-    committed-but-unapplied staging on restart, after which the
-    idempotent batch simply re-runs.
-
-    Returns the list of touched partition values.
-    """
-    from airflow_pipelines_from_mongo_to_postgres_spark.operators.merge import merge_upsert
-
-    touched = [r[0] for r in updates.select(partition_col).distinct().collect()]
-    current = spark.read.parquet(path) \
-        .filter(F.col(partition_col).isin(touched))
-    merged = merge_upsert(current, updates, key, mutable)
-    _overwrite_staged(spark, path, current, merged, partition_col,
-                      files_per_partition)
-    return touched
-
-
-def _overwrite_staged(spark, path: str, current: DataFrame,
-                      result: DataFrame, partition_col: str,
-                      files_per_partition: int,
-                      drop_dirs: Sequence[str] = ()) -> None:
-    """Dynamic-overwrite ``result`` over the touched partitions under the
-    lake's crash protocol: stage ``current`` (their pre-state) to
-    ``_pending``, overwrite, delete ``drop_dirs`` (URI-encoded partition
-    directories the overwrite cannot empty) still inside the crash
-    window, then mark ``_COMMITTED`` and drop the staging.
-
-    A drop that leaves the lake with no partition directory at all
-    keeps the first dropped directory holding one zero-row parquet
-    file: Spark cannot infer a schema from a lake without data files,
-    so an all-deleted lake would otherwise be unreadable."""
-    pending = _stage_pre_state(spark, path, current)
-    write_partitioned(result, path, [partition_col], files_per_partition)
-    if drop_dirs:
-        fs, root = _jvm_fs(spark, path)
-        classes = _jvm_classes(spark)
-        for d in drop_dirs:
-            # input_file_name() yields URI-ENCODED paths (space -> %20,
-            # the hive escape's own % -> %25); go through java.net.URI
-            # so the JVM decodes them into the on-disk directory name
-            fs.delete(classes.Path(classes.URI(d)), True)
-        if not any(st.isDirectory() and st.getPath().getName()
-                   .startswith(f"{partition_col}=")
-                   for st in fs.listStatus(root)):
-            keep = classes.Path(classes.URI(drop_dirs[0])).toString()
-            spark.createDataFrame([], current.drop(partition_col).schema) \
-                .write.mode("overwrite").parquet(keep)
-    _mark_committed(spark, pending)
-    _delete_dir(spark, pending)
-
-
-def _stage_pre_state(spark, path: str, current: DataFrame) -> str:
-    """Write the touched partitions' pre-merge rows to
-    ``<path>/_pending/<id>/data`` with Spark's own _SUCCESS marker.
-    The id is derived from the JVM clock (monotonic enough for one lake's
-    sequential batches)."""
-    ts = _jvm_classes(spark).System.currentTimeMillis()
-    pending = f"{path}/_pending/{ts}"
-    current.write.mode("overwrite").parquet(f"{pending}/data")
-    return pending
-
-
-def _mark_committed(spark, pending: str) -> None:
-    """Zero-byte ``<pending>/_COMMITTED`` written BETWEEN the dynamic
-    overwrite and the staging cleanup: a crash in that gap then leaves a
-    staging dir that ``lake_recover`` can tell apart from a torn
-    overwrite — the commit landed, so restoring the pre-state would
-    ROLL BACK committed data. One tiny create per overwrite."""
-    fs, jp = _jvm_fs(spark, f"{pending}/_COMMITTED")
-    fs.create(jp, True).close()
-
-
-def _delete_dir(spark, p: str) -> None:
-    fs, jp = _jvm_fs(spark, p)
-    fs.delete(jp, True)
-    parent = jp.getParent()
-    if (parent.getName() == "_pending" and fs.exists(parent)
-            and len(fs.listStatus(parent)) == 0):
-        fs.delete(parent, False)
-
-
-def lake_recover(spark, path: str, partition_col: str,
-                 files_per_partition: int = 1) -> list:
-    """Restore a lake after a crashed ``lake_merge``/``compact_lake``,
-    distinguishing the three crash positions by the staging markers:
-
-    * ``_COMMITTED`` present — the dynamic overwrite fully landed and
-      only the cleanup was lost: restoring would ROLL BACK committed
-      data, so the staging dir is just deleted (nothing restored, the
-      batch must NOT re-run).
-    * ``data/_SUCCESS`` present, no ``_COMMITTED`` — the crash was
-      inside the overwrite commit window (torn): the staged pre-state
-      is rewritten back (dynamic overwrite → exactly the staged
-      directories), newest last so the most recent pre-state wins, and
-      the idempotent batch re-runs.
-    * neither — the crash was during backup, the lake itself was never
-      touched; the partial staging is deleted.
-
-    Returns the restored partition values. No-op (returns []) on a
-    clean lake — safe to call unconditionally at job start."""
-    fs, root = _jvm_fs(spark, f"{path}/_pending")
-    if not fs.exists(root):
-        return []
-    restored = []
-    entries = sorted((st.getPath().getName() for st in fs.listStatus(root)
-                      if st.isDirectory()), key=str)
-    Path = _jvm_classes(spark).Path
-    for name in entries:
-        data = f"{path}/_pending/{name}/data"
-        committed = fs.exists(Path(f"{path}/_pending/{name}/_COMMITTED"))
-        if not committed and fs.exists(Path(f"{data}/_SUCCESS")):
-            pre = spark.read.parquet(data)
-            write_partitioned(pre, path, [partition_col],
-                              files_per_partition)
-            restored += [r[0] for r in
-                         pre.select(partition_col).distinct().collect()]
-        _delete_dir(spark, f"{path}/_pending/{name}")
-    return restored
-
-
-def check_partition_immutability(spark, path: str, batch: DataFrame,
-                                 key: str | Sequence[str],
-                                 partition_col: str,
-                                 sample: int = 5) -> None:
-    """Enforce the lake-merge family's contract: ``partition_col`` must
-    be immutable per key. A batch row whose key already lives in a
-    DIFFERENT partition would leave its old row stranded in an
-    untouched directory (a silent duplicate), so violation RAISES with
-    a bounded sample instead. Cost: one semi-style join of the batch
-    against ONLY its own touched partitions' (key, partition) pairs —
-    partition pruning keeps the read batch-sized, the collect is capped
-    at ``sample`` rows. Call before ``lake_merge``/``lake_apply_cdc``
-    when the upstream cannot guarantee the invariant."""
-    keys = [key] if isinstance(key, str) else list(key)
-    b = batch.select(*keys, F.col(partition_col).alias("__new_part")) \
-        .distinct()
-    # the old row can live in ANY partition, so this check scans the
-    # key+partition columns of the whole lake — column-pruned to two
-    # columns, no data columns read; run it when ingest can't vouch
-    cur = spark.read.parquet(path) \
-        .select(*keys, F.col(partition_col).alias("__old_part"))
-    moved = (cur.join(b, keys)
-             .filter(F.col("__old_part") != F.col("__new_part"))
-             .limit(sample).collect())
-    if moved:
-        bad = [(tuple(r[k] for k in keys), r["__old_part"], r["__new_part"])
-               for r in moved]
-        raise ValueError(
-            "partition-immutability violated: batch moves key(s) across "
-            f"partitions (key, old, new): {bad} — merging would strand "
-            "the old rows in untouched directories; route these through "
-            "a delete+insert CDC batch instead")
-
-
-def lake_apply_cdc(spark, path: str, changes: DataFrame,
-                   key: str | Sequence[str], partition_col: str,
-                   op_col: str = "op", ts_col: str | None = None,
-                   files_per_partition: int = 1) -> list:
-    """Apply a change-data-capture batch (insert / update / DELETE rows)
-    to the partitioned lake — the hard-delete path ``lake_merge`` (an
-    upsert) cannot express. ``changes`` carries ``op_col`` ∈ {'I','U',
-    'D'}: I/U rows replace the target row wholesale (CDC images are
-    full rows, unlike the merge path's partial-column policies), D rows
-    remove the key. ``ts_col`` compacts multi-op batches first — the
-    LATEST op per key wins (op-ledger order, the q54/q76 semantics), so
-    U→D deletes and D→U resurrects, matching a replayed ledger
-    (property-tested against a dict replay in tests/test_properties.py).
-    Contract: ``ts_col`` must totally order each key's ops — a tie
-    within a key makes "latest" undefined and the compaction pick
-    nondeterministic (CDC sources emit per-key-monotone LSNs; pass that
-    column).
-
-    Scale shape: identical to ``lake_merge`` — touched partition values
-    collected (bounded by the batch's spread), static ``isin`` partition
-    pruning on the read, one anti join (deletes ∪ replaced keys) + one
-    union, dynamic overwrite of exactly the touched directories, with
-    the same ``_pending`` staging / ``_COMMITTED`` marker crash
-    protocol. Same contract: ``partition_col`` immutable per key, and a
-    D row must name the partition its key lives in.
-
-    Returns the touched partition values."""
-    keys = [key] if isinstance(key, str) else list(key)
-    if ts_col is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(*keys).orderBy(F.col(ts_col).desc())
-        changes = (changes.withColumn("__rn", F.row_number().over(w))
-                   .filter(F.col("__rn") == 1).drop("__rn"))
-    touched = [r[0] for r in
-               changes.select(partition_col).distinct().collect()]
-    current = spark.read.parquet(path) \
-        .filter(F.col(partition_col).isin(touched))
-    batch_keys = changes.select(*keys).distinct()
-    survivors = current.join(batch_keys, keys, "left_anti")
-    upserts = changes.filter(F.col(op_col) != "D") \
-        .select(*current.columns)
-    result = survivors.unionByName(upserts)
-    # dynamic overwrite only replaces partitions PRESENT in the result: a
-    # partition whose every row was deleted would silently keep its old
-    # files. Find those BEFORE the overwrite (the lazy plan reads the
-    # pre-overwrite files; afterwards they are gone) and drop their
-    # directories explicitly — inside the crash window (before
-    # _COMMITTED), so a torn run still restores cleanly.
-    remaining = {r[0] for r in
-                 result.select(partition_col).distinct().collect()}
-    # Resolve the emptied partitions' directories from the files Spark
-    # ACTUALLY read for them (input_file_name), not by re-rendering the
-    # value with Python str() — timestamp/float/Decimal renderings can
-    # differ from Spark's partition-directory encoding, which would
-    # leave the old files in place (silent stale rows). Collected
-    # BEFORE the overwrite: the lazy plan points at pre-overwrite files.
-    dead = set(touched) - remaining
-    dead_dirs = []
-    if dead:
-        dead_vals = [v for v in dead if v is not None]
-        pred = F.col(partition_col).isin(dead_vals) if dead_vals \
-            else F.lit(False)
-        if None in dead:
-            pred = pred | F.col(partition_col).isNull()
-        dead_files = [r[0] for r in current.filter(pred)
-                      .select(F.input_file_name()).distinct().collect()]
-        dead_dirs = sorted({f.rsplit("/", 1)[0] for f in dead_files})
-        if None in dead:
-            # NULL renders to a FIXED directory name (no value-encoding
-            # ambiguity), and isin() can't see null rows to resolve it
-            dead_dirs.append(
-                f"{path}/{partition_col}=__HIVE_DEFAULT_PARTITION__")
-    _overwrite_staged(spark, path, current, result, partition_col,
-                      files_per_partition, drop_dirs=dead_dirs)
-    return touched
-
-
-def compact_lake(spark, path: str, partition_col: str,
-                 max_files: int = 8, files_per_partition: int = 1) -> list:
-    """Small-file compaction for a hive-partitioned parquet lake: rewrite
-    ONLY the partitions whose parquet file count exceeds ``max_files``,
-    coalescing each to ``files_per_partition`` files.
-
-    File counts come from a METADATA listing (the JVM Hadoop FileSystem
-    API — works for local paths and any hadoop-compatible store), never
-    from scanning data; the rewrite reads just the offending partitions
-    (static ``isin`` filter → partition pruning) and dynamic overwrite
-    replaces them in place. Healthy partitions keep their files
-    byte-for-byte. This is the maintenance job that keeps a
-    streaming-appended lake scannable: micro-batches each add a file per
-    partition, and without compaction a 1000-executor scan pays
-    open/seek per tiny file.
-
-    Returns the list of compacted partition values (as the strings from
-    the directory names; Spark coerces them when filtering).
-    """
-    fs, jpath = _jvm_fs(spark, path)
-    touched = []
-    skipped_null = False
-    for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith(f"{partition_col}=")):
-            continue
-        nfiles = sum(1 for f in fs.listStatus(st.getPath())
-                     if f.getPath().getName().endswith(".parquet"))
-        if nfiles > max_files:
-            raw = name.split("=", 1)[1]
-            # Directory names are hive-ESCAPED (space -> %20 etc.); the
-            # isin filter below compares against the unescaped VALUE, so
-            # a raw name would match nothing and the partition would be
-            # reported touched but never compacted. The null partition
-            # has no value to filter on — skip it (isin is null-safe
-            # false anyway).
-            if raw == "__HIVE_DEFAULT_PARTITION__":
-                skipped_null = True
-                continue
-            touched.append(_hive_unescape(raw))
-    if touched or skipped_null:
-        cond = F.lit(False)
-        if touched:
-            cond = F.col(partition_col).isin(touched)
-        if skipped_null:
-            cond = cond | F.col(partition_col).isNull()
-        sub = spark.read.parquet(path).filter(cond)
-        # same crash-safety staging as lake_merge: a crash inside the
-        # dynamic-overwrite commit window must not lose the partition
-        _overwrite_staged(spark, path, sub, sub, partition_col,
-                          files_per_partition)
-    return touched + ([None] if skipped_null else [])
 
 
 def write_range_layout(df: DataFrame, path: str,
@@ -650,7 +268,7 @@ def upsert_statement(table: str, columns: Sequence[str], key: str | Sequence[str
     conflict = ", ".join(keys)
     if set_sql is not None:
         # an EMPTY compiled pipeline ({} — whenMatched: []) keeps the
-        # matched row unchanged, matching the snap/lake lowering
+        # matched row unchanged, matching the snap lowering
         # (_merge_update_pipeline with no stages); falling through to
         # the overwrite-from-staging SET list would silently flip the
         # semantics to replace (r13 ADVICE)
@@ -707,7 +325,7 @@ def merge_statement(table: str, columns: Sequence[str],
     matched = ""
     if set_sql is not None:
         # empty compiled pipeline → no WHEN MATCHED clause: matched
-        # rows stay unchanged, same as the snap/lake lowering
+        # rows stay unchanged, same as the snap lowering
         if set_sql:
             sets = ", ".join(f"{q(c)} = {e}" for c, e in set_sql.items())
             matched = f"WHEN MATCHED THEN UPDATE SET {sets} "

@@ -6,7 +6,8 @@ and an atomic single-file rename.
 
 Why this exists: it is the package's one commit protocol for tables it
 owns — the pipeline warehouse (plans/pipeline.py), ``$out``/``$merge``
-snap targets and the streaming exactly-once appends (the NDV, DQ and
+snap targets, CDC application (``snap_apply_cdc``, batch and
+streaming) and the streaming exactly-once appends (the NDV, DQ and
 VARIANT-ingest ledgers, and the curation and SemDeDup state ledgers of
 streaming/curation.py) all commit here.
 It is also the only code that reads or writes ``_manifests/``: the
@@ -18,10 +19,7 @@ byte store over the same code, its Python-process io objects. Data
 files are IMMUTABLE and a commit is one manifest rename: readers resolve a manifest once and see a
 consistent file set forever (snapshot isolation); a crashed writer
 leaves only orphan data files that ``vacuum`` reclaims — no recovery
-step, nothing a reader can ever observe half-done. The ``lake_*``
-family (sources/sinks.py) keeps its own ``_pending``/``_COMMITTED``
-staging protocol because its contract is a plain hive tree that other
-engines read in place.
+step, nothing a reader can ever observe half-done.
 
 Layout::
 
@@ -58,6 +56,7 @@ from __future__ import annotations
 import json
 import re
 import uuid
+from datetime import datetime
 from types import SimpleNamespace
 
 from pyspark.sql import DataFrame, SparkSession
@@ -307,14 +306,33 @@ _PART_FLOAT_RE = re.compile(r"[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?\Z")
 #: JVM rejects "inf"/"nan", and so must we)
 _PART_SPECIALS = {"Infinity": float("inf"), "+Infinity": float("inf"),
                   "-Infinity": float("-inf"), "NaN": float("nan")}
+#: Spark's partition timestamp form (``yyyy-MM-dd HH:mm:ss[.S]``, the
+#: rendering a timestamp partition directory gets): parsed to a
+#: datetime so its stat is the same ISO string ``_stat_json`` makes of
+#: a datetime predicate literal; an impossible date stays a string
+#: (the JVM's cast rejects it too)
+_PART_TS_RE = re.compile(
+    r"(\d{4})-(\d{2})-(\d{2}) (\d{2}):(\d{2}):(\d{2})(?:\.(\d{1,9}))?\Z")
+
+
+def _partition_timestamp(v: str):
+    m = _PART_TS_RE.match(v)
+    if m is None:
+        return v
+    *parts, frac = m.groups()
+    try:
+        return datetime(*map(int, parts), int((frac or "0").ljust(6, "0")[:6]))
+    except ValueError:
+        return v
 
 
 def partition_values_of(name: str) -> dict:
     """``col=value`` path segments of a table-relative file name →
     {col: python value or None}, undoing Hive's percent-escaping and
     ``__HIVE_DEFAULT_PARTITION__`` null sentinel, with Spark's scalar
-    inference (int, then float, else string — dates stay ISO strings,
-    which order lexicographically for pruning). Numeric casts are
+    inference (int, then float, then timestamp, else string — dates
+    stay ISO strings, which order lexicographically for pruning;
+    timestamps become datetimes, see _PART_TS_RE). Numeric casts are
     regex-gated to the JVM grammar: exponent forms, bare-point decimals
     and the exact Infinity/NaN tokens parse numeric (the JVM types them
     numeric too — see _PART_FLOAT_RE's note), while underscore
@@ -337,7 +355,7 @@ def partition_values_of(name: str) -> dict:
         elif _PART_FLOAT_RE.match(v):
             out[k] = float(v)
         else:
-            out[k] = v
+            out[k] = _partition_timestamp(v)
     return out
 
 
@@ -366,7 +384,8 @@ def _partition_stats(names: list, partition_by: tuple) -> dict:
 def partition_spark_type(values: list) -> str:
     """Spark SQL type for a hive partition column from its path-parsed
     values, mirroring Spark's own partition inference order (int →
-    bigint → double → date → string) so every reader agrees."""
+    bigint → double → date → timestamp → string) so every reader
+    agrees."""
     vs = [v for v in values if v is not None]
     if not vs:
         return "string"
@@ -375,6 +394,8 @@ def partition_spark_type(values: list) -> str:
                 else "bigint")
     if all(isinstance(v, (int, float)) for v in vs):
         return "double"
+    if all(isinstance(v, datetime) for v in vs):
+        return "timestamp"
     if all(isinstance(v, str)
            and re.fullmatch(r"\d{4}-\d{2}-\d{2}", v) for v in vs):
         return "date"
@@ -971,14 +992,58 @@ def snap_merge_keys(spark: SparkSession, table: str, df: DataFrame,
         # bootstrap: a merge into an empty table is just an append
         return snap_append(spark, table, df, note=note,
                            stat_cols=stat_cols, value_cols=value_cols)
+    return _merge_commit(spark, table, df, df.select(*key_cols).distinct(),
+                         key_cols, note, stat_cols, value_cols)
+
+
+def _merge_commit(spark: SparkSession, table: str, rows: DataFrame,
+                  keys: DataFrame, key_cols: list, note: str,
+                  stat_cols: tuple = (), value_cols: tuple = ()) -> int:
+    """The one merge commit: ``rows`` as new data files in the head's
+    layout plus an equality-delete key file of ``keys``, both sequenced
+    at the new version, so the delete removes the keys' older rows
+    wherever they live and never the rows it ships with."""
     layout = _resolve_layout(spark, table, ())
-    new, stats = _write_data_files(df, table, stat_cols, value_cols,
+    new, stats = _write_data_files(rows, table, stat_cols, value_cols,
                                    partition_by=layout)
     new_seg = _write_segment(spark, table, new, stats)
-    keyf, _ = _write_data_files(df.select(*key_cols).distinct(), table)
+    keyf, _ = _write_data_files(keys, table)
     return _commit_on_head(spark, table, note, "merge", new_seg=new_seg,
                            key_files=keyf, key_cols=key_cols,
                            partition_by=layout)
+
+
+def snap_apply_cdc(spark: SparkSession, table: str, changes: DataFrame,
+                   key: str | list, op_col: str = "op",
+                   ts_col: str | None = None) -> int:
+    """Apply a change-data-capture batch (``op_col`` ∈ {'I','U','D'})
+    to an existing snapshot table as ONE merge commit: every change key
+    (D rows included) goes into the equality-delete key file, and the
+    I/U rows, projected to the table's columns, are the new data. I/U
+    rows replace the key's row wholesale (CDC images are full rows); D
+    removes it. The delete matches on the key alone, so a key whose
+    partition value changed leaves no copy in its old partition.
+
+    ``ts_col`` compacts a multi-op batch first: the LATEST op per key
+    wins (ledger order), so U→D deletes and D→U resurrects, matching a
+    replayed ledger (property-tested in tests/test_properties.py). It
+    must totally order each key's ops (CDC sources emit per-key
+    monotone LSNs). Without it, several I/U rows for one key all land.
+    Re-applying a batch converges: it deletes and re-adds the same
+    rows. A table with no files (never committed) raises
+    ``FileNotFoundError``."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    cols = read_snapshot(spark, table).columns
+    keys = [key] if isinstance(key, str) else list(key)
+    if ts_col is not None:
+        w = Window.partitionBy(*keys).orderBy(F.col(ts_col).desc())
+        changes = (changes.withColumn("__rn", F.row_number().over(w))
+                   .filter(F.col("__rn") == 1).drop("__rn"))
+    upserts = changes.filter(F.col(op_col) != "D").select(*cols)
+    return _merge_commit(spark, table, upserts,
+                         changes.select(*keys).distinct(), keys, "cdc")
 
 
 def _apply_delete_entries(spark: SparkSession, table: str, df: DataFrame,

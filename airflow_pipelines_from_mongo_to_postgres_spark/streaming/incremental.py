@@ -125,38 +125,31 @@ def run_incremental_cdc(
     spark: SparkSession,
     drop_dir: str,
     schema: StructType | str,
-    lake_path: str,
+    table: str,
     key: str,
-    partition_col: str,
     checkpoint_dir: str,
     op_col: str = "op",
     ts_col: str | None = None,
     fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
 ) -> None:
-    """Drain a CDC drop folder into the partitioned lake: each
-    micro-batch applies ``sources.sinks.lake_apply_cdc`` (hard deletes,
-    whole-row replaces, ledger compaction via ``ts_col``). Replay
-    safety WITHOUT a txn log: applying the same CDC batch twice
-    converges (deletes of absent keys no-op, replaces re-write the same
-    rows — the idempotence test in tests/test_sinks.py), so a crashed
-    epoch re-applied by the checkpoint lands in the same state; the
-    ``_pending``/_COMMITTED staging inside lake_apply_cdc covers the
-    torn-overwrite window itself. Recovery discipline: call
-    ``lake_recover`` once at job start (same contract as batch
-    lake_merge jobs)."""
-    from airflow_pipelines_from_mongo_to_postgres_spark.sources.sinks import (
-        lake_apply_cdc,
-        lake_recover,
+    """Drain a CDC drop folder into an existing snapshot table: each
+    micro-batch is one ``snapshots.snap_apply_cdc`` merge commit (hard
+    deletes, whole-row replaces, ledger compaction via ``ts_col``), in
+    the layout the table's head records. Replay needs no epoch mark: a
+    re-applied epoch deletes and re-adds the same rows, so a crashed
+    epoch replayed by the checkpoint lands in the same state, and a
+    commit is one manifest rename, so there is nothing to recover at
+    start."""
+    from airflow_pipelines_from_mongo_to_postgres_spark.sources.snapshots import (
+        snap_apply_cdc,
     )
-
-    lake_recover(spark, lake_path, partition_col)
 
     def apply(batch: DataFrame, _epoch: int) -> None:
         if batch.isEmpty():
             return
-        lake_apply_cdc(spark, lake_path, batch, key, partition_col,
-                       op_col=op_col, ts_col=ts_col)
+        snap_apply_cdc(spark, table, batch, key, op_col=op_col,
+                       ts_col=ts_col)
 
     run_incremental_merge(spark, drop_dir, schema, apply, checkpoint_dir,
                           fmt=fmt, max_files_per_trigger=max_files_per_trigger)

@@ -1115,13 +1115,11 @@ def test_merge_when_matched_update_pipeline(spark, tmp_path):
         with pytest.raises(ValueError, match=msg):
             apply_pipeline(batch, [{"$merge": {
                 "into": "tm", "whenMatched": bad}}], targets={"tm": t})
-    # lake targets run the pipeline read-modify-write (partition-pruned)
-    lk = {"kind": "lake", "path": str(tmp_path / "lk"),
-          "partition_col": "_id"}
-    seed_lake = spark.createDataFrame(
+    # a partitioned snap target runs the pipeline in its own layout
+    lk = str(tmp_path / "lk")
+    S.snap_append(spark, lk, spark.createDataFrame(
         [("a", 10, 1.0), ("b", 20, 2.0)],
-        "_id string, qty int, score double")
-    apply_pipeline(seed_lake, [{"$out": "lk"}], targets={"lk": lk})
+        "_id string, qty int, score double"), partition_by=("_id",))
     out_lk = apply_pipeline(batch, [{"$merge": {
         "into": "lk",
         "whenMatched": [{"$set": {
@@ -1130,6 +1128,7 @@ def test_merge_when_matched_update_pipeline(spark, tmp_path):
     }}], targets={"lk": lk})
     assert sorted((r._id, r.qty, r.score) for r in out_lk.collect()) == \
         [("a", 15, 9.0), ("b", 20, 2.0), ("c", 7, 3.0)]
+    assert S.read_manifest(spark, lk)["partition_by"] == ["_id"]
     # jdbc targets support the pipeline form too (r13) — but only the
     # SQL-compilable expression subset; richer ops raise with guidance
     # BEFORE any connection is attempted
@@ -2206,38 +2205,40 @@ def test_match_expr_and_uncorrelated_lookup(apps, spark):
 
 
 def test_merge_out_lake_and_jdbc_targets(spark, tmp_path):
-    """$merge/$out resolve non-snap targets too: a hive-partitioned
-    lake (lake_merge — partition-pruned rewrite) and a live JDBC
-    database (jdbc_merge — staging + ONE set-based MERGE, Derby). Both
-    implement the upsert (whenMatched merge/replace + insert); other
-    matrix combos raise with guidance."""
+    """$merge/$out resolve both target kinds: a partitioned snapshot
+    table (created with ``snap_append(partition_by=...)``; ``$merge``
+    keeps its layout) and a live JDBC database (jdbc_merge — staging +
+    ONE set-based MERGE, Derby). The jdbc sink implements the upsert
+    (whenMatched merge/replace + insert); other matrix combos raise with
+    guidance, and the retired ``lake`` kind is an unknown kind."""
+    from airflow_pipelines_from_mongo_to_postgres_spark.sources import snapshots as S
     from airflow_pipelines_from_mongo_to_postgres_spark.sources.connectors import (
         read_jdbc,
         write_jdbc_append,
     )
 
-    # --- lake target: $merge bootstraps, then partition-merged upsert
-    lake = {"kind": "lake", "path": str(tmp_path / "lake"),
-            "partition_col": "day"}
-    seed = spark.createDataFrame(
+    # --- partitioned snap target: upsert in the head's layout
+    part = str(tmp_path / "part")
+    S.snap_append(spark, part, spark.createDataFrame(
         [("a", "d1", 1), ("b", "d1", 2), ("c", "d2", 3)],
-        "_id string, day string, v int")
-    out = apply_pipeline(seed, [{"$merge": "t"}], targets={"t": lake})
-    assert sorted((r._id, r.v) for r in out.collect()) == \
-        [("a", 1), ("b", 2), ("c", 3)]
+        "_id string, day string, v int"), partition_by=("day",))
     batch = spark.createDataFrame(
         [("a", "d1", 99), ("d", "d2", 4)], "_id string, day string, v int")
-    out = apply_pipeline(batch, [{"$merge": "t"}], targets={"t": lake})
+    out = apply_pipeline(batch, [{"$merge": "t"}], targets={"t": part})
     assert sorted((r._id, r.v) for r in out.collect()) == \
         [("a", 99), ("b", 2), ("c", 3), ("d", 4)]
-    # $out replaces the lake wholesale
-    out = apply_pipeline(batch, [{"$out": "t"}], targets={"t": lake})
+    assert S.read_manifest(spark, part)["partition_by"] == ["day"]
+    # $out replaces the table wholesale
+    out = apply_pipeline(batch, [{"$out": "t"}], targets={"t": part})
     assert sorted((r._id, r.v) for r in out.collect()) == \
         [("a", 99), ("d", 4)]
     with pytest.raises(ValueError, match="snap target for the full"):
         apply_pipeline(batch, [{"$merge": {
             "into": "t", "whenMatched": "keepExisting"}}],
-            targets={"t": lake})
+            targets={"t": {"kind": "jdbc", "url": "jdbc:x", "table": "t"}})
+    with pytest.raises(ValueError, match="unknown \\$merge target kind"):
+        apply_pipeline(batch, [{"$merge": "t"}], targets={"t": {
+            "kind": "lake", "path": part, "partition_col": "day"}})
 
     # --- jdbc target (Derby live): seeded table, set-based MERGE
     url = f"jdbc:derby:{tmp_path}/db;create=true"
@@ -2843,7 +2844,7 @@ def test_merge_update_pipeline_snap_jdbc_parity(spark, tmp_path):
     same seed/batch/pipeline, including null handling ($ifNull),
     conditionals, MOD, and string concat. Divergence here would mean a
     user's pipeline silently changes meaning when they re-point
-    $merge from the lake to Postgres."""
+    $merge from a snapshot table to Postgres."""
     from airflow_pipelines_from_mongo_to_postgres_spark.sources import snapshots as S
     from airflow_pipelines_from_mongo_to_postgres_spark.sources.connectors import (
         read_jdbc,

@@ -8,7 +8,7 @@ Strategy sizes are kept small (Spark job per example is the cost driver);
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -565,47 +565,48 @@ _cdc_op = st.tuples(st.sampled_from("IUD"), st.integers(1, 6),
 
 
 @given(ledger=st.lists(_cdc_op, min_size=1, max_size=10))
+@example(ledger=[("U", 1, "d2", 11)])
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.too_slow,
                                  HealthCheck.function_scoped_fixture])
-def test_lake_apply_cdc_matches_dict_replay(spark, tmp_path_factory, ledger):
-    """lake_apply_cdc with ts compaction == replaying the ledger into a
+def test_snap_apply_cdc_matches_dict_replay(spark, tmp_path_factory, ledger):
+    """snap_apply_cdc with ts compaction == replaying the ledger into a
     plain dict (latest op per key wins; D removes, I/U replace the whole
-    row) — hypothesis-generated ledgers over a seeded lake, partitions
-    fixed per key (the immutability contract)."""
-    from airflow_pipelines_from_mongo_to_postgres_spark.sources.sinks import (
-        lake_apply_cdc,
-        write_partitioned,
+    row) — hypothesis-generated ledgers over a seeded partitioned table,
+    each op carrying its own partition value, so keys MOVE partitions
+    (the explicit example moves key 1 into a partition the batch alone
+    touches)."""
+    from airflow_pipelines_from_mongo_to_postgres_spark.sources.snapshots import (
+        read_snapshot,
+        snap_append,
+        snap_apply_cdc,
     )
 
     tmp = tmp_path_factory.mktemp("cdcprop")
-    path = str(tmp / "lake")
+    path = str(tmp / "cdc")
     seed = {1: ("d1", 10.0), 3: ("d2", 30.0), 5: ("d1", 50.0)}
-    part_of = {k: ("d1" if k % 2 else "d2") for k in range(1, 7)}
-    for k in seed:
-        part_of[k] = seed[k][0]
-    write_partitioned(
+    snap_append(
+        spark, path,
         spark.createDataFrame([(dt, k, v) for k, (dt, v) in seed.items()],
                               "dt string, k int, v double"),
-        path, ["dt"])
+        partition_by=("dt",))
 
-    rows = [(op, part_of[k], k, float(v), i)     # unique ts per op: the
-            for i, (op, k, _dt, v) in enumerate(ledger)]  # ledger is ordered
+    rows = [(op, dt, k, float(v), i)             # unique ts per op: the
+            for i, (op, k, dt, v) in enumerate(ledger)]  # ledger is ordered
     changes = spark.createDataFrame(
         rows, "op string, dt string, k int, v double, ts int")
-    lake_apply_cdc(spark, path, changes, "k", "dt", ts_col="ts")
+    snap_apply_cdc(spark, path, changes, "k", ts_col="ts")
 
-    state = {k: (dt, v) for k, (dt, v) in seed.items()}
-    last = {}
-    for i, (op, k, _dt, v) in enumerate(ledger):
-        last[k] = (op, part_of[k], float(v))
+    state = dict(seed)
+    last = {k: (op, dt, float(v)) for op, k, dt, v in ledger}
     for k, (op, dt, v) in last.items():
         if op == "D":
             state.pop(k, None)
         else:
             state[k] = (dt, v)
 
-    got = sorted((r.dt, r.k, r.v) for r in spark.read.parquet(path).collect())
+    got = sorted((r.dt, r.k, r.v)
+                 for r in read_snapshot(spark, path).collect())
     want = sorted((dt, k, v) for k, (dt, v) in state.items())
     assert got == want
 

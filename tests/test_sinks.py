@@ -114,51 +114,6 @@ def test_drop_schema_ddl_matches_reference_contract():
     assert "analytics" in drop and "analytics" in create
 
 
-def test_write_partitioned_dynamic_overwrite_and_file_counts(spark, tmp_path):
-    """Dynamic overwrite replaces only the partitions present in the
-    incremental batch; files_per_partition bounds the files per partition
-    directory; reads prune on the partition column."""
-    import glob
-
-    from airflow_pipelines_from_mongo_to_postgres_spark.sources.sinks import write_partitioned
-
-    path = str(tmp_path / "lake")
-    full = spark.createDataFrame(
-        [(d, i, float(i)) for d in ("2024-01-01", "2024-01-02", "2024-01-03")
-         for i in range(100)],
-        "dt string, k int, v double")
-    write_partitioned(full, path, ["dt"])
-
-    for d in ("2024-01-01", "2024-01-02", "2024-01-03"):
-        files = glob.glob(f"{path}/dt={d}/*.parquet")
-        assert len(files) == 1, files
-
-    # incremental day-2 rewrite: v doubled, only 50 rows
-    day2 = spark.createDataFrame(
-        [("2024-01-02", i, float(i) * 2) for i in range(50)],
-        "dt string, k int, v double")
-    write_partitioned(day2, path, ["dt"])
-
-    back = spark.read.parquet(path)
-    assert back.filter(F.col("dt") == "2024-01-01").count() == 100  # untouched
-    assert back.filter(F.col("dt") == "2024-01-03").count() == 100  # untouched
-    d2 = back.filter(F.col("dt") == "2024-01-02")
-    assert d2.count() == 50
-    assert d2.agg(F.sum("v")).first()[0] == sum(2.0 * i for i in range(50))
-
-    # partition pruning reaches the scan
-    pruned = back.filter(F.col("dt") == "2024-01-03")
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "dt" in plan.split("PartitionFilters")[1][:80]
-
-    # small-file control: ask for up to 4 files per partition
-    write_partitioned(full.repartition(8), path, ["dt"], files_per_partition=4)
-    for d in ("2024-01-01", "2024-01-02", "2024-01-03"):
-        files = glob.glob(f"{path}/dt={d}/*.parquet")
-        assert 1 <= len(files) <= 4, files
-    assert spark.read.parquet(path).count() == 300
-
-
 def test_range_layout_files_cover_disjoint_key_ranges(spark, tmp_path):
     """write_range_layout must produce parquet files whose footer min/max
     stats on the layout key are pairwise disjoint — the property that
@@ -193,87 +148,6 @@ def test_range_layout_files_cover_disjoint_key_ranges(spark, tmp_path):
     plan = back._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [" in plan and "k" in plan.split("PushedFilters")[1][:60]
     assert back.count() == 1
-
-
-def test_lake_merge_rewrites_only_touched_partitions(spark, tmp_path):
-    """MERGE into the partitioned lake: untouched partition directories
-    keep their files byte-for-byte; the touched day gets mutable-column
-    refreshes, frozen columns, and new-key inserts."""
-    import glob
-    import os
-
-    from airflow_pipelines_from_mongo_to_postgres_spark.sources.sinks import (
-        lake_merge,
-        write_partitioned,
-    )
-
-    path = str(tmp_path / "lake")
-    seed = spark.createDataFrame(
-        [(d, i, f"st0", float(i)) for d in ("d1", "d2", "d3")
-         for i in range(20)],
-        "dt string, k int, status string, amount double")
-    write_partitioned(seed, path, ["dt"])
-
-    def snapshot(day):
-        return {f: os.path.getmtime(f)
-                for f in glob.glob(f"{path}/dt={day}/*.parquet")}
-
-    before_d1, before_d3 = snapshot("d1"), snapshot("d3")
-
-    updates = spark.createDataFrame(
-        [("d2", 5, "st9", 99.0),     # existing key: status mutable, amount frozen
-         ("d2", 100, "new", 1.5)],   # brand-new key
-        "dt string, k int, status string, amount double")
-    touched = lake_merge(spark, path, updates, key=["dt", "k"],
-                         partition_col="dt", mutable=["status"])
-    assert touched == ["d2"]
-
-    assert snapshot("d1") == before_d1 and snapshot("d3") == before_d3
-
-    back = spark.read.parquet(path)
-    assert back.count() == 61
-    d2 = {r.k: r for r in back.filter(F.col("dt") == "d2").collect()}
-    assert d2[5].status == "st9" and d2[5].amount == 5.0   # mutable vs frozen
-    assert d2[100].status == "new" and d2[100].amount == 1.5
-    assert d2[7].status == "st0"                           # untouched key intact
-
-
-def test_compact_lake_rewrites_only_fragmented_partitions(spark, tmp_path):
-    """Partitions over the file-count threshold are coalesced; healthy
-    partitions keep their files byte-for-byte; content is preserved."""
-    import glob
-    import os
-
-    from airflow_pipelines_from_mongo_to_postgres_spark.sources.sinks import (
-        compact_lake,
-        write_partitioned,
-    )
-
-    path = str(tmp_path / "lake")
-    healthy = spark.createDataFrame(
-        [("d1", i, float(i)) for i in range(40)], "dt string, k int, v double")
-    write_partitioned(healthy, path, ["dt"])
-    # fragment d2: six micro-batch appends, one tiny file each (the
-    # streaming-sink pattern compaction exists to clean up)
-    for i in range(6):
-        batch = spark.createDataFrame(
-            [("d2", 100 + i, float(i))], "dt string, k int, v double")
-        batch.coalesce(1).write.mode("append").partitionBy("dt").parquet(path)
-
-    assert len(glob.glob(f"{path}/dt=d2/*.parquet")) > 4
-    before_d1 = {f: os.path.getmtime(f)
-                 for f in glob.glob(f"{path}/dt=d1/*.parquet")}
-
-    touched = compact_lake(spark, path, "dt", max_files=4)
-    assert touched == ["d2"]
-    assert len(glob.glob(f"{path}/dt=d2/*.parquet")) == 1
-    assert {f: os.path.getmtime(f)
-            for f in glob.glob(f"{path}/dt=d1/*.parquet")} == before_d1
-
-    back = spark.read.parquet(path)
-    assert back.count() == 46
-    assert back.filter(F.col("dt") == "d2").agg(F.sum("v")).first()[0] == \
-        sum(float(i) for i in range(6))
 
 
 def test_write_table_format_roundtrips(spark, tmp_path):
@@ -348,108 +222,6 @@ def test_zorder_layout_skips_on_both_columns(spark, tmp_path):
 
     back = spark.read.parquet(zpath)
     assert back.count() == 10_000 and back.columns == ["a", "b"]
-
-
-def test_compact_lake_handles_escaped_and_null_partitions(spark, tmp_path):
-    """Hive-escaped directory names (':' -> %3A) must be UNESCAPED
-    before the isin rewrite filter, and the null partition
-    (__HIVE_DEFAULT_PARTITION__) must be compacted via isNull — both
-    were silently skipped-but-reported before (ADVICE r4)."""
-    import glob
-
-    from airflow_pipelines_from_mongo_to_postgres_spark.sources.sinks import compact_lake
-
-    path = str(tmp_path / "lake")
-    # fragment BOTH an escaped-char-valued and a null-valued partition
-    for i in range(6):
-        batch = spark.createDataFrame(
-            [("a:b", 10 + i, float(i)), (None, 20 + i, float(i))],
-            "dt string, k int, v double")
-        batch.coalesce(1).write.mode("append").partitionBy("dt").parquet(path)
-    assert len(glob.glob(f"{path}/dt=a%3Ab/*.parquet")) == 6
-    assert len(glob.glob(f"{path}/dt=__HIVE_DEFAULT_PARTITION__/*.parquet")) == 6
-
-    touched = compact_lake(spark, path, "dt", max_files=4)
-    assert touched == ["a:b", None]
-    assert len(glob.glob(f"{path}/dt=a%3Ab/*.parquet")) == 1
-    assert len(glob.glob(f"{path}/dt=__HIVE_DEFAULT_PARTITION__/*.parquet")) == 1
-
-    back = spark.read.parquet(path)
-    assert back.count() == 12
-    assert back.filter(F.col("dt").isNull()).count() == 6
-    assert back.filter(F.col("dt") == "a:b").count() == 6
-
-
-def test_lake_recover_restores_crashed_merge_then_rerun_converges(spark, tmp_path):
-    """Crash contract for lake_merge (VERDICT r4 #8): dynamic overwrite
-    is not atomic, so a crash inside the commit window can leave a
-    touched partition deleted-but-not-repopulated. lake_recover must
-    restore the staged pre-state, after which re-running the SAME
-    idempotent batch converges to the clean answer."""
-    import shutil
-
-    from airflow_pipelines_from_mongo_to_postgres_spark.sources.sinks import (
-        _stage_pre_state,
-        lake_merge,
-        lake_recover,
-        write_partitioned,
-    )
-
-    def build(path):
-        base = spark.createDataFrame(
-            [("d1", 1, 10.0), ("d1", 2, 20.0),
-             ("d2", 3, 30.0), ("d2", 4, 40.0)],
-            "dt string, k int, v double")
-        write_partitioned(base, path, ["dt"])
-
-    updates = spark.createDataFrame(
-        [("d2", 4, 44.0), ("d2", 5, 55.0)], "dt string, k int, v double")
-
-    # clean run -> the reference answer
-    clean = str(tmp_path / "clean")
-    build(clean)
-    lake_merge(spark, clean, updates, "k", "dt", ["v"])
-    def snap(path):
-        return sorted((r.dt, r.k, r.v)
-                      for r in spark.read.parquet(path).collect())
-
-    want = snap(clean)
-
-    # crashed run: pre-state staged, then the commit window "crashes"
-    # after deleting dt=d2 but before repopulating it
-    crash = str(tmp_path / "crash")
-    build(crash)
-    pre = spark.read.parquet(crash).filter(F.col("dt") == "d2")
-    _stage_pre_state(spark, crash, pre)
-    shutil.rmtree(f"{crash}/dt=d2")
-    assert spark.read.parquet(crash).count() == 2  # damage is real
-
-    restored = lake_recover(spark, crash, "dt")
-    assert restored == ["d2"]
-    assert snap(crash) == [("d1", 1, 10.0), ("d1", 2, 20.0),
-                           ("d2", 3, 30.0), ("d2", 4, 40.0)]
-
-    # recovery is idempotent / safe on a clean lake
-    assert lake_recover(spark, crash, "dt") == []
-
-    # re-run the same batch -> converges to the clean answer, and the
-    # successful run leaves no _pending residue behind
-    lake_merge(spark, crash, updates, "k", "dt", ["v"])
-    assert snap(crash) == want
-    import os
-    assert not os.path.exists(f"{crash}/_pending")
-
-
-def test_hive_unescape_strict_hex_only():
-    """Malformed % sequences pass through literally (the Java rule);
-    int()-style '+5'/' f' laxity must not decode control characters."""
-    from airflow_pipelines_from_mongo_to_postgres_spark.sources.sinks import _hive_unescape
-
-    assert _hive_unescape("a%3Ab") == "a:b"
-    assert _hive_unescape("x%2Fy%25") == "x/y%"
-    assert _hive_unescape("bad%+5seq") == "bad%+5seq"
-    assert _hive_unescape("bad% fseq") == "bad% fseq"
-    assert _hive_unescape("tail%2") == "tail%2"
 
 
 def test_zorder_n_three_columns_skip_on_each(spark, tmp_path):
@@ -541,76 +313,40 @@ def test_zorder_n_skip_bound_matrix(spark, tmp_path, k, num_files):
     assert back.count() == n and sorted(back.columns) == cols
 
 
-def test_lake_recover_keeps_committed_but_uncleaned_merge(
-        spark, tmp_path, monkeypatch):
-    """The _COMMITTED marker (ADVICE r5): a crash AFTER the dynamic
-    overwrite fully landed but BEFORE staging cleanup must not roll the
-    lake back to the pre-merge state — lake_recover sees the marker,
-    keeps the committed data, and just clears the staging dir."""
-    import glob
-    import os
-
-    from airflow_pipelines_from_mongo_to_postgres_spark.sources import sinks
-    from airflow_pipelines_from_mongo_to_postgres_spark.sources.sinks import (
-        lake_merge,
-        lake_recover,
-        write_partitioned,
-    )
-
-    path = str(tmp_path / "lake")
-    base = spark.createDataFrame(
-        [("d1", 1, 10.0), ("d2", 2, 20.0)], "dt string, k int, v double")
-    write_partitioned(base, path, ["dt"])
-    updates = spark.createDataFrame([("d2", 2, 99.0)],
-                                    "dt string, k int, v double")
-
-    # crash in the real window: the merge committed (marker written),
-    # then the staging cleanup dies
-    def crash(*_):
-        raise RuntimeError("crash before staging cleanup")
-
-    monkeypatch.setattr(sinks, "_delete_dir", crash)
-    with pytest.raises(RuntimeError, match="staging cleanup"):
-        lake_merge(spark, path, updates, "k", "dt", ["v"])
-    monkeypatch.undo()
-    assert len(glob.glob(f"{path}/_pending/*/_COMMITTED")) == 1
-
-    def snap():
-        return sorted((r.dt, r.k, r.v)
-                      for r in spark.read.parquet(path).collect())
-
-    committed = snap()
-    assert ("d2", 2, 99.0) in committed
-
-    assert lake_recover(spark, path, "dt") == []   # nothing rolled back
-    assert snap() == committed
-    assert not os.path.exists(f"{path}/_pending")  # staging cleared
+def _cdc_commit(spark, S, t, changes, *args, **kw):
+    """Run one ``snap_apply_cdc`` and check its commit shape: the version
+    advances by exactly 1, every data file of the previous version is
+    still listed, and the commit adds one key file plus data files that
+    hold only the batch's I/U rows. Returns those added rows."""
+    before = S.read_manifest(spark, t)
+    assert S.snap_apply_cdc(spark, t, changes, *args, **kw) == \
+        before["version"] + 1
+    after = S.read_manifest(spark, t)
+    assert set(before["files"]) <= set(after["files"])
+    old_dels = before.get("deletes") or []
+    assert after["deletes"][:len(old_dels)] == old_dels
+    assert len(after["deletes"]) == len(old_dels) + 1
+    added = sorted(set(after["files"]) - set(before["files"]))
+    if not added:
+        return []
+    return S._read_files(spark, t, added, after.get("partition_by")) \
+        .collect()
 
 
-def test_lake_apply_cdc_deletes_replaces_and_drops_emptied_partition(spark, tmp_path):
-    """lake_apply_cdc: hard deletes remove keys, I/U rows replace whole
+def test_snap_apply_cdc_deletes_replaces_and_resurrects(spark, tmp_path):
+    """snap_apply_cdc: hard deletes remove keys, I/U rows replace whole
     rows, ts compaction makes the LATEST op per key win (U->D deletes,
-    D->U resurrects), untouched partitions keep their files
-    byte-for-byte, and a partition emptied by deletes loses its
-    directory (dynamic overwrite alone would have kept the stale
-    files)."""
-    import glob
-    import os
+    D->U resurrects), and the whole batch is one merge commit that
+    keeps every earlier file listed and adds only the surviving I/U
+    rows plus one key file."""
+    from airflow_pipelines_from_mongo_to_postgres_spark.sources import snapshots as S
 
-    from airflow_pipelines_from_mongo_to_postgres_spark.sources.sinks import (
-        lake_apply_cdc,
-        write_partitioned,
-    )
-
-    path = str(tmp_path / "lake")
-    base = spark.createDataFrame(
+    t = str(tmp_path / "cdc")
+    S.snap_append(spark, t, spark.createDataFrame(
         [("d1", 1, 10.0), ("d1", 2, 20.0),
          ("d2", 3, 30.0),
          ("d3", 4, 40.0)],
-        "dt string, k int, v double")
-    write_partitioned(base, path, ["dt"])
-    d3_files = sorted(os.path.basename(f)
-                      for f in glob.glob(f"{path}/dt=d3/*.parquet"))
+        "dt string, k int, v double"), partition_by=("dt",))
 
     changes = spark.createDataFrame(
         [("U", "d1", 1, 11.0, 1),    # replace
@@ -620,43 +356,38 @@ def test_lake_apply_cdc_deletes_replaces_and_drops_emptied_partition(spark, tmp_
          ("I", "d1", 6, 60.0, 1)],
         "op string, dt string, k int, v double, ts int")
 
-    touched = lake_apply_cdc(spark, path, changes, "k", "dt", ts_col="ts")
-    assert sorted(touched) == ["d1", "d2"]
-
-    got = sorted((r.dt, r.k, r.v) for r in spark.read.parquet(path).collect())
+    added = _cdc_commit(spark, S, t, changes, "k", ts_col="ts")
+    assert sorted((r.dt, r.k, r.v) for r in added) == \
+        [("d1", 1, 11.0), ("d1", 5, 55.0), ("d1", 6, 60.0)]
+    got = sorted((r.dt, r.k, r.v) for r in S.read_snapshot(spark, t).collect())
     assert got == [("d1", 1, 11.0), ("d1", 5, 55.0), ("d1", 6, 60.0),
                    ("d3", 4, 40.0)]
-    assert not os.path.exists(f"{path}/dt=d2")        # emptied dir dropped
-    assert sorted(os.path.basename(f)
-                  for f in glob.glob(f"{path}/dt=d3/*.parquet")) == d3_files
-    assert not os.path.exists(f"{path}/_pending")     # clean run, no residue
+    assert S.read_manifest(spark, t)["partition_by"] == ["dt"]
+    with pytest.raises(FileNotFoundError, match="is empty"):
+        S.snap_apply_cdc(spark, str(tmp_path / "absent"), changes, "k")
 
 
-def test_lake_apply_cdc_deleting_every_row_leaves_readable_lake(spark, tmp_path):
-    """A CDC batch that deletes every row of the lake leaves it empty
-    but readable (one partition directory keeps a zero-row file with
-    the schema), and a later insert batch lands normally."""
-    from airflow_pipelines_from_mongo_to_postgres_spark.sources.sinks import (
-        lake_apply_cdc,
-        write_partitioned,
-    )
+def test_snap_apply_cdc_deleting_every_row_leaves_readable_table(spark, tmp_path):
+    """A CDC batch that deletes every row leaves the table empty but
+    readable with its schema, and a later insert batch lands."""
+    from airflow_pipelines_from_mongo_to_postgres_spark.sources import snapshots as S
 
-    path = str(tmp_path / "lake")
-    write_partitioned(spark.createDataFrame(
+    t = str(tmp_path / "cdc")
+    S.snap_append(spark, t, spark.createDataFrame(
         [("d1", 1, 10.0), ("d2", 3, 30.0), ("d1", 5, 50.0)],
-        "dt string, k int, v double"), path, ["dt"])
+        "dt string, k int, v double"), partition_by=("dt",))
     schema = "op string, dt string, k int, v double, ts int"
 
-    lake_apply_cdc(spark, path, spark.createDataFrame(
+    assert _cdc_commit(spark, S, t, spark.createDataFrame(
         [("D", "d1", 1, None, 0), ("D", "d2", 3, None, 1),
-         ("D", "d1", 5, None, 2)], schema), "k", "dt", ts_col="ts")
-    empty = spark.read.parquet(path)
+         ("D", "d1", 5, None, 2)], schema), "k", ts_col="ts") == []
+    empty = S.read_snapshot(spark, t)
     assert empty.count() == 0
     assert sorted(empty.columns) == ["dt", "k", "v"]
 
-    lake_apply_cdc(spark, path, spark.createDataFrame(
-        [("I", "d2", 7, 70.0, 3)], schema), "k", "dt", ts_col="ts")
-    got = [(r.dt, r.k, r.v) for r in spark.read.parquet(path).collect()]
+    _cdc_commit(spark, S, t, spark.createDataFrame(
+        [("I", "d2", 7, 70.0, 3)], schema), "k", ts_col="ts")
+    got = [(r.dt, r.k, r.v) for r in S.read_snapshot(spark, t).collect()]
     assert got == [("d2", 7, 70.0)]
 
 
@@ -830,28 +561,28 @@ def test_txn_marks_survive_rewrites(spark, tmp_path):
         0, 1, 2]
 
 
-def test_lake_apply_cdc_replay_is_idempotent(spark, tmp_path):
-    """Re-applying the SAME CDC batch converges (deletes of absent keys
-    no-op, upserts replace with identical rows) — the property that
-    makes a foreachBatch replay after failure safe without a txn log."""
-    from airflow_pipelines_from_mongo_to_postgres_spark.sources.sinks import (
-        lake_apply_cdc,
-        write_partitioned,
-    )
+def test_snap_apply_cdc_replay_is_idempotent(spark, tmp_path):
+    """Re-applying the SAME CDC batch converges (it deletes and re-adds
+    the same rows) — the property that makes a foreachBatch replay
+    after failure safe without an epoch mark."""
+    from airflow_pipelines_from_mongo_to_postgres_spark.sources import snapshots as S
 
-    path = str(tmp_path / "lake")
-    write_partitioned(spark.createDataFrame(
+    t = str(tmp_path / "cdc")
+    S.snap_append(spark, t, spark.createDataFrame(
         [("d1", 1, 10.0), ("d1", 2, 20.0)], "dt string, k int, v double"),
-        path, ["dt"])
+        partition_by=("dt",))
     changes = spark.createDataFrame(
         [("U", "d1", 1, 11.0), ("D", "d1", 2, None), ("I", "d1", 3, 30.0)],
         "op string, dt string, k int, v double")
 
-    lake_apply_cdc(spark, path, changes, "k", "dt")
-    once = sorted((r.dt, r.k, r.v) for r in spark.read.parquet(path).collect())
-    lake_apply_cdc(spark, path, changes, "k", "dt")
-    twice = sorted((r.dt, r.k, r.v) for r in spark.read.parquet(path).collect())
-    assert once == twice == [("d1", 1, 11.0), ("d1", 3, 30.0)]
+    def snap():
+        return sorted((r.dt, r.k, r.v)
+                      for r in S.read_snapshot(spark, t).collect())
+
+    _cdc_commit(spark, S, t, changes, "k")
+    once = snap()
+    _cdc_commit(spark, S, t, changes, "k")
+    assert once == snap() == [("d1", 1, 11.0), ("d1", 3, 30.0)]
 
 
 def test_snapshot_commit_conflicts_and_self_healing_head(
@@ -920,35 +651,22 @@ def test_snapshot_full_overwrite_keeps_history(spark, tmp_path):
             S.read_snapshot(spark, t, version=1).collect()] == [("a", 1)]
 
 
-def test_partition_immutability_check(spark, tmp_path):
-    """check_partition_immutability: a key moving partitions raises
-    with a bounded sample naming (key, old, new); a clean batch passes;
-    the stranded-duplicate failure mode it guards is demonstrated."""
-    import pytest
+def test_snap_apply_cdc_key_moving_partitions_reads_back_once(spark, tmp_path):
+    """A CDC update that moves a key to another partition value leaves
+    no copy behind: the equality delete matches the key wherever its
+    old row lives, including a partition the batch does not touch."""
+    from airflow_pipelines_from_mongo_to_postgres_spark.sources import snapshots as S
 
-    from airflow_pipelines_from_mongo_to_postgres_spark.sources.sinks import (
-        check_partition_immutability,
-        lake_merge,
-        write_partitioned,
-    )
-
-    path = str(tmp_path / "lake")
-    write_partitioned(spark.createDataFrame(
+    t = str(tmp_path / "cdc")
+    S.snap_append(spark, t, spark.createDataFrame(
         [("d1", 1, 10.0), ("d2", 2, 20.0)], "dt string, k int, v double"),
-        path, ["dt"])
-
-    clean = spark.createDataFrame([("d1", 1, 11.0), ("d2", 3, 30.0)],
-                                  "dt string, k int, v double")
-    check_partition_immutability(spark, path, clean, "k", "dt")  # no raise
-
-    moving = spark.createDataFrame([("d2", 1, 99.0)],
-                                   "dt string, k int, v double")
-    with pytest.raises(ValueError, match="partition-immutability"):
-        check_partition_immutability(spark, path, moving, "k", "dt")
-
-    # the guarded failure mode is real: merging the mover duplicates k=1
-    lake_merge(spark, path, moving, "k", "dt", ["v"])
-    assert spark.read.parquet(path).filter("k = 1").count() == 2
+        partition_by=("dt",))
+    _cdc_commit(spark, S, t, spark.createDataFrame(
+        [("U", "d2", 1, 11.0)], "op string, dt string, k int, v double"),
+        "k")
+    got = sorted((r.dt, r.k, r.v) for r in S.read_snapshot(spark, t).collect())
+    assert got == [("d2", 1, 11.0), ("d2", 2, 20.0)]
+    assert S.snap_scan(spark, t, [("dt", "=", "d1")]).count() == 0
 
 
 def test_snapshot_manifest_stats_prune_files(spark, tmp_path):
@@ -1141,37 +859,71 @@ def test_snap_append_survives_concurrent_commit(spark, tmp_path, monkeypatch):
     assert S.current_version(spark, t) == 3
 
 
-def test_lake_apply_cdc_drops_emptied_timestamp_partition(spark, tmp_path):
-    """Partition values whose Python str() differs from Spark's
-    directory rendering (timestamps with fractional seconds) must still
-    lose their directory when emptied: the dir is resolved from
-    input_file_name(), never re-rendered driver-side."""
-    import glob
-    import os
+def test_snap_apply_cdc_on_timestamp_partitions(spark, tmp_path):
+    """CDC over a timestamp-partitioned table whose partition values
+    render differently in Python (fractional seconds): deleting the only
+    row of one partition value leaves the other, with ``dt`` still a
+    timestamp."""
     from datetime import datetime
 
-    from airflow_pipelines_from_mongo_to_postgres_spark.sources.sinks import (
-        lake_apply_cdc,
-        write_partitioned,
-    )
+    from airflow_pipelines_from_mongo_to_postgres_spark.sources import snapshots as S
 
-    path = str(tmp_path / "tslake")
+    t = str(tmp_path / "tscdc")
     t1 = datetime(2023, 1, 1, 0, 0, 0, 500000)   # str() -> ...00.500000
     t2 = datetime(2023, 1, 2, 12, 30, 0)
-    base = spark.createDataFrame(
-        [(t1, 1, 10.0), (t2, 2, 20.0)], "dt timestamp, k int, v double")
-    write_partitioned(base, path, ["dt"])
-    dirs = glob.glob(f"{path}/dt=*")
-    assert len(dirs) == 2
+    S.snap_append(spark, t, spark.createDataFrame(
+        [(t1, 1, 10.0), (t2, 2, 20.0)], "dt timestamp, k int, v double"),
+        partition_by=("dt",))
 
-    changes = spark.createDataFrame(
-        [("D", t1, 1, None)], "op string, dt timestamp, k int, v double")
-    lake_apply_cdc(spark, path, changes, "k", "dt")
+    _cdc_commit(spark, S, t, spark.createDataFrame(
+        [("D", t1, 1, None)], "op string, dt timestamp, k int, v double"),
+        "k")
+    back = S.read_snapshot(spark, t)
+    assert dict(back.dtypes)["dt"] == "timestamp"
+    assert [(r.dt, r.k, r.v) for r in back.collect()] == [(t2, 2, 20.0)]
 
-    left = glob.glob(f"{path}/dt=*")
-    assert len(left) == 1, left                    # emptied t1 dir GONE
-    got = [(r.k, r.v) for r in spark.read.parquet(path).collect()]
-    assert got == [(2, 20.0)]
+
+def test_timestamp_partitions_read_typed_and_prune(spark, tmp_path):
+    """A timestamp partition column reads back as ``timestamp`` with the
+    values written (Spark's own inference for these paths), its path
+    stats compare in the same form as a datetime predicate, so
+    ``prune_files``/``snap_scan`` keep the matching file for ``=`` and
+    range predicates; the arrow twin types it as a timestamp too."""
+    from datetime import datetime
+
+    import pyarrow as pa
+
+    from airflow_pipelines_from_mongo_to_postgres_spark.sources import pyds
+    from airflow_pipelines_from_mongo_to_postgres_spark.sources import snapshots as S
+
+    t = str(tmp_path / "tspart")
+    t1 = datetime(2023, 1, 1, 0, 0, 0, 500000)
+    t2 = datetime(2023, 1, 2, 12, 30, 0)
+    S.snap_append(spark, t, spark.createDataFrame(
+        [(t1, 1), (t2, 2)], "dt timestamp, k int"), partition_by=("dt",))
+    back = S.read_snapshot(spark, t)
+    assert dict(back.dtypes)["dt"] == "timestamp"
+    assert sorted((r.dt, r.k) for r in back.collect()) == [(t1, 1), (t2, 2)]
+    assert dict(spark.read.parquet(f"{t}/data").dtypes)["dt"] == "timestamp"
+
+    m = S.read_manifest(spark, t)
+    assert len(m["files"]) == 2
+    assert len(S.prune_files(m, [("dt", "=", t1)])) == 1
+    for preds, want in [([("dt", "=", t1)], [1]),
+                        ([("dt", "<", t2)], [1]),
+                        ([("dt", ">=", t1)], [1, 2]),
+                        ([("dt", ">", t1)], [2]),
+                        ([("dt", "<=", datetime(2023, 1, 1))], [])]:
+        got = sorted(r.k for r in S.snap_scan(spark, t, preds).collect())
+        assert got == want, preds
+
+    pv = S.partition_values_of
+    assert pv("data/c-x/dt=2023-01-01 00%3A00%3A00.5/f.parquet") == {"dt": t1}
+    # an impossible calendar value is no timestamp (the JVM cast
+    # rejects it too) and stays a string
+    assert pv("data/c-x/dt=2023-02-30 00%3A00%3A00/f.parquet") == \
+        {"dt": "2023-02-30 00:00:00"}
+    assert pa.types.is_timestamp(pyds._infer_partition_type([t1, t2]))
 
 
 def test_snap_append_commit_payload_is_o_delta(spark, tmp_path):

@@ -514,21 +514,32 @@ def test_streaming_ledger_replay_is_exactly_once(spark, tmp_path, sf_dir, job):
 
 def test_streaming_sinks_commit_through_one_protocol():
     """Every drop-folder stream drains through the one
-    ``run_incremental_merge`` driver, and no streaming module keeps a
-    table protocol of its own (generation directories, ``_SUCCESS``
-    markers, direct ``.write.mode(...)`` state writes): streaming sinks
-    commit through sources/snapshots.py or sources/sinks.py."""
+    ``run_incremental_merge`` driver, no streaming module keeps a table
+    protocol of its own (generation directories, ``_SUCCESS`` markers,
+    direct ``.write.mode(...)`` state writes), and neither streaming/
+    nor sources/ keeps the deleted lake protocol (``_pending`` staging,
+    ``_COMMITTED`` markers, dynamic partition overwrite): streaming
+    sinks commit through sources/snapshots.py only."""
     import pathlib
+    import re
 
     import airflow_pipelines_from_mongo_to_postgres_spark as pkg
 
-    root = pathlib.Path(pkg.__file__).parent / "streaming"
-    texts = {p.name: p.read_text(encoding="utf-8") for p in root.glob("*.py")}
+    root = pathlib.Path(pkg.__file__).parent
+    texts = {p.name: p.read_text(encoding="utf-8")
+             for p in (root / "streaming").glob("*.py")}
     assert sum(t.count(".foreachBatch(") for t in texts.values()) == 1
     own_protocol = sorted(
         n for n, t in texts.items()
         if any(tok in t for tok in ("_SUCCESS", "gen=", ".write.mode(")))
     assert own_protocol == [], own_protocol
+    lake_protocol = re.compile(
+        r"\b(_pending|_COMMITTED|partitionOverwriteMode)\b")
+    hits = sorted(
+        str(p.relative_to(root))
+        for d in ("streaming", "sources") for p in (root / d).rglob("*.py")
+        if lake_protocol.search(p.read_text(encoding="utf-8")))
+    assert hits == [], hits
 
 
 def test_streaming_semantic_dedup_matches_batch(spark, tmp_path):
@@ -588,12 +599,15 @@ def test_streaming_semantic_dedup_matches_batch(spark, tmp_path):
 def test_streaming_cdc_apply_matches_batch(spark, tmp_path):
     """Two CDC drops streamed one file per micro-batch through
     run_incremental_cdc == applying the combined ledger in one batch
-    (deletes, replaces, resurrections across batches)."""
-    from pyspark.sql import functions as F
-
-    from airflow_pipelines_from_mongo_to_postgres_spark.sources.sinks import (
-        lake_apply_cdc,
-        write_partitioned,
+    (deletes, replaces, resurrections across batches); the stream
+    keeps the table's partition layout and makes one commit per
+    micro-batch."""
+    from airflow_pipelines_from_mongo_to_postgres_spark.sources.snapshots import (
+        current_version,
+        read_manifest,
+        read_snapshot,
+        snap_append,
+        snap_apply_cdc,
     )
     from airflow_pipelines_from_mongo_to_postgres_spark.streaming.incremental import (
         run_incremental_cdc,
@@ -610,8 +624,8 @@ def test_streaming_cdc_apply_matches_batch(spark, tmp_path):
          ("D", "d2", 3, None, 2),
          ("I", "d2", 4, 40.0, 2)], schema)
 
-    stream_lake = str(tmp_path / "stream_lake")
-    write_partitioned(base, stream_lake, ["dt"])
+    stream_t = str(tmp_path / "stream_t")
+    snap_append(spark, stream_t, base, partition_by=("dt",))
     drop = tmp_path / "drop"
     drop.mkdir()
     b1.coalesce(1).write.parquet(str(tmp_path / "w1"))
@@ -622,18 +636,19 @@ def test_streaming_cdc_apply_matches_batch(spark, tmp_path):
         src = glob.glob(str(tmp_path / d / "*.parquet"))[0]
         shutil.move(src, str(drop / f"batch{i}.parquet"))
 
-    run_incremental_cdc(spark, str(drop), schema, stream_lake, "k", "dt",
+    run_incremental_cdc(spark, str(drop), schema, stream_t, "k",
                         str(tmp_path / "ckpt"), ts_col="ts",
                         max_files_per_trigger=1)
+    assert current_version(spark, stream_t) == 3
+    assert read_manifest(spark, stream_t)["partition_by"] == ["dt"]
 
-    batch_lake = str(tmp_path / "batch_lake")
-    write_partitioned(base, batch_lake, ["dt"])
-    lake_apply_cdc(spark, batch_lake, b1.unionByName(b2), "k", "dt",
-                   ts_col="ts")
+    batch_t = str(tmp_path / "batch_t")
+    snap_append(spark, batch_t, base, partition_by=("dt",))
+    snap_apply_cdc(spark, batch_t, b1.unionByName(b2), "k", ts_col="ts")
 
-    snap = lambda p: sorted(  # noqa: E731
-        (r.dt, r.k, r.v) for r in spark.read.parquet(p).collect())
-    assert snap(stream_lake) == snap(batch_lake) == \
+    snap = lambda t: sorted(  # noqa: E731
+        (r.dt, r.k, r.v) for r in read_snapshot(spark, t).collect())
+    assert snap(stream_t) == snap(batch_t) == \
         [("d1", 1, 11.0), ("d1", 2, 22.0), ("d2", 4, 40.0)]
 
 
