@@ -4,6 +4,11 @@ Each module exports ``QUERIES: dict[name -> (spark, sf_dir) -> DataFrame]``
 and ``ORACLES: dict[name -> ANSI SQL str]`` (DuckDB-runnable on the same
 parquet views). Names must agree; computed columns are aliased identically
 on both sides (the driver hash-compares by sorted column name).
+
+``all_queries()`` / ``all_oracles()`` merge the per-module dicts in
+``ALL_PLAN_MODULES`` order; correctness is the three-SF
+``tools/check_oracle.py`` sweep over every entry, where order does not
+matter.
 """
 
 from airflow_pipelines_from_mongo_to_postgres_spark.plans import (
@@ -21,227 +26,16 @@ from airflow_pipelines_from_mongo_to_postgres_spark.plans import (
 ALL_PLAN_MODULES = [relational, mergeops, streamsql, temporal, analytics,
                     llmdata, sketchmaint, extras, docmodel]
 
-# The driver's per-round correctness sweep runs queries in registry order
-# under a wall-clock budget, so truncation eats the TAIL. The order is
-# DERIVED AT CALL TIME from two evidence sources in the repo root (so it
-# can never go stale between rounds, and no hand-maintained list exists
-# for a human to forget — round 4's q59 lesson):
-#   1. changed-since-stamped — queries whose plan-source + oracle-SQL
-#      fingerprint differs from the stamp in EVIDENCE_FPS.json (written by
-#      ``tools/stamp_evidence.py`` against the commit the driver last
-#      evaluated; a changed plan's old evidence proves nothing about the
-#      new code). Red-in-latest-round entries lead within the block.
-#   2. everything else by (latest round with evidence ASC, red before
-#      green, registry order) — least-recently-checked first, never-checked
-#      before all of them.
-# llmdata shares one persisted shingle table across q26/q27/q28 (+ the
-# pair-cache consumers q51/q53/q58/q63) to shrink the sweep's dominant cost.
-
-_REPO_ROOT = None
-
-
-def _repo_root() -> str:
-    import os
-    global _REPO_ROOT
-    if _REPO_ROOT is None:
-        _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))))
-    return _REPO_ROOT
-
-
-_PKG_PREFIX = __name__.rsplit(".", 1)[0]  # the engine package root
-_SUPPORT_HASH_CACHE: dict = {}
-
-
-def _support_modules(plan_module) -> list:
-    """Transitive closure of ENGINE modules reachable from a plan
-    module's imports (operators/, functions/, sources/, streaming/ and
-    sibling plan helpers). Plan functions are thin wrappers — the query
-    logic lives in these modules, so a behavior change there must flip
-    the fingerprints of every consumer (review finding r5: hashing only
-    the wrapper's own source could never represent the r4 q28-class
-    incident the mechanism exists to prevent)."""
-    import inspect
-
-    seen: dict = {}
-    stack = [plan_module]
-    while stack:
-        mod = stack.pop()
-        for v in vars(mod).values():
-            target = None
-            if inspect.ismodule(v) and v.__name__.startswith(_PKG_PREFIX):
-                target = v
-            elif (inspect.isfunction(v) or inspect.isclass(v)) and \
-                    getattr(v, "__module__", "").startswith(_PKG_PREFIX):
-                import sys
-                target = sys.modules.get(v.__module__)
-            if target is not None and target.__name__ not in seen:
-                seen[target.__name__] = target
-                stack.append(target)
-    return [seen[k] for k in sorted(seen)]
-
-
-def _support_hash(plan_module) -> str:
-    """Hash of the combined source of every engine module the plan
-    module (transitively) imports. Module-level granularity: an edit to
-    operators/dedup.py re-pins every consumer of the dedup module —
-    slightly over-inclusive, never under-inclusive."""
-    import hashlib
-    import inspect
-
-    key = plan_module.__name__
-    if key not in _SUPPORT_HASH_CACHE:
-        h = hashlib.sha256()
-        for mod in _support_modules(plan_module):
-            if mod.__name__ == key:
-                continue  # the plan fn's own source is hashed per-query
-            try:
-                h.update(inspect.getsource(mod).encode())
-            except (OSError, TypeError):
-                h.update(repr(mod).encode())
-        _SUPPORT_HASH_CACHE[key] = h.hexdigest()[:16]
-    return _SUPPORT_HASH_CACHE[key]
-
-
-def fingerprint(name: str, fn, oracle_sql) -> str:
-    """Stable identity of a registered query: hash of the plan function's
-    source, its oracle SQL, AND the support-code hash of every engine
-    module its plan module imports (transitively). Changes to ANY of the
-    three invalidate old driver evidence. Falls back to the repr when
-    source is unavailable (e.g. a lambda defined in a REPL) — still
-    deterministic per commit."""
-    import hashlib
-    import inspect
-    import sys
-
-    try:
-        src = inspect.getsource(fn)
-    except (OSError, TypeError):
-        src = repr(fn)
-    support = ""
-    mod = sys.modules.get(getattr(fn, "__module__", ""), None)
-    if mod is not None and mod.__name__.startswith(_PKG_PREFIX):
-        support = _support_hash(mod)
-    payload = (src + "\n--oracle--\n" + (oracle_sql or "<no-oracle>")
-               + "\n--support--\n" + support)
-    return hashlib.sha256(payload.encode()).hexdigest()[:16]
-
-
-def current_fingerprints() -> dict:
-    """name -> fingerprint over the live registry (queries + oracles)."""
-    qs: dict = {}
-    sqls: dict = {}
-    for m in ALL_PLAN_MODULES:
-        qs.update(m.QUERIES)
-        sqls.update(m.ORACLES)
-    return {n: fingerprint(n, fn, sqls.get(n)) for n, fn in qs.items()}
-
-
-def _stamped_fingerprints() -> dict:
-    import json
-    import os
-
-    path = os.path.join(_repo_root(), "EVIDENCE_FPS.json")
-    try:
-        with open(path) as fh:
-            data = json.load(fh)
-        return data if isinstance(data, dict) else {}
-    except (OSError, json.JSONDecodeError):
-        return {}  # no stamps yet → everything counts as changed
-
-
-def changed_since_stamped() -> list:
-    """Names whose current fingerprint differs from the stamped one (or
-    that have no stamp). These lead the sweep order: their old driver
-    evidence no longer covers the running code."""
-    stamped = _stamped_fingerprints()
-    return [n for n, fp in current_fingerprints().items()
-            if stamped.get(n) != fp]
-
-
-def _evidence_rounds() -> dict:
-    """name -> (latest round number with a driver row, hash_ok in it)."""
-    import glob
-    import json
-    import os
-
-    root = _repo_root()
-    latest: dict = {}
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = os.path.basename(path)
-        try:
-            rnd = int(m.replace("CORRECTNESS_r", "").replace(".json", ""))
-            with open(path) as fh:
-                rows = json.load(fh)
-        except (ValueError, OSError, json.JSONDecodeError):
-            continue
-        if not isinstance(rows, dict):
-            continue  # evidence files are ordering HINTS — never fatal
-        for name, row in rows.items():
-            ok = bool(isinstance(row, dict) and row.get("hash_match"))
-            prev = latest.get(name)
-            if prev is None or rnd >= prev[0]:
-                latest[name] = (rnd, ok)
-    return latest
-
-
-#: Queries whose PLANS WERE REWRITTEN in an optimization round but whose
-#: driver oracle row predates the rewrite (VERDICT r17 "Next round #3":
-#: the rotating 50-query sample covered only 4 of r17's 13 plan-changed
-#: queries — these 9 were last driver-verified on the PRE-rewrite code).
-#: They lead the pinned block so the next driver sweep re-grounds them
-#: first. SELF-EXPIRING: the promotion only applies while the query is
-#: in the changed-since-stamped set — once a driver row lands and
-#: tools/stamp_evidence.py restamps it, it leaves the pinned block
-#: entirely and this list has no effect on it.
-PRIORITY_PINS = (
-    "q01_pricing_summary", "q55_ann_ivf_kmeans", "q58_corpus_build",
-    "q99_fuzzy_linkage", "q108_semantic_dedup", "q113_latest_shipper",
-    "q134_corpus_build_semantic", "q154_span_scrub_stats",
-    "q216_lm_bigram_backoff",
-)
-
-
-def _ordered(full: dict) -> dict:
-    evidence = _evidence_rounds()
-    names = list(full)
-    changed = set(changed_since_stamped())
-    pinned = [n for n in names if n in changed]
-    # Within the pinned block: PRIORITY_PINS (plan rewritten, driver
-    # evidence predates the rewrite) lead outright; then
-    # red-in-latest-evidence entries, then NEVER-driver-checked queries
-    # (evidence round 0 — brand-new registrations that have no driver
-    # row at all), then the least-recently-checked re-pins; registry
-    # order breaks ties. A 50-query driver budget against a larger pin
-    # pool then spends itself on first-ever rows before re-confirming
-    # queries whose older evidence still exists.
-    pinned.sort(key=lambda n: (n not in PRIORITY_PINS,
-                               evidence.get(n, (0, False))[1],
-                               evidence.get(n, (0, False))[0],
-                               names.index(n)))
-    rest = [n for n in names if n not in pinned]
-    # A red LATEST driver row must outrank everything else in the block,
-    # regardless of how recent the round is — otherwise a query that
-    # failed in r11 and was fixed sits behind dozens of r01-greens and
-    # the driver's truncated budget never re-confirms the fix (r13 judge
-    # finding: q180 buried at position 47). Sort (ok, round, index):
-    # reds first (oldest red first), then greens least-recently-checked
-    # first, never-checked (round 0) ahead of all greens.
-    rest.sort(key=lambda n: (evidence.get(n, (0, False))[1],
-                             evidence.get(n, (0, False))[0],
-                             names.index(n)))
-    return {k: full[k] for k in pinned + rest}
-
 
 def all_queries():
     out = {}
     for m in ALL_PLAN_MODULES:
         out.update(m.QUERIES)
-    return _ordered(out)
+    return out
 
 
 def all_oracles():
     out = {}
     for m in ALL_PLAN_MODULES:
         out.update(m.ORACLES)
-    return _ordered(out)
+    return out

@@ -34,6 +34,7 @@ from airflow_pipelines_from_mongo_to_postgres_spark.sources.mongoql.lookup impor
 )
 from airflow_pipelines_from_mongo_to_postgres_spark.sources.mongoql.match import (
     _match_cond,
+    _path_col,
 )
 from airflow_pipelines_from_mongo_to_postgres_spark.sources.mongoql.windows import (
     _fill_one_windowed,
@@ -1303,8 +1304,11 @@ def _apply_stages(df: DataFrame, stages: list[dict[str, Any]],
             df = _group(df, spec, sort_spec=(
                 {"__rn": 1} if "__rn" in df.columns else None))
         elif op == "$sort":
-            df = df.orderBy(*[F.col(k).asc() if d == 1 else F.col(k).desc()
-                              for k, d in spec.items()])
+            # a key an earlier stage dropped sorts as missing, not by
+            # the values below the Project (the $match rule)
+            keys = [_path_col(df.schema, k) for k in spec]
+            df = df.orderBy(*[c.asc() if d == 1 else c.desc()
+                              for c, d in zip(keys, spec.values())])
         elif op == "$limit":
             # Mongo: 'the limit must be positive' (r16 — matches the
             # $lookup sub-pipeline validation)

@@ -341,9 +341,10 @@ def _write_stage(df: DataFrame, op: str, spec: Any, targets) -> DataFrame:
     table-format commits, so the write is ONE atomic commit with
     merge-on-read cost instead of a row loop.
 
-    ``$out`` replaces the whole target (snap_overwrite). ``$merge``
-    lowers the whenMatched x whenNotMatched matrix onto set operations
-    + a single snap commit:
+    ``$out`` replaces the whole target (snap_overwrite), in the head's
+    partition layout when the output carries every partition column.
+    ``$merge`` lowers the whenMatched x whenNotMatched matrix onto set
+    operations + a single snap commit:
 
     - whenMatched  replace      -> batch row wins wholesale
     -              merge        -> batch columns overwrite, target-only
@@ -375,6 +376,7 @@ def _write_stage(df: DataFrame, op: str, spec: Any, targets) -> DataFrame:
     for gating."""
     from airflow_pipelines_from_mongo_to_postgres_spark.sources.snapshots import (
         current_version,
+        read_manifest,
         read_snapshot,
         snap_append,
         snap_merge_keys,
@@ -387,7 +389,13 @@ def _write_stage(df: DataFrame, op: str, spec: Any, targets) -> DataFrame:
         t = _target_spec(targets, name, "$out")
         kind = t.get("kind", "snap")
         if kind == "snap":
-            snap_overwrite(spark, t["path"], df, note="$out")
+            # keep the head's hive layout when the output can fill it
+            layout = tuple(
+                read_manifest(spark, t["path"]).get("partition_by") or ())
+            if not set(layout) <= set(df.columns):
+                layout = ()
+            snap_overwrite(spark, t["path"], df, note="$out",
+                           partition_by=layout)
             return _read_or_empty(spark, t["path"], df)
         if kind == "jdbc":
             props = t.get("properties") or {}

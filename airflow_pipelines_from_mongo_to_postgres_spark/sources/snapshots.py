@@ -1192,6 +1192,11 @@ def snap_compact(spark: SparkSession, table: str,
     layout = _resolve_layout(spark, table, ())
     new, stats = _write_data_files(packed, table, stat_cols,
                                    partition_by=layout)
+    if not new:
+        # every row is deleted and the hive writer made no file: a
+        # commit listing none would be unreadable, while the head still
+        # reads as 0 rows with its schema
+        return base
     return _commit(spark, table, new, note,
                    expected_parent=base, stats=stats,
                    partition_by=list(layout) or None)

@@ -19,7 +19,8 @@ plans (plans/llmdata.py) are cleared and spark.catalog.clearCache() drops
 the operators' internal .cache()/.persist() data between runs. Without
 this, executor-memory pressure from earlier queries' never-unpersisted
 caches distorts later timings (the round-2 q28 "+153%" regression was
-exactly this). Each query reports the median of SPARK_GRAFT_ITERS (3) runs.
+exactly this). Each query reports the median of SPARK_GRAFT_ITERS (5) runs,
+the same count in both passes.
 
 Two timing columns per query (r8, after r7's +16-48% drift on untouched
 sub-second queries showed in-session numbers carry shared-JVM session
@@ -31,10 +32,9 @@ tax that moves when the suite composition or cache policy changes):
   composition; the column to trust for round-over-round deltas.
 Since r11 the headline "value" IS isolated_total (labeled by
 "value_is"); in-session lives under "queries"/"in_session_total" as a
-diagnostic, and the historically jittery queries (_JITTERY) run
-_JITTERY_ITERS (7) fresh-JVM iterations instead of 3. Skip the isolated pass with
-SPARK_GRAFT_NO_ISOLATED=1 (it adds one JVM startup per headline query
-— "value" then falls back to in-session).
+diagnostic. Skip the isolated pass with SPARK_GRAFT_NO_ISOLATED=1 (it
+adds one JVM startup per headline query — "value" then falls back to
+in-session).
 
 Evidence completeness (r15, after the r14 adjudication stalled on
 truncated data): per-iteration arrays for every query in BOTH columns
@@ -148,7 +148,7 @@ def _run_one(name: str) -> None:
     _clear_all_caches(spark)
     load_pre = _loadavg()[0]
     runs = []
-    for _ in range(int(os.environ.get("SPARK_GRAFT_ITERS", "3"))):
+    for _ in range(int(os.environ.get("SPARK_GRAFT_ITERS", "5"))):
         t0 = time.perf_counter()
         _run_action(q(spark, sf_dir))
         runs.append(time.perf_counter() - t0)
@@ -168,28 +168,6 @@ def _loadavg() -> list:
         return [round(x, 2) for x in os.getloadavg()]
     except (AttributeError, OSError):  # non-POSIX fallback
         return [-1.0, -1.0, -1.0]
-
-
-#: queries whose isolated medians moved ±20-50% across r9/r10 with NO
-#: code change (sandbox session noise) — 5 fresh-JVM runs instead of 3
-#: so the median is robust enough for round-over-round adjudication
-_JITTERY = {"q113_latest_shipper", "q58_corpus_build",
-            "q134_corpus_build_semantic", "q63_jaccard_pruned",
-            "q144_expectations_audit",
-            # r12: swung +39%/+36% on untouched code paths (two r12
-            # runs vs the r11 driver session) — same noise class
-            "q164_min_cost_supplier", "q142_sketch_ndv_rollup",
-            # r12 driver run: +14%/+17% on untouched plans (git-verified
-            # no diff) — the self-join/groupBy scheduling-jitter band
-            # BASELINE.md root-caused in r7; widen the robust-median set
-            "q26_ngram_jaccard_pairs", "q33_cosine_topk",
-            "q20_merge_upsert"}
-
-#: fresh-JVM iterations for the jittery set (others run
-#: SPARK_GRAFT_ITERS, default 3). r12→r13: 5 → 7 — with ±15% one-run
-#: noise, a 7-run median's expected deviation is under ±8%, the
-#: round-over-round adjudication bar.
-_JITTERY_ITERS = 7
 
 
 #: settle bar/cap between isolated fresh-JVM runs (r17, VERDICT r16 #2):
@@ -228,16 +206,12 @@ def _isolated_medians() -> tuple[dict, dict, dict, dict]:
     load_map: dict = {}
     wait_map: dict = {}
     for name in HEADLINE:
-        env = dict(os.environ)
-        if name in _JITTERY:
-            env["SPARK_GRAFT_ITERS"] = str(max(
-                _JITTERY_ITERS, int(env.get("SPARK_GRAFT_ITERS", "3"))))
         wait_map[name] = _settle()
         try:
             proc = subprocess.run(
                 [sys.executable, str(Path(__file__).resolve()),
                  "--one", name],
-                capture_output=True, text=True, timeout=600, env=env)
+                capture_output=True, text=True, timeout=600)
             line = [ln for ln in proc.stdout.splitlines()
                     if ln.startswith("{")][-1]
             rec = json.loads(line)
@@ -288,7 +262,7 @@ def main() -> None:
     _clear_all_caches(spark)
 
     load_start = _loadavg()
-    iters = int(os.environ.get("SPARK_GRAFT_ITERS", "3"))
+    iters = int(os.environ.get("SPARK_GRAFT_ITERS", "5"))
     timings: dict[str, float] = {}
     session_runs: dict[str, list] = {}
     for name in HEADLINE:

@@ -446,17 +446,24 @@ def test_match_is_type_bracketed_like_mongo(spark):
 
 def test_match_reads_a_dropped_field_as_missing(spark):
     """A field an earlier $project dropped is missing from every
-    document: $match on it matches nothing and ``$exists: false``
-    matches everything. Spark would otherwise resolve the filter below
-    the projection and compare the dropped values (an int query on the
-    dropped string column crashed under ANSI — found by the pipeline
-    fuzz test)."""
+    document: $match on it matches nothing, ``$exists: false`` matches
+    everything, and $sort on it leaves the order to later keys. Spark
+    would otherwise resolve the filter or sort below the projection and
+    use the dropped values (an int query on the dropped string column
+    crashed under ANSI — found by the pipeline fuzz test)."""
     df = spark.createDataFrame([(1, "x"), (2, "y")], "a int, b string")
     proj = [{"$project": {"a": 1}}]
     assert apply_pipeline(df, proj + [{"$match": {"b": 0}}]).count() == 0
     assert apply_pipeline(df, proj + [{"$match": {"b": "x"}}]).count() == 0
     assert apply_pipeline(
         df, proj + [{"$match": {"b": {"$exists": False}}}]).count() == 2
+    # $sort on the dropped key sorts every document as missing, so the
+    # next key decides (Spark would sort by the values below the Project)
+    df = spark.createDataFrame([(1, "z"), (2, "a"), (3, "m")],
+                               "a int, b string")
+    for drop in ({"$project": {"a": 1}}, {"$unset": "b"}):
+        out = apply_pipeline(df, [drop, {"$sort": {"b": 1, "a": 1}}])
+        assert [r.a for r in out.collect()] == [1, 2, 3]
 
 
 def test_expression_operators_cond_ifnull_concat_arith(apps):
@@ -2232,6 +2239,7 @@ def test_merge_out_lake_and_jdbc_targets(spark, tmp_path):
     out = apply_pipeline(batch, [{"$out": "t"}], targets={"t": part})
     assert sorted((r._id, r.v) for r in out.collect()) == \
         [("a", 99), ("d", 4)]
+    assert S.read_manifest(spark, part)["partition_by"] == ["day"]
     with pytest.raises(ValueError, match="snap target for the full"):
         apply_pipeline(batch, [{"$merge": {
             "into": "t", "whenMatched": "keepExisting"}}],

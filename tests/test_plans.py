@@ -276,44 +276,19 @@ def test_no_query_windows_over_single_partition(spark, sf_dir):
     assert not cartesian, f"cartesian-product queries: {cartesian}"
 
 
-def test_pin_list_is_derived_not_hand_maintained():
-    """Round-4 lesson (q59): a hand-maintained changed-plan list misses
-    entries. The pin list must be DERIVED from fingerprints vs the
-    stamped EVIDENCE_FPS.json — and the hand list must be gone."""
-    from airflow_pipelines_from_mongo_to_postgres_spark import plans
+def test_registry_order_is_module_order():
+    """The registry is a plain merge: entries come back in
+    ALL_PLAN_MODULES order, each module's dict in its own order."""
+    from airflow_pipelines_from_mongo_to_postgres_spark.plans import (
+        ALL_PLAN_MODULES,
+        all_oracles,
+        all_queries,
+    )
 
-    assert not hasattr(plans, "_CHANGED_THIS_ROUND")
-    fps = plans.current_fingerprints()
-    import __spark_entry__ as entrymod
-    assert set(fps) == set(entrymod.queries())
-    # editing either the plan source or the oracle changes the fingerprint
-    def f(spark, sf_dir):
-        return None
-    a = plans.fingerprint("x", f, "SELECT 1")
-    b = plans.fingerprint("x", f, "SELECT 2")
-    assert a != b
-    # changed_since_stamped never raises when the stamp file is absent
-    changed = plans.changed_since_stamped()
-    assert isinstance(changed, list)
-
-
-def test_ordered_puts_red_latest_first(monkeypatch):
-    """R13 judge finding: a query whose LATEST driver row is red must
-    outrank every green in the unpinned block, regardless of how old the
-    greens' rounds are — sorting (evidence_round, ok) buried q180's r11
-    red behind 46 r01-greens so the driver's truncated budget never
-    re-confirmed the fix. Contract: (ok, round, index) — never-checked
-    first, then reds oldest-first, then greens least-recently-checked."""
-    from airflow_pipelines_from_mongo_to_postgres_spark import plans
-
-    monkeypatch.setattr(plans, "_evidence_rounds",
-                        lambda: {"q_old_green": (1, True),
-                                 "q_red": (11, False),
-                                 "q_new_green": (13, True)})
-    monkeypatch.setattr(plans, "changed_since_stamped", lambda: [])
-    order = list(plans._ordered({"q_old_green": 1, "q_red": 2,
-                                 "q_new_green": 3, "q_never": 4}))
-    assert order == ["q_never", "q_red", "q_old_green", "q_new_green"]
+    assert list(all_queries()) == [
+        n for m in ALL_PLAN_MODULES for n in m.QUERIES]
+    assert list(all_oracles()) == [
+        n for m in ALL_PLAN_MODULES for n in m.ORACLES]
 
 
 def test_semantic_dedup_assignment_mapside(spark, sf_dir):
@@ -452,35 +427,6 @@ def test_new_text_audits_are_shuffle_free(spark, sf_dir):
     for fn in (q109_repetition_ratio, q110_pii_redaction):
         plan = _formatted_plan(fn(spark, sf_dir))
         assert ") Exchange" not in plan, plan
-
-
-def test_fingerprint_covers_support_modules():
-    """Review finding r5: plan functions are thin wrappers, so the
-    fingerprint must incorporate the transitive source of the engine
-    modules the plan module imports — an operators/ edit re-pins its
-    consumers even when the wrapper's own source is untouched."""
-    from airflow_pipelines_from_mongo_to_postgres_spark import plans
-    from airflow_pipelines_from_mongo_to_postgres_spark.plans import llmdata
-
-    names = {m.__name__.rsplit(".", 1)[-1]
-             for m in plans._support_modules(llmdata)}
-    # direct imports AND transitive ones (dedup imports functions.text)
-    assert {"dedup", "similarity", "text", "catalog"} <= names
-
-    fp_before = plans.fingerprint(
-        "q26", llmdata.q26_ngram_jaccard_pairs, "SELECT 1")
-    key = llmdata.__name__
-    old = plans._SUPPORT_HASH_CACHE.get(key)
-    try:
-        plans._SUPPORT_HASH_CACHE[key] = "poisoned-support-hash"
-        fp_after = plans.fingerprint(
-            "q26", llmdata.q26_ngram_jaccard_pairs, "SELECT 1")
-    finally:
-        if old is None:
-            plans._SUPPORT_HASH_CACHE.pop(key, None)
-        else:
-            plans._SUPPORT_HASH_CACHE[key] = old
-    assert fp_before != fp_after
 
 
 def test_range_join_bucketed_plan_is_hash_join(spark, sf_dir):
@@ -664,71 +610,6 @@ def test_geonear_limit_fuses_to_take_ordered(spark, sf_dir):
 
     assert not re.search(r"\bSort \[[^\]]*\], true", plan), plan
     assert "BatchEvalPython" not in plan and "ArrowEval" not in plan
-
-
-def test_driver_budget_reaches_oldest_evidence(monkeypatch):
-    """r15 (VERDICT r14 task 5): 209 registered queries vs a ~50-row
-    driver budget means full re-coverage takes multiple rounds — the
-    ordering must guarantee the union can never age unboundedly. Two
-    parts:
-
-    1. Contract (synthetic): within the unpinned block, the green
-       query with the OLDEST evidence round leads all other greens,
-       and a pinned block of K entries can displace it by at most K
-       positions — so with P pinned, the oldest-evidence green sits at
-       index <= P (0-based) of all_queries() order.
-    2. Live repo state: compute the real ordering and assert the
-       oldest-evidence query's position < 50 + len(pinned) — i.e. the
-       driver's budget reaches it as soon as the pinned block drains
-       (same round when pins are few, next round after a mass re-pin
-       like a module split)."""
-    from airflow_pipelines_from_mongo_to_postgres_spark import plans
-
-    # -- synthetic contract ------------------------------------------------
-    ev = {f"q{i:03d}": (3 + (i % 12), True) for i in range(200)}
-    ev["q_oldest"] = (1, True)
-    full = {n: n for n in list(ev)}
-    monkeypatch.setattr(plans, "_evidence_rounds", lambda: dict(ev))
-    monkeypatch.setattr(plans, "changed_since_stamped",
-                        lambda: ["q007", "q008", "q009"])
-    order = list(plans._ordered(full))
-    assert order.index("q_oldest") <= 3      # never buried past the pins
-    # with no pins at all, the oldest-evidence green is FIRST
-    monkeypatch.setattr(plans, "changed_since_stamped", lambda: [])
-    assert list(plans._ordered(full))[0] == "q_oldest"
-
-    # -- live repo state ---------------------------------------------------
-    monkeypatch.undo()
-    evidence = plans._evidence_rounds()
-    pinned = set(plans.changed_since_stamped())
-    order = list(plans.all_queries())
-    unpinned_with_rows = [n for n in order
-                          if n in evidence and n not in pinned]
-    if unpinned_with_rows:
-        oldest = min(unpinned_with_rows,
-                     key=lambda n: (evidence[n][1], evidence[n][0]))
-        assert order.index(oldest) < 50 + len(pinned), (
-            f"{oldest} (evidence round {evidence[oldest][0]}) sits at "
-            f"position {order.index(oldest)} with {len(pinned)} pinned "
-            "— the driver's 50-row budget can never re-confirm it")
-
-
-def test_fingerprint_walks_mongoql_subpackage():
-    """r15: sources/mongoql.py split into a subpackage — the evidence
-    fingerprint's support-module closure must reach EVERY submodule
-    through the facade, or an edit to (say) lookup.py would stop
-    re-pinning the mongo queries it backs (the r4 q28-class staleness
-    the mechanism exists to prevent)."""
-    from airflow_pipelines_from_mongo_to_postgres_spark import plans
-    from airflow_pipelines_from_mongo_to_postgres_spark.plans import extras
-
-    mods = {m.__name__ for m in plans._support_modules(extras)}
-    pkg = "airflow_pipelines_from_mongo_to_postgres_spark.sources.mongoql"
-    for sub in ("errors", "expr", "match", "windows", "geo", "lookup",
-                "writes", "stages"):
-        assert f"{pkg}.{sub}" in mods, (
-            f"{sub} missing from the support closure — its edits would "
-            "not re-pin dependent queries")
 
 
 def test_lookup_rank_window_plans_stay_bounded(spark, sf_dir):

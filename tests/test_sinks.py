@@ -369,7 +369,8 @@ def test_snap_apply_cdc_deletes_replaces_and_resurrects(spark, tmp_path):
 
 def test_snap_apply_cdc_deleting_every_row_leaves_readable_table(spark, tmp_path):
     """A CDC batch that deletes every row leaves the table empty but
-    readable with its schema, and a later insert batch lands."""
+    readable with its schema, also after a compaction, and a later
+    insert batch lands."""
     from airflow_pipelines_from_mongo_to_postgres_spark.sources import snapshots as S
 
     t = str(tmp_path / "cdc")
@@ -381,6 +382,10 @@ def test_snap_apply_cdc_deleting_every_row_leaves_readable_table(spark, tmp_path
     assert _cdc_commit(spark, S, t, spark.createDataFrame(
         [("D", "d1", 1, None, 0), ("D", "d2", 3, None, 1),
          ("D", "d1", 5, None, 2)], schema), "k", ts_col="ts") == []
+    empty = S.read_snapshot(spark, t)
+    assert empty.count() == 0
+    assert sorted(empty.columns) == ["dt", "k", "v"]
+    S.snap_compact(spark, t)
     empty = S.read_snapshot(spark, t)
     assert empty.count() == 0
     assert sorted(empty.columns) == ["dt", "k", "v"]

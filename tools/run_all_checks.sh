@@ -7,7 +7,6 @@
 #
 # 1. unit/streaming/property tests   2. tri-scale oracle parity
 # 3. headline bench                  4. BASELINE scaling-row gate (hard)
-# 5. evidence-pin status (informational)
 set -e
 cd "$(dirname "$0")/.."
 
@@ -54,7 +53,4 @@ EOF
 echo "== BASELINE.md scaling rows for gated queries =="
 python tools/check_baseline_rows.py
 
-echo "== evidence pins (changed since last driver stamp) =="
-python tools/stamp_evidence.py --check 2>&1 | tail -1 | head -c 400
-echo ""
 echo "== all checks done =="
