@@ -616,9 +616,8 @@ def cosine_topk_pq(probe: DataFrame, corpus: DataFrame, id_col: str,
     Scale shape: the ADC join is equi on (subvector, cell) against a
     broadcast LUT — the corpus side streams; per (probe, vector) exactly
     M rows reach the shuffle, and only ``rerank`` full vectors per probe
-    are ever touched for exact scoring. At 100 TB the codes table is the
-    only thing scanned per query (M bytes/vector), which is the entire
-    point of PQ.
+    are exactly scored. No codes table is stored: each call encodes the
+    full corpus and the rerank reads it again (ROADMAP direction 9).
 
     Cross-engine exactness (``codebooks`` frozen literals, q106): every
     partial distance uses the same c²−2·q·c form and sequential-fold dot

@@ -3,8 +3,8 @@ computed-value operator — arithmetic, string, array/HOF, date with
 timezone support, $convert family), the ``$$var`` environment
 machinery (``_ref``/``_root_env``), date-format translation, BSON
 type introspection, the type-family bracketing helpers, the
-``$sort``-spec array comparator (``_lookup_sort_cmp``) and the
-``$ref``-rebasing rewriter. Leaf module: depends only on
+``$sort``-spec array comparator (``_lookup_sort_cmp``) and the one
+field-path resolver (``_field``). Leaf module: depends only on
 ``errors``. Split from sources/mongoql.py in r15."""
 
 from __future__ import annotations
@@ -175,9 +175,9 @@ def _week_start_idx(name: Any) -> int:
 
 
 def _ref(v: Any, env: dict | None = None) -> Column:
-    """'$a.b' → column reference; '$$var[.path]' → a bound HOF/$let
-    variable from ``env`` (with struct-field access on the tail);
-    anything else → literal."""
+    """'$a.b' → the field it reads (:func:`_field`); '$$var[.path]' →
+    a bound HOF/$let variable from ``env`` (with struct-field access on
+    the tail); anything else → literal."""
     if isinstance(v, str) and v.startswith("$$"):
         name, _, rest = v[2:].partition(".")
         if name in ("ROOT", "CURRENT") and not (env and name in env):
@@ -193,7 +193,7 @@ def _ref(v: Any, env: dict | None = None) -> Column:
             col = col[part]
         return col
     if isinstance(v, str) and v.startswith("$"):
-        return F.col(v[1:])
+        return _field(v[1:], env)
     return F.lit(v)
 
 
@@ -319,7 +319,7 @@ def _expr(v: Any, env: dict | None = None) -> Column:
                               for k, x in v.items()])
         raise ValueError(
             f"unsupported expression document: {v!r} (operator documents "
-            "have exactly one $-key; document literals have none)")
+            "have exactly one $-key; literals and composite _ids have none)")
     return _ref(v, env)
 
 
@@ -934,12 +934,12 @@ def _expr_op(op: str, arg: Any, env: dict | None = None) -> Column:
     if op == "$getField":
         # static-name subset; bare-string form reads the current doc
         if isinstance(arg, str):
-            return F.col(arg)
+            return _field(arg, env)
         fld = arg["field"]
         if not isinstance(fld, str):
             raise ValueError("$getField needs a literal field name")
         return _expr(arg["input"], env)[fld] if "input" in arg \
-            else F.col(fld)
+            else _field(fld, env)
     if op == "$setField":
         fld = arg["field"]
         if not isinstance(fld, str):
@@ -1408,14 +1408,47 @@ def _lit_family(v: Any) -> str | None:
 
 
 def _field_type(schema, path: str):
+    """The type a dotted field path reads in ``schema``, None when it is
+    missing. Names compare exactly, as Mongo's do. Through an array of
+    documents the path reads every element's field (an array of it);
+    any key of a map reads its values."""
     from pyspark.sql import types as ST
 
     node = schema
     for part in path.split("."):
-        if not isinstance(node, ST.StructType) or part not in node.names:
+        if isinstance(node, ST.MapType):
+            node = node.valueType
+            continue
+        arr = isinstance(node, ST.ArrayType)
+        doc = node.elementType if arr else node
+        if not isinstance(doc, ST.StructType) or part not in doc.names:
             return None
-        node = node[part].dataType
+        node = doc[part].dataType
+        node = ST.ArrayType(node) if arr else node
     return node
+
+
+def _field(path: str, env: dict | None = None) -> Column:
+    """The one field-path resolver: the column ``$path`` reads in the
+    stage document ``env["__doc"] = (schema, base)`` (``base``: a struct
+    column, else the row). A path the schema lacks reads as null."""
+    schema, base = (env or {}).get("__doc", (None, None))
+    if schema is not None and _field_type(schema, path) is None:
+        return F.lit(None)
+    if base is None:
+        return F.col(path)
+    for part in path.split("."):
+        base = base[part]
+    return base
+
+
+def _require_fields(df: DataFrame, paths, where: str) -> None:
+    """A key field the stage uses as a column of its own: refuse a
+    missing one with the declared error, not Spark's unresolved one."""
+    missing = [p for p in paths if _field_type(df.schema, p) is None]
+    if missing:
+        raise ValueError(f"{where} field(s) {missing} missing from the "
+                         "documents at this stage")
 
 
 def _compatible(schema, path: str, v: Any) -> bool | None:
@@ -1447,38 +1480,17 @@ def _root_env(df: DataFrame, extra: dict | None = None) -> dict:
     """Stage-level ``$$ROOT``/``$$CURRENT`` bindings: the whole current
     document as one struct (translator-internal ``__``-prefixed columns
     excluded, so ``$push: "$$ROOT"`` never leaks ``__pos``/``__lk``
-    scratch). At stage start CURRENT is ROOT, Mongo's rule."""
+    scratch). At stage start CURRENT is ROOT, Mongo's rule. ``__doc`` is
+    the input document for the field resolver (:func:`_field`)."""
     cols = [c for c in df.columns if not c.startswith("__")]
     root = F.struct(*[F.col(c).alias(c) for c in cols])
-    env = {**(extra or {}), "ROOT": root, "CURRENT": root}
+    env = {**(extra or {}), "ROOT": root, "CURRENT": root,
+           "__doc": (df.schema, None)}
     if "__vs_score" in df.columns:
         # the $vectorSearch score rides as internal scratch; {$meta:
         # "vectorSearchScore"} is its only user-visible accessor
         env["VS_SCORE"] = F.col("__vs_score")
     return env
-
-
-def _rebase_refs(v: Any, schema, var: str) -> Any:
-    """Rewrite bare ``$path`` field references so an expression written
-    against "the current document" evaluates against an arbitrary
-    struct column instead: ``$a.b`` becomes ``$$var.a.b`` when the path
-    resolves in ``schema``, and a ``{$literal: None}`` when it does not
-    (Mongo's missing-field semantics — the expression sees missing, it
-    does not error). ``$$...`` variables pass through untouched."""
-    from pyspark.sql import types as ST
-
-    if isinstance(v, str) and v.startswith("$") and not v.startswith("$$"):
-        node = schema
-        for part in v[1:].split("."):
-            if not isinstance(node, ST.StructType) or part not in node.names:
-                return {"$literal": None}
-            node = node[part].dataType
-        return f"$${var}." + v[1:]
-    if isinstance(v, dict):
-        return {k: _rebase_refs(x, schema, var) for k, x in v.items()}
-    if isinstance(v, list):
-        return [_rebase_refs(x, schema, var) for x in v]
-    return v
 
 
 def _lookup_sort_cmp(sortspec: dict[str, Any]):

@@ -12,6 +12,9 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from airflow_pipelines_from_mongo_to_postgres_spark.sources.mongoql.expr import (
+    _field_type,
+)
 from airflow_pipelines_from_mongo_to_postgres_spark.sources.mongoql.match import (
     _match_cond,
 )
@@ -53,12 +56,10 @@ def _geo_key_lonlat(df: DataFrame, key: str) -> tuple[Column, Column]:
     legacy point document (field order = lon, lat)."""
     from pyspark.sql import types as ST
 
-    dt: Any = df.schema
-    for part in key.split("."):
-        if not isinstance(dt, ST.StructType) or part not in dt.fieldNames():
-            raise ValueError(
-                f"$geoNear: key {key!r} not found in the document schema")
-        dt = dt[part].dataType
+    dt = _field_type(df.schema, key)
+    if dt is None:
+        raise ValueError(
+            f"$geoNear: key {key!r} not found in the document schema")
     col = F.col(key)
     if isinstance(dt, ST.StructType) and "coordinates" in dt.fieldNames():
         return col["coordinates"][0], col["coordinates"][1]
@@ -138,7 +139,7 @@ def _geo_near(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
     df = df.withColumn(tmp, dist.cast("double")).filter(
         F.col(tmp).isNotNull())
     if "query" in spec:
-        df = df.filter(_match_cond(spec["query"], df.schema))
+        df = df.filter(_match_cond(spec["query"], df))
     if "maxDistance" in spec:
         df = df.filter(F.col(tmp) <= F.lit(float(spec["maxDistance"])))
     if "minDistance" in spec:

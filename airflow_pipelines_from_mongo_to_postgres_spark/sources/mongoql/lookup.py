@@ -13,13 +13,15 @@ from __future__ import annotations
 import math
 from typing import Any
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from airflow_pipelines_from_mongo_to_postgres_spark.sources.mongoql.expr import (
     _GRAN_SERIES,
     _expr,
+    _field,
     _lookup_sort_cmp,
+    _root_env,
 )
 
 
@@ -625,6 +627,7 @@ def _correlated_lookup(df: DataFrame, spec: dict[str, Any],
     let = dict(spec.get("let", {}))
     pipeline = list(spec["pipeline"])
     out = spec["as"]
+    env = _root_env(df)
     if "localField" in spec or "foreignField" in spec:
         # concise correlated form = sugar for a let/$expr equality prefix
         let["__lf"] = "$" + spec["localField"]
@@ -901,11 +904,12 @@ def _correlated_lookup(df: DataFrame, spec: dict[str, Any],
     else:
         lets = list(let)
         lk_of = {v: f"__lk{i}" for i, v in enumerate(lets)}
-        keys_df = (df.select(*[_expr(let[v]).alias(lk_of[v])
+        fenv = {"__doc": (foreign.schema, None)}
+        keys_df = (df.select(*[_expr(let[v], env).alias(lk_of[v])
                                for v in lets]).distinct())
         jcond = None
         for var, ff in pairs:
-            c = F.col(lk_of[var]).eqNullSafe(F.col(ff))
+            c = F.col(lk_of[var]).eqNullSafe(_field(ff, fenv))
             jcond = c if jcond is None else jcond & c
         joined = keys_df.join(foreign, jcond, "inner")
         for st in rest:
@@ -937,7 +941,7 @@ def _correlated_lookup(df: DataFrame, spec: dict[str, Any],
 
     cond = None
     for k, var in zip(lk, join_vars):
-        c = _expr(let[var]).eqNullSafe(F.col(k))
+        c = _expr(let[var], env).eqNullSafe(F.col(k))
         cond = c if cond is None else cond & c
     empty = F.array().cast(packed.schema[out].dataType)
     return (df.drop(out).join(packed, cond, "left").drop(*lk)
@@ -968,15 +972,18 @@ def _graph_lookup(df: DataFrame, spec: dict[str, Any],
         raise ValueError("$graphLookup needs _id on both sides")
     max_depth = spec.get("maxDepth")
     depth_field = spec.get("depthField")
+    fenv = {"__doc": (frm.schema, None)}
     frontier = (df.select(F.col("_id").alias("__root"),
-                          _expr(spec["startWith"]).alias("__key"))
+                          _expr(spec["startWith"], _root_env(df))
+                          .alias("__key"))
                 .filter(F.col("__key").isNotNull()).distinct())
     matched = None
     depth = 0
     while not frontier.isEmpty():
         if max_depth is not None and depth > max_depth:
             break
-        hits = (frontier.join(frm, frontier["__key"] == frm[ct], "inner")
+        hits = (frontier.join(frm, frontier["__key"] == _field(ct, fenv),
+                               "inner")
                 .drop("__key")
                 .withColumn("__depth", F.lit(depth).cast("long")))
         if matched is not None:
@@ -986,7 +993,8 @@ def _graph_lookup(df: DataFrame, spec: dict[str, Any],
         if hits.isEmpty():
             break
         matched = hits if matched is None else matched.unionByName(hits)
-        frontier = (hits.select("__root", F.col(cf).alias("__key"))
+        frontier = (hits.select("__root",
+                                _field(cf, fenv).alias("__key"))
                     .filter(F.col("__key").isNotNull()).distinct())
         depth += 1
     struct_cols = [F.col(c) for c in frm.columns]

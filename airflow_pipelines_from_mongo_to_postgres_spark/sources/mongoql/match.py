@@ -17,7 +17,9 @@ from airflow_pipelines_from_mongo_to_postgres_spark.sources.mongoql.expr import 
     _bson_type_col,
     _compatible,
     _expr,
+    _field,
     _regex_cond,
+    _root_env,
 )
 
 
@@ -149,39 +151,24 @@ def _match_op(col: Column, op: str, val: Any, spec: dict | None = None,
     raise ValueError(f"unsupported $match operator: {op}")
 
 
-def _path_col(schema, field: str) -> Column:
-    """The column a query path reads. Under a known schema, a path whose
-    top-level field the documents lack (an earlier stage dropped it) is
-    missing from every document, so it reads as null: a bare ``F.col``
-    would let Spark resolve the filter below the Project that dropped
-    the field and match against its old values."""
-    if schema is not None and field.split(".")[0].lower() not in {
-            n.lower() for n in schema.names}:
-        return F.lit(None)
-    return F.col(field)
-
-
-def _match_cond(cond: dict[str, Any], schema=None) -> Column:
-    """``schema`` (the input DataFrame's) enables Mongo's type-bracketed
-    matching: an int query against a string field matches NOTHING (and
-    $ne matches everything) instead of crashing on ANSI's runtime
-    string→number cast — found by the pipeline fuzz test."""
+def _match_cond(cond: dict[str, Any], df: DataFrame) -> Column:
+    """``df`` is the stage input. Its schema resolves every query path
+    (:func:`_field`) and enables Mongo's type-bracketed matching: an
+    int query against a string field matches NOTHING (and $ne matches
+    everything) instead of crashing on ANSI's runtime string→number
+    cast — found by the pipeline fuzz test."""
     if not cond:
         return F.lit(True)  # Mongo: {$match: {}} is match-all
+    schema, doc = df.schema, {"__doc": (df.schema, None)}
     parts: list[Column] = []
     for field, spec in cond.items():
         if field == "$expr":
             # aggregation-expression predicate: the only way Mongo
             # compares two FIELDS in a $match — full expression
-            # language, boolean result ($$ROOT bound from the schema)
-            env = None
-            if schema is not None:
-                cols = [n for n in schema.names if not n.startswith("__")]
-                root = F.struct(*[F.col(c).alias(c) for c in cols])
-                env = {"ROOT": root, "CURRENT": root}
-            parts.append(_expr(spec, env).cast("boolean"))
+            # language, boolean result, evaluated in the stage env
+            parts.append(_expr(spec, _root_env(df)).cast("boolean"))
         elif field in ("$and", "$or"):
-            sub = [_match_cond(c, schema) for c in spec] or [F.lit(True)]
+            sub = [_match_cond(c, df) for c in spec] or [F.lit(True)]
             acc = sub[0]
             for c in sub[1:]:
                 acc = (acc & c) if field == "$and" else (acc | c)
@@ -189,13 +176,13 @@ def _match_cond(cond: dict[str, Any], schema=None) -> Column:
         elif field == "$nor":
             # fails-all-clauses, null/missing included (the $not rule)
             for c in spec:
-                parts.append(F.coalesce(~_match_cond(c, schema),
+                parts.append(F.coalesce(~_match_cond(c, df),
                                         F.lit(True)))
         elif field == "$sampleRate":
             # per-document bernoulli sample, Mongo's nondeterminism
             parts.append(F.rand() < F.lit(float(spec)))
         elif isinstance(spec, dict) and any(k.startswith("$") for k in spec):
-            col = _path_col(schema, field)
+            col = _field(field, doc)
             for op, val in spec.items():
                 if op == "$options":
                     if "$regex" not in spec:
@@ -207,7 +194,7 @@ def _match_cond(cond: dict[str, Any], schema=None) -> Column:
             if _compatible(schema, field, spec) is False:
                 parts.append(F.lit(False))
             else:
-                parts.append(_path_col(schema, field) == F.lit(spec))
+                parts.append(_field(field, doc) == F.lit(spec))
     acc = parts[0]
     for c in parts[1:]:
         acc = acc & c

@@ -21,8 +21,10 @@ from airflow_pipelines_from_mongo_to_postgres_spark.sources.mongoql.errors impor
 from airflow_pipelines_from_mongo_to_postgres_spark.sources.mongoql.expr import (
     _GRAN_SERIES,
     _expr,
+    _field,
+    _field_type,
     _lookup_sort_cmp,
-    _rebase_refs,
+    _require_fields,
     _root_env,
 )
 from airflow_pipelines_from_mongo_to_postgres_spark.sources.mongoql.geo import (
@@ -34,7 +36,6 @@ from airflow_pipelines_from_mongo_to_postgres_spark.sources.mongoql.lookup impor
 )
 from airflow_pipelines_from_mongo_to_postgres_spark.sources.mongoql.match import (
     _match_cond,
-    _path_col,
 )
 from airflow_pipelines_from_mongo_to_postgres_spark.sources.mongoql.windows import (
     _fill_one_windowed,
@@ -78,32 +79,25 @@ def _tree_col(node, parent_path: str = "", env: dict | None = None
     if parent_path:
         # Mongo: a null/missing parent document stays null in the output,
         # not a struct of nulls
-        return F.when(F.col(parent_path).isNull(),
+        return F.when(_field(parent_path, env).isNull(),
                       F.lit(None)).otherwise(struct)
     return struct
 
 
 def _path_exists(schema, path: str) -> bool:
-    """Does a (possibly dotted) field path resolve in this schema?
-    A path segment that lands on an ARRAY of documents raises instead of
-    answering: Mongo projects through arrays ({'products.price': 1}
-    keeps products as an array of {price} docs), a shape the struct
-    reconstruction here doesn't build — silently dropping the field
-    would lose data, so the caller must ``$unwind`` first (which is what
-    the reference's own pipelines do, ref loanapplication_table.py:33)."""
+    """Does a (possibly dotted) field path resolve in this schema? An
+    include through an ARRAY raises: Mongo projects through arrays
+    ({'products.price': 1} keeps an array of {price} docs), a shape the
+    struct reconstruction here doesn't build, so ``$unwind`` first (the
+    reference's own pipelines do, ref loanapplication_table.py:33)."""
     from pyspark.sql import types as ST
 
-    node = schema
-    parts = path.split(".")
-    for i, part in enumerate(parts):
-        if isinstance(node, ST.ArrayType) and i > 0:
-            raise ValueError(
-                f"$project include through an array at '{path}' is "
-                "unsupported: $unwind the array first")
-        if not isinstance(node, ST.StructType) or part not in node.names:
-            return False
-        node = node[part].dataType
-    return True
+    if "." in path and isinstance(
+            _field_type(schema, path.rsplit(".", 1)[0]), ST.ArrayType):
+        raise ValueError(
+            f"$project include through an array at '{path}' is "
+            "unsupported: $unwind the array first")
+    return _field_type(schema, path) is not None
 
 
 def _project(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
@@ -150,20 +144,6 @@ def _project(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
             "(use an inclusion projection or flatten first)")
     drop = excludes + ([] if keep_id else ["_id"])
     return df.drop(*[c for c in drop if c in df.columns])
-
-
-def _group_key(gid: Any) -> Column:
-    """``_id`` compiler: an operator doc or field ref evaluates as an
-    expression; a COMPOSITE document ({a: "$x", b: {$op: ...}}, Mongo's
-    multi-field group key — no $-key at the top) becomes a struct whose
-    fields keep the document's names, so ``_id.a`` works downstream
-    exactly as in Mongo."""
-    if isinstance(gid, dict) and not (
-            len(gid) == 1 and next(iter(gid)).startswith("$")):
-        if not gid or any(k.startswith("$") for k in gid):
-            raise ValueError(f"malformed composite _id: {gid!r}")
-        return F.struct(*[_expr(v).alias(k) for k, v in gid.items()])
-    return _expr(gid)
 
 
 def _topn_agg(op: str, agg: dict, env: dict | None = None) -> Column:
@@ -227,7 +207,8 @@ def _topn_agg(op: str, agg: dict, env: dict | None = None) -> Column:
         items = list(sort_by.items())
         out = _expr(agg["output"], env)
         elem = F.struct(
-            *[F.col(f).alias(f"__s{i}") for i, (f, _) in enumerate(items)],
+            *[_field(f, env).alias(f"__s{i}")
+              for i, (f, _) in enumerate(items)],
             out.alias("__o"))
         spec = {f"__s{i}": int(d) for i, (_, d) in enumerate(items)}
         arr = F.array_sort(F.collect_list(elem), _lookup_sort_cmp(spec))
@@ -243,7 +224,7 @@ def _topn_agg(op: str, agg: dict, env: dict | None = None) -> Column:
                 arr, F.greatest(F.lit(1), F.size(arr) - n + 1), F.lit(n))
         return F.transform(sliced, lambda x: x["__o"])
     (sf, sdir), = sort_by.items()
-    key, out = F.col(sf), _expr(agg["output"], env)
+    key, out = _field(sf, env), _expr(agg["output"], env)
     if op in ("$top", "$bottom"):
         # $top = FIRST in sortBy order; $bottom = last. TIE CONTRACT
         # (r15, docstring): elements equal on the single sortBy key
@@ -272,7 +253,6 @@ def _topn_agg(op: str, agg: dict, env: dict | None = None) -> Column:
 
 
 def _group(df: DataFrame, spec: dict[str, Any],
-           env: dict | None = None,
            sort_spec: dict[str, Any] | None = None) -> DataFrame:
     """``$group`` compiler. ``sort_spec`` (r15) is an ABSORBED ``$sort``
     spec ({field: ±1}): when a ``$sort`` immediately precedes the
@@ -286,7 +266,7 @@ def _group(df: DataFrame, spec: dict[str, Any],
     sort order lives inside the aggregation buffers — the lowering
     that makes the idiom legal inside a correlated ``$lookup``, where
     a per-document $sort must never become a global one."""
-    env = env if env is not None else _root_env(df)
+    env = _root_env(df)
     gid = spec["_id"]
     ops = {next(iter(a)) for k, a in spec.items() if k != "_id"}
     order_ops = {"$first", "$last", "$firstN", "$lastN", "$mergeObjects"}
@@ -459,7 +439,10 @@ def _group(df: DataFrame, spec: dict[str, Any],
             raise ValueError(f"unsupported $group accumulator: {op}")
     if gid is None:
         return df.agg(*aggs).select(F.lit(None).alias("_id"), "*")
-    return df.groupBy(_group_key(gid).alias("_id")).agg(*aggs)
+    # a COMPOSITE _id ({a: "$x", b: {$op: ...}}) is a document literal:
+    # a struct whose fields keep the document's names, so ``_id.a``
+    # works downstream exactly as in Mongo
+    return df.groupBy(_expr(gid, env).alias("_id")).agg(*aggs)
 
 
 def _bucket(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
@@ -484,7 +467,7 @@ def _bucket(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
     if len(bounds) < 2 or not all(a < b for a, b in zip(bounds, bounds[1:])):
         raise ValueError(
             "$bucket boundaries must be strictly increasing, length >= 2")
-    gb = _expr(spec["groupBy"])
+    gb = _expr(spec["groupBy"], _root_env(df))
     has_default = "default" in spec
     stringify = has_default and isinstance(spec["default"], str) \
         and not all(isinstance(b, str) for b in bounds)
@@ -523,11 +506,12 @@ def _fill(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
     (strings) keep the whole-collection window + warning."""
     from pyspark.sql import Window
 
+    env = _root_env(df)
     parts: list[Column] = []
     if spec.get("partitionBy") is not None:
-        parts = [_expr(spec["partitionBy"])]
+        parts = [_expr(spec["partitionBy"], env)]
     elif spec.get("partitionByFields"):
-        parts = [F.col(c) for c in spec["partitionByFields"]]
+        parts = [_field(c, env) for c in spec["partitionByFields"]]
     sortby = spec.get("sortBy") or {}
     order = [F.col(k).asc() if d == 1 else F.col(k).desc()
              for k, d in sortby.items()]
@@ -537,9 +521,9 @@ def _fill(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
             raise ValueError(f"$fill nested output path unsupported: {name}")
         if "value" in how:
             # constant-value fills are pure coalesce — no window at all
-            df = df.withColumn(
-                name, F.coalesce(F.col(name), _expr(how["value"]))
-                if name in df.columns else _expr(how["value"]))
+            value = _expr(how["value"], env)
+            df = df.withColumn(name, F.coalesce(F.col(name), value)
+                               if name in df.columns else value)
             continue
         method = how.get("method")
         if not sortby:
@@ -552,6 +536,7 @@ def _fill(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
         methods[name] = method
     if not methods:
         return df
+    _require_fields(df, [*sortby, *methods], "$fill sortBy/output")
     if not parts:
         return _fill_partitionless(df, methods, sortby, order)
     w = Window.partitionBy(*parts).orderBy(*order)
@@ -673,6 +658,7 @@ def _densify(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
     else:
         raise ValueError(f"unsupported $densify unit: {unit!r}")
     explicit = isinstance(bounds, (list, tuple))
+    _require_fields(df, [f, *parts], "$densify")
     ftype = df.schema[f].dataType
     if not parts:
         # partition-less distributed grid (r16) — see docstring
@@ -795,7 +781,7 @@ def _bucket_auto(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
         raise ValueError(
             f"unsupported $bucketAuto granularity {gran!r} (supported: "
             f"{sorted(_GRAN_SERIES) + ['POWERSOF2']})")
-    gb = _expr(spec["groupBy"])
+    gb = _expr(spec["groupBy"], _root_env(df))
     n = int(spec["buckets"])
     if n < 1:
         raise ValueError("$bucketAuto needs buckets >= 1")
@@ -848,9 +834,9 @@ def _redact(df: DataFrame, spec: Any) -> DataFrame:
     no Python, no explode), recursion bounded by schema depth:
 
     - root PRUNE     -> the row filters out;
-    - struct field   -> re-evaluate the expression with refs REBASED to
-      the subdocument (:func:`_rebase_refs`; missing fields read as
-      null, Mongo's rule): PRUNE nulls the field, KEEP passes it
+    - struct field   -> re-evaluate the expression with the subdocument
+      as the field resolver's base (:func:`_field`; missing fields read
+      as null, Mongo's rule): PRUNE nulls the field, KEEP passes it
       through, DESCEND rebuilds it field-by-field recursively;
     - array<struct>  -> per-element decision inside filter()+transform();
     - scalars/arrays-of-scalars under DESCEND are kept (Mongo keeps
@@ -861,13 +847,10 @@ def _redact(df: DataFrame, spec: Any) -> DataFrame:
     same thing in a rectangular schema."""
     from pyspark.sql import types as ST
 
-    env = {k: F.lit(v) for k, v in _REDACT_VARS.items()}
+    env = _root_env(df, {k: F.lit(v) for k, v in _REDACT_VARS.items()})
 
     def decision(base: Column | None, schema) -> Column:
-        if base is None:
-            return _expr(spec, env).cast("string")
-        rebased = _rebase_refs(spec, schema, "__doc")
-        return _expr(rebased, {**env, "__doc": base}).cast("string")
+        return _expr(spec, {**env, "__doc": (schema, base)}).cast("string")
 
     def rebuild(base: Column, dtype: ST.StructType) -> Column:
         """The DESCEND body for one document level: keep scalars,
@@ -1096,7 +1079,8 @@ def _vector_search(df: DataFrame, spec: dict[str, Any],
     q_unit = [float(x) / qnorm for x in qv]
 
     if "filter" in spec:
-        df = df.filter(_match_cond(spec["filter"], df.schema))
+        df = df.filter(_match_cond(spec["filter"], df))
+    _require_fields(df, [path], "$vectorSearch path")
     vec = F.col(path)
     # Atlas indexes only well-formed vectors of the index's dim —
     # null/missing/wrong-width rows are simply absent from the search
@@ -1219,7 +1203,7 @@ def _apply_stages(df: DataFrame, stages: list[dict[str, Any]],
                     "own rule)")
             df = _geo_near(df, spec)
         elif op == "$match":
-            df = df.filter(_match_cond(spec, df.schema))
+            df = df.filter(_match_cond(spec, df))
         elif op == "$project":
             df = _project(df, spec)
         elif op == "$unwind":
@@ -1230,7 +1214,14 @@ def _apply_stages(df: DataFrame, stages: list[dict[str, Any]],
                 preserve = bool(spec.get("preserveNullAndEmptyArrays", False))
                 idx = spec.get("includeArrayIndex")
             fn = F.explode_outer if preserve else F.explode
-            if "." in path:
+            if _field_type(df.schema, path) is None:
+                # missing unwinds as null: no document, or (preserved)
+                # every document unchanged with a null index
+                if not preserve:
+                    df = df.filter(F.lit(False))
+                elif idx:
+                    df = df.withColumn(idx, F.lit(None).cast("long"))
+            elif "." in path:
                 if idx:
                     raise ValueError(
                         "$unwind includeArrayIndex with a nested path "
@@ -1278,8 +1269,8 @@ def _apply_stages(df: DataFrame, stages: list[dict[str, Any]],
                     # NULL (withField semantics) where Mongo creates it.
                     top, restpath = name.split(".", 1)
                     from pyspark.sql import types as ST
-                    if top not in df.columns or not isinstance(
-                            df.schema[top].dataType, ST.StructType):
+                    if not isinstance(_field_type(df.schema, top),
+                                      ST.StructType):
                         raise ValueError(
                             f"$addFields nested path {name!r} needs an "
                             f"existing struct column {top!r}")
@@ -1304,9 +1295,8 @@ def _apply_stages(df: DataFrame, stages: list[dict[str, Any]],
             df = _group(df, spec, sort_spec=(
                 {"__rn": 1} if "__rn" in df.columns else None))
         elif op == "$sort":
-            # a key an earlier stage dropped sorts as missing, not by
-            # the values below the Project (the $match rule)
-            keys = [_path_col(df.schema, k) for k in spec]
+            doc = {"__doc": (df.schema, None)}
+            keys = [_field(k, doc) for k in spec]
             df = df.orderBy(*[c.asc() if d == 1 else c.desc()
                               for c, d in zip(keys, spec.values())])
         elif op == "$limit":
@@ -1346,7 +1336,7 @@ def _apply_stages(df: DataFrame, stages: list[dict[str, Any]],
             # sugar for $group{_id, count:$sum 1} + $sort{count:-1};
             # Mongo leaves count-ties unordered — pinned by _id (the
             # $lookup/$push determinism convention)
-            df = (df.groupBy(_expr(spec).alias("_id"))
+            df = (df.groupBy(_expr(spec, _root_env(df)).alias("_id"))
                   .agg(F.count(F.lit(1)).alias("count"))
                   .orderBy(F.col("count").desc(), F.col("_id")))
         elif op in ("$replaceRoot", "$replaceWith"):
@@ -1421,9 +1411,10 @@ def _apply_stages(df: DataFrame, stages: list[dict[str, Any]],
             foreign = collections[spec["from"]]
             local, ff, out = (spec["localField"], spec["foreignField"],
                               spec["as"])
+            # a missing key reads as null: it matches nothing (below)
+            fkey = _field(ff, {"__doc": (foreign.schema, None)})
             from pyspark.sql import types as ST
-            ltype = (df.schema[local].dataType
-                     if local in df.columns else None)
+            ltype = _field_type(df.schema, local)
             if isinstance(ltype, ST.ArrayType):
                 # Mongo's ARRAY localField matches foreign docs whose
                 # foreignField equals ANY element, each matching doc
@@ -1454,7 +1445,7 @@ def _apply_stages(df: DataFrame, stages: list[dict[str, Any]],
                 pairs = df.select(F.col("_id").alias("__li"),
                                   F.explode(local).alias("__lk"))
                 matched = pairs.join(
-                    foreign, F.col("__lk") == F.col(ff)).drop("__lk")
+                    foreign, F.col("__lk") == fkey).drop("__lk")
                 packs = (matched
                          .groupBy("__li")
                          .agg(F.sort_array(F.collect_set(
@@ -1472,11 +1463,12 @@ def _apply_stages(df: DataFrame, stages: list[dict[str, Any]],
             # sort_array pins the array order (Mongo leaves it
             # unspecified; deterministic beats unspecified for gating).
             packed = (foreign
-                      .groupBy(F.col(ff).alias("__lk"))
+                      .groupBy(fkey.alias("__lk"))
                       .agg(F.sort_array(F.collect_list(
                           F.struct(*foreign.columns))).alias(out)))
             empty = F.array().cast(packed.schema[out].dataType)
-            df = (df.join(packed, F.col(local) == F.col("__lk"), "left")
+            lkey = _field(local, {"__doc": (df.schema, None)})
+            df = (df.join(packed, lkey == F.col("__lk"), "left")
                   .drop("__lk")
                   .withColumn(out, F.coalesce(F.col(out), empty)))
         else:

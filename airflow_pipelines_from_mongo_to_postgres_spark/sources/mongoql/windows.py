@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from airflow_pipelines_from_mongo_to_postgres_spark.sources.mongoql.expr import (
     _expr,
     _field_type,
+    _require_fields,
     _root_env,
 )
 
@@ -1076,6 +1077,7 @@ def _set_window_fields(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
     translator's determinism convention."""
     from pyspark.sql import Window
 
+    _require_fields(df, spec.get("sortBy") or {}, "$setWindowFields sortBy")
     env = _root_env(df)
     part = spec.get("partitionBy")
     if part is None:
@@ -1091,7 +1093,7 @@ def _set_window_fields(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
             return out
         _warn_whole_collection_window(df, "$setWindowFields")
     sortby = spec.get("sortBy") or {}
-    # a COMPOSITE partitionBy doc ({a: "$x", b: "$y"} — _group_key's
+    # a COMPOSITE partitionBy doc ({a: "$x", b: "$y"} — $group's _id
     # convention: no $-operator at the top) partitions by its component
     # expressions as SEPARATE keys, not one struct: identical partition
     # semantics, but hashpartitioning(x, y) instead of
@@ -1403,7 +1405,7 @@ def _set_window_fields(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
         elif op == "$addToSet":
             c = F.sort_array(F.collect_set(_expr(arg, env)))
         elif op in ("$covariancePop", "$covarianceSamp"):
-            a1, a2 = _expr(arg[0]), _expr(arg[1])
+            a1, a2 = _expr(arg[0], env), _expr(arg[1], env)
             c = (F.covar_pop if op == "$covariancePop"
                  else F.covar_samp)(a1, a2)
         elif op in ("$median", "$percentile"):

@@ -9,12 +9,12 @@ from __future__ import annotations
 import math
 from typing import Any
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from airflow_pipelines_from_mongo_to_postgres_spark.sources.mongoql.expr import (
     _expr,
-    _rebase_refs,
+    _require_fields,
 )
 
 
@@ -79,14 +79,15 @@ def _merge_update_pipeline(tgt: DataFrame, matched: DataFrame,
     if let:
         # Mongo's $merge let: variables are expressions over the SOURCE
         # (batch) document, REPLACING the default {new: $$ROOT} — bare
-        # $refs rebase onto the packed __new struct
-        new_schema = packed.schema["__new"].dataType
-        src_env = {"__mn": F.col("__new"), "ROOT": F.col("__new"),
-                   "CURRENT": F.col("__new")}
-        env = {name: _expr(_rebase_refs(e, new_schema, "__mn"), src_env)
-               for name, e in let.items()}
+        # $refs read the packed __new struct
+        new = F.col("__new")
+        src_env = {"ROOT": new, "CURRENT": new,
+                   "__doc": (packed.schema["__new"].dataType, new)}
+        env = {name: _expr(e, src_env) for name, e in let.items()}
     else:
         env = {"new": F.col("__new")}
+    # bare $refs read the existing target document
+    env["__doc"] = (tgt.schema, None)
     for st in stages:
         if not isinstance(st, dict) or len(st) != 1:
             raise ValueError(f"malformed whenMatched pipeline stage: {st!r}")
@@ -424,10 +425,7 @@ def _write_stage(df: DataFrame, op: str, spec: Any, targets) -> DataFrame:
     if wnm not in ("insert", "discard", "fail"):
         raise ValueError(f"unsupported whenNotMatched: {wnm!r}")
     t = _target_spec(targets, name, "$merge")
-    missing = [k for k in keys if k not in df.columns]
-    if missing:
-        raise ValueError(f"$merge 'on' fields {missing} missing from "
-                         "the pipeline output")
+    _require_fields(df, keys, "$merge 'on'")
     # at most one batch row per key, every mode: the merge commit's
     # delete cannot distinguish duplicates, and Mongo's own sequential
     # semantics depend on doc order a distributed batch doesn't have

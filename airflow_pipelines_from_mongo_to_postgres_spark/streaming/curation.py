@@ -31,7 +31,7 @@ from pyspark.sql.types import StructType
 
 from airflow_pipelines_from_mongo_to_postgres_spark.plans.llmdata import curated_fingerprint_agg
 from airflow_pipelines_from_mongo_to_postgres_spark.sources.snapshots import (
-    committed_epoch,
+    _read_raw_manifest,
     current_version,
     read_snapshot,
     snap_append_txn,
@@ -92,10 +92,9 @@ def run_incremental_semantic_dedup(spark: SparkSession, drop_dir: str,
     (``read_snapshot``) through ``operators.similarity.
     incremental_semantic_dedup`` (batch-proportional pair work, same
     frozen quantizer), and only its delta rows are appended, under the
-    same exactly-once epoch mark. A replayed epoch at or under the
-    ledger's mark (``committed_epoch``) returns before reading: its own
-    rows are in the ledger, and the operator's monotone-id guard would
-    reject them as a batch.
+    same exactly-once epoch mark. One head read gives the mark (a replay
+    at or under it returns before reading: the monotone-id guard would
+    reject its own rows) and the version the ledger read is pinned to.
     Stream == batch parity is the test: any file→batch partitioning
     converges to ``semantic_dedup_state`` over the union, because the
     min-id keeper under the monotone-append contract is associative
@@ -110,15 +109,16 @@ def run_incremental_semantic_dedup(spark: SparkSession, drop_dir: str,
 
     def fold(batch: DataFrame, epoch: int) -> None:
         app_id = f"semdedup-{sid}"
-        if committed_epoch(spark, state_dir, app_id) >= epoch:
+        head = _read_raw_manifest(spark, state_dir)
+        if (head.get("txns") or {}).get(app_id, -1) >= epoch:
             return
-        if current_version(spark, state_dir) == 0:
+        if head["version"] == 0:
             delta = semantic_dedup_state(batch, "vec_id", "embedding",
                                          threshold, centroids)
         else:
             delta, _ = incremental_semantic_dedup(
-                read_snapshot(spark, state_dir), batch, "vec_id",
-                "embedding", threshold, centroids)
+                read_snapshot(spark, state_dir, version=head["version"]),
+                batch, "vec_id", "embedding", threshold, centroids)
         snap_append_txn(spark, state_dir, delta, app_id, epoch)
 
     run_incremental_merge(spark, drop_dir, schema, fold, checkpoint_dir,

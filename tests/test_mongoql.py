@@ -466,6 +466,67 @@ def test_match_reads_a_dropped_field_as_missing(spark):
         assert [r.a for r in out.collect()] == [1, 2, 3]
 
 
+_DROPPED_FIELD_CONSUMERS = {
+    "match_expr": {"$match": {"$expr": {"$eq": ["$b", "z"]}}},
+    "match_path": {"$match": {"b": "z"}},
+    "addFields": {"$addFields": {"x": "$b"}},
+    "group_key": {"$group": {"_id": "$b", "n": {"$sum": 1}}},
+    "group_sum": {"$group": {"_id": None, "s": {"$sum": "$c"}}},
+    "unwind": {"$unwind": "$b"},
+    "unwind_preserve": {"$unwind": {"path": "$b", "includeArrayIndex": "i",
+                                    "preserveNullAndEmptyArrays": True}},
+    "project_computed": {"$project": {"y": "$b"}},
+    "sortByCount": {"$sortByCount": "$b"},
+    "replaceRoot": {"$replaceRoot": {"newRoot": {"q": "$b"}}},
+    "bucket": {"$bucket": {"groupBy": "$c", "boundaries": [0, 100],
+                           "default": "other"}},
+    "setWindowFields": {"$setWindowFields": {
+        "partitionBy": "$a", "output": {"s": {"$sum": "$c"}}}},
+    "sort": {"$sort": {"b": 1, "a": -1}},
+    "lookup": {"$lookup": {"from": "o", "localField": "b",
+                           "foreignField": "k", "as": "m"}},
+}
+
+
+@pytest.mark.parametrize("case", sorted(_DROPPED_FIELD_CONSUMERS))
+def test_a_dropped_field_reads_as_an_all_null_column(spark, case):
+    """The missing-field contract: after ``$project``/``$unset`` removed
+    ``b`` and ``c``, every consumer reads them exactly as all-null
+    columns of their types would read (compared on the output's
+    columns). Spark would resolve a Filter below the Project and read
+    the dropped values, and fail to resolve the field anywhere else.
+    ``$unwind`` needs an array, so its all-null stand-in for ``b`` is
+    an array column."""
+    from pyspark.sql import functions as F
+
+    stage = _DROPPED_FIELD_CONSUMERS[case]
+    df = spark.createDataFrame([(1, "z", 10), (2, "a", 20), (3, "m", 30)],
+                               "a int, b string, c int")
+    colls = {"o": spark.createDataFrame([("z", 1), (None, 2)],
+                                        "k string, v int")}
+    btype = "array<string>" if "$unwind" in stage else "string"
+    nulled = (df.withColumn("b", F.lit(None).cast(btype))
+              .withColumn("c", F.lit(None).cast("int")))
+    for drop in ({"$project": {"a": 1}}, {"$unset": ["b", "c"]}):
+        out = apply_pipeline(df, [drop, stage], colls)
+        want = apply_pipeline(nulled, [stage], colls).select(*out.columns)
+        got, exp = out.collect(), want.collect()
+        if case != "sort":
+            got, exp = sorted(got, key=repr), sorted(exp, key=repr)
+        assert got == exp, (drop, got, exp)
+        if case == "match_expr":
+            assert got == []  # Mongo returns no document
+
+
+def test_field_names_are_case_sensitive(spark):
+    """Mongo field names are case-sensitive; Spark's analyzer is not.
+    ``A`` over a column ``a`` is a missing field."""
+    df = spark.createDataFrame([(1, "z"), (2, "a")], "a int, b string")
+    assert apply_pipeline(df, [{"$match": {"A": 1}}]).count() == 0
+    out = apply_pipeline(df, [{"$addFields": {"x": "$A"}}]).collect()
+    assert [r.x for r in out] == [None, None]
+
+
 def test_expression_operators_cond_ifnull_concat_arith(apps):
     """Aggregation expressions in computed values: $cond (both forms),
     $ifNull, $concat (null-if-any-null), n-ary $add/$multiply, binary

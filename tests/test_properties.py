@@ -274,6 +274,21 @@ _mql_stage = st.one_of(
     st.builds(lambda k, op: {"$group": {"_id": f"${k}", "out": {op: "$a"}}},
               st.sampled_from(["b"]),
               st.sampled_from(["$sum", "$min", "$max", "$avg"])),
+    # consumers of fields an earlier stage may have removed ($project,
+    # $unset, $group): each reads such a field as missing. c takes many
+    # types, so they stick to operators that accept any of them.
+    st.builds(lambda k, op, f: {"$group": {"_id": f"${k}",
+                                           "s": {op: f"${f}"}}},
+              st.sampled_from(["b", "c"]), st.sampled_from(["$max", "$push"]),
+              st.sampled_from(["b", "c"])),
+    st.builds(lambda f, src: {"$addFields": {f: src}},
+              st.sampled_from(["d", "e"]), st.sampled_from(["$b", "$c"])),
+    st.builds(lambda f, p: {"$unwind": {"path": f"${f}",
+                                        "preserveNullAndEmptyArrays": p}},
+              st.sampled_from(["b", "c"]), st.booleans()),
+    st.builds(lambda f, s: {"$match": {"$expr": {"$eq": [
+                  {"$toString": f"${f}"}, s]}}},
+              st.sampled_from(["b", "c"]), st.sampled_from(["x", "1"])),
     # round-11 surface: $expr match, array HOFs/$slice/$range/set ops,
     # $regexMatch, $unset, $fill, $densify, $bucketAuto
     st.builds(lambda v: {"$match": {"$expr": {"$gt": ["$a", v]}}},
@@ -444,7 +459,8 @@ def test_mongoql_random_pipelines_never_crash_outside_contract(spark, stages):
     specs, Spark AnalysisException for schema mismatches like
     projecting a column a $group already consumed) — never an untyped
     crash. Stage semantics are covered by the directed tests; this
-    guards the COMPOSITION space."""
+    guards the COMPOSITION space. A field an earlier stage removed reads
+    as missing, so UNRESOLVED_COLUMN is never inside the contract."""
     from pyspark.sql.utils import AnalysisException
 
     from airflow_pipelines_from_mongo_to_postgres_spark.sources.mongoql import apply_pipeline
@@ -454,7 +470,10 @@ def test_mongoql_random_pipelines_never_crash_outside_contract(spark, stages):
         "a int, b string, arr array<int>, nest struct<x:int>")
     try:
         apply_pipeline(df, stages).collect()
-    except (ValueError, AnalysisException):
+    except AnalysisException as e:
+        assert not (e.getErrorClass() or "").startswith(
+            "UNRESOLVED_COLUMN"), (stages, e)
+    except ValueError:
         pass
 
 

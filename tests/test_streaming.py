@@ -596,6 +596,48 @@ def test_streaming_semantic_dedup_matches_batch(spark, tmp_path):
     assert got == want and len(got) == 500
 
 
+def test_semantic_dedup_fold_reads_head_three_times_per_epoch(
+        spark, tmp_path, monkeypatch):
+    """The SemDeDup fold takes its replay mark and ledger version from
+    one head read and pins the ledger read to that version; the
+    exactly-once append reads the head twice more. A 3-epoch stream
+    reads ``_manifests/HEAD`` at most 9 times (15 when the mark, the
+    version and the ledger each read the head)."""
+    from airflow_pipelines_from_mongo_to_postgres_spark.plans._ivf_centroids import (
+        IVF_CENTROIDS,
+    )
+    from airflow_pipelines_from_mongo_to_postgres_spark.sources import snapshots as S
+    from airflow_pipelines_from_mongo_to_postgres_spark.streaming.curation import (
+        run_incremental_semantic_dedup,
+    )
+
+    e = load_table(spark, "embeddings", "/root/testdata/sf0.01") \
+        .select("vec_id", F.col("embedding").cast("array<double>"), "label")
+    drop = tmp_path / "drop"
+    for i, lo in enumerate((0, 100, 200)):
+        out = tmp_path / f"d{i}"
+        e.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < lo + 100)) \
+            .coalesce(1).write.parquet(str(out))
+        drop.mkdir(exist_ok=True)
+        next(out.glob("*.parquet")).rename(drop / f"batch{i}.parquet")
+    heads = []
+    real = S._JvmStore.read_text
+
+    def counting(self, p):
+        if p.endswith("/_manifests/HEAD"):
+            heads.append(p)
+        return real(self, p)
+
+    monkeypatch.setattr(S._JvmStore, "read_text", counting)
+    state = str(tmp_path / "state")
+    run_incremental_semantic_dedup(
+        spark, str(drop), str(tmp_path / "ckpt"), state, threshold=0.42,
+        centroids=IVF_CENTROIDS, max_files_per_trigger=1)
+    monkeypatch.setattr(S._JvmStore, "read_text", real)
+    assert S.current_version(spark, state) == 3   # three epochs committed
+    assert len(heads) <= 9, len(heads)
+
+
 def test_streaming_cdc_apply_matches_batch(spark, tmp_path):
     """Two CDC drops streamed one file per micro-batch through
     run_incremental_cdc == applying the combined ledger in one batch
