@@ -1428,12 +1428,12 @@ def _field_type(schema, path: str):
     return node
 
 
-def _field(path: str, env: dict | None = None) -> Column:
+def _field(path: str, env: dict) -> Column:
     """The one field-path resolver: the column ``$path`` reads in the
     stage document ``env["__doc"] = (schema, base)`` (``base``: a struct
     column, else the row). A path the schema lacks reads as null."""
-    schema, base = (env or {}).get("__doc", (None, None))
-    if schema is not None and _field_type(schema, path) is None:
+    schema, base = env["__doc"]
+    if _field_type(schema, path) is None:
         return F.lit(None)
     if base is None:
         return F.col(path)
@@ -1443,8 +1443,7 @@ def _field(path: str, env: dict | None = None) -> Column:
 
 
 def _require_fields(df: DataFrame, paths, where: str) -> None:
-    """A key field the stage uses as a column of its own: refuse a
-    missing one with the declared error, not Spark's unresolved one."""
+    """Refuse a missing key field with the declared error."""
     missing = [p for p in paths if _field_type(df.schema, p) is None]
     if missing:
         raise ValueError(f"{where} field(s) {missing} missing from the "

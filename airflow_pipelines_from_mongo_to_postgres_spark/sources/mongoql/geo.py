@@ -57,9 +57,10 @@ def _geo_key_lonlat(df: DataFrame, key: str) -> tuple[Column, Column]:
     from pyspark.sql import types as ST
 
     dt = _field_type(df.schema, key)
-    if dt is None:
-        raise ValueError(
-            f"$geoNear: key {key!r} not found in the document schema")
+    if dt is None or "." in key and isinstance(
+            _field_type(df.schema, key.rsplit(".", 1)[0]), ST.ArrayType):
+        raise ValueError(f"$geoNear: key {key!r} not found in the document "
+                         "schema, or read through an array")
     col = F.col(key)
     if isinstance(dt, ST.StructType) and "coordinates" in dt.fieldNames():
         return col["coordinates"][0], col["coordinates"][1]

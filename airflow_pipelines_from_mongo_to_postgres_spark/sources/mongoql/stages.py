@@ -638,14 +638,14 @@ def _densify(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
         raise ValueError(f"$densify spec missing required "
                          f"field(s): {missing}")
     f = spec["field"]
-    if "." in f:
+    parts = list(spec.get("partitionByFields") or [])
+    if any("." in p for p in [f, *parts]):
         raise ValueError("$densify nested field unsupported")
     rng = spec["range"]
     step, unit, bounds = rng["step"], rng.get("unit"), rng["bounds"]
     if not isinstance(step, (int, float)) or isinstance(step, bool) \
             or step <= 0:
         raise ValueError("$densify range.step must be a positive number")
-    parts = list(spec.get("partitionByFields") or [])
     if unit is None:
         step_col = F.lit(step)
     elif unit in _DENSIFY_DT:
@@ -847,7 +847,7 @@ def _redact(df: DataFrame, spec: Any) -> DataFrame:
     same thing in a rectangular schema."""
     from pyspark.sql import types as ST
 
-    env = _root_env(df, {k: F.lit(v) for k, v in _REDACT_VARS.items()})
+    env = {k: F.lit(v) for k, v in _REDACT_VARS.items()}
 
     def decision(base: Column | None, schema) -> Column:
         return _expr(spec, {**env, "__doc": (schema, base)}).cast("string")
@@ -1215,8 +1215,7 @@ def _apply_stages(df: DataFrame, stages: list[dict[str, Any]],
                 idx = spec.get("includeArrayIndex")
             fn = F.explode_outer if preserve else F.explode
             if _field_type(df.schema, path) is None:
-                # missing unwinds as null: no document, or (preserved)
-                # every document unchanged with a null index
+                # missing: no rows, or (preserved) the rows with null index
                 if not preserve:
                     df = df.filter(F.lit(False))
                 elif idx:
@@ -1295,8 +1294,7 @@ def _apply_stages(df: DataFrame, stages: list[dict[str, Any]],
             df = _group(df, spec, sort_spec=(
                 {"__rn": 1} if "__rn" in df.columns else None))
         elif op == "$sort":
-            doc = {"__doc": (df.schema, None)}
-            keys = [_field(k, doc) for k in spec]
+            keys = [_field(k, {"__doc": (df.schema, None)}) for k in spec]
             df = df.orderBy(*[c.asc() if d == 1 else c.desc()
                               for c, d in zip(keys, spec.values())])
         elif op == "$limit":

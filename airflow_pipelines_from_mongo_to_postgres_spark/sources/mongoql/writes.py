@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 
 from airflow_pipelines_from_mongo_to_postgres_spark.sources.mongoql.expr import (
     _expr,
-    _require_fields,
 )
 
 
@@ -425,7 +424,10 @@ def _write_stage(df: DataFrame, op: str, spec: Any, targets) -> DataFrame:
     if wnm not in ("insert", "discard", "fail"):
         raise ValueError(f"unsupported whenNotMatched: {wnm!r}")
     t = _target_spec(targets, name, "$merge")
-    _require_fields(df, keys, "$merge 'on'")
+    missing = [k for k in keys if k not in df.columns]
+    if missing:
+        raise ValueError(f"$merge 'on' fields {missing} missing from "
+                         "the pipeline output")
     # at most one batch row per key, every mode: the merge commit's
     # delete cannot distinguish duplicates, and Mongo's own sequential
     # semantics depend on doc order a distributed batch doesn't have

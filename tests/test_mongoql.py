@@ -1100,6 +1100,12 @@ def test_merge_stage_mode_matrix(spark, tmp_path):
     with pytest.raises(ValueError, match="missing from"):
         apply_pipeline(batch.drop("_id"), [{"$merge": "tm"}],
                        targets={"tm": t})
+    # 'on' keys join as top-level columns: a nested path is refused
+    nested = spark.createDataFrame([(("a",), 1.0)],
+                                   "s struct<b:string>, x double")
+    with pytest.raises(ValueError, match="missing from"):
+        apply_pipeline(nested, [{"$merge": {"into": "tm", "on": "s.b"}}],
+                       targets={"tm": t})
     # the $set update-pipeline form is now a real mode, not a raise —
     # covered by test_merge_when_matched_update_pipeline below
 
@@ -1372,6 +1378,10 @@ def test_densify_stage(spark):
         ("x", 0), ("x", 1), ("x", 2), ("x", 3),
         ("y", 10), ("y", 11), ("y", 12)]
     assert [o for _, n, o in rows if n in (1, 2, 11)] == [None] * 3
+    with pytest.raises(ValueError, match="nested field unsupported"):
+        apply_pipeline(df, [{"$densify": {
+            "field": "n", "partitionByFields": ["p.q"],
+            "range": {"step": 1, "bounds": "partition"}}}])
 
     expl = apply_pipeline(df, [{"$densify": {
         "field": "n", "partitionByFields": ["p"],
@@ -1902,6 +1912,13 @@ def test_redact_stage(spark):
         [Row(_id=1, level=5, meta=Row(note="x"))])
     out2 = apply_pipeline(df2, [{"$redact": expr}])
     assert out2.collect()[0].meta is None
+
+    # $$ROOT/$$CURRENT stay unbound: at a nested level Mongo's CURRENT
+    # is the subdocument, so reading the root there would be wrong
+    for var in ("$$ROOT.level", "$$CURRENT.level"):
+        with pytest.raises(ValueError, match="not bound"):
+            apply_pipeline(df, [{"$redact": {"$cond": [
+                {"$gte": [var, 5]}, "$$DESCEND", "$$PRUNE"]}}])
 
 
 def test_math_tail_and_sample_rate(spark):
@@ -3251,6 +3268,10 @@ def test_geo_near_errors(spark):
         apply_pipeline(df, [{"$geoNear": {**geo, "key": "nope"}}])
     with pytest.raises(ValueError, match="must be a GeoJSON Point"):
         apply_pipeline(df, [{"$geoNear": {**geo, "key": "x"}}])
+    # a key through an array of documents names no single location
+    pts = spark.createDataFrame([Row(_id=1, pts=[Row(lon=1.0, lat=2.0)])])
+    with pytest.raises(ValueError, match="read through an array"):
+        apply_pipeline(pts, [{"$geoNear": {**geo, "key": "pts.lon"}}])
 
 
 def test_correlated_lookup_terminal_skip(spark):
